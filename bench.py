@@ -197,8 +197,10 @@ def cosine_topk_80k(spark):
     sequential IEEE association, so the output — including every double
     cos value — is bit-identical to similarity_topk(quantized=False),
     pinned by tools/probe_cosine_double_ab.py (500/500 rows equal at this
-    exact shape) and tests/test_udfs_and_lsh.py.  The small cosine_topk
-    row above stays on the expression path as the reference rung."""
+    exact shape) and by tests/test_sketches.py::
+    test_cosine_topk_routed_double_bit_identical_to_expression.  The small
+    cosine_topk row above stays on the expression path as the reference
+    rung."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed_double,
     )
@@ -734,8 +736,11 @@ def graph_wire_sink(spark):
     prebuilt sf0.1 graph to an in-process bulk-document server through the
     production stack — HttpJsonTransport (ArangoDB bulk-endpoint shape,
     stdlib urllib, per-executor connections) driven by
-    upsert_graph_via_transport (per-partition 1000-doc batches, bounded
-    retry, vertices-before-edges per OntologyGraphBuilder.java:241-273).
+    upsert_graph_via_transport (1000-doc batches per partition and
+    collection, bounded retry, vertices-before-edges per
+    OntologyGraphBuilder.java:241-273).  The vertices load in one Spark job
+    whatever the number of collections: each partition keeps a batch buffer
+    per collection.
 
     What the number guards: serialization + batching + HTTP round trips.
     An N+1 regression (per-doc POSTs) multiplies n_requests ~1000× and the

@@ -1071,9 +1071,9 @@ def _block_cogroup_scorer_double(k: int):
     ``dot / sqrt(q_norm · t_norm)`` shape, so every cos value is
     bit-identical to ``cosine_join``'s interpreted HOF output — pinned by
     tools/probe_cosine_double_ab.py at the 80k bench shape and by unit
-    test.  NaN caveat (shared with every routed rung): a zero-norm vector
-    yields NaN cos, which numpy's local top-k places last while Spark's
-    window would place first; callers guarantee nonzero vectors."""
+    test.  A zero-norm query or corpus vector raises ``ValueError`` naming
+    its id: its cos is NaN, which numpy's local top-k places last while
+    Spark's window would place first, breaking that bit-identity."""
     import numpy as np
     import pyarrow as pa
 
@@ -1096,6 +1096,12 @@ def _block_cogroup_scorer_double(k: int):
         Q = _pa_list_matrix(qs.column("q_vec"), np)
         t_norm = _seq_fold_norms(T, np)
         q_norm = _seq_fold_norms(Q, np)
+        if (q_norm == 0).any() or (t_norm == 0).any():
+            raise ValueError(
+                "cosine_topk_routed_double: zero-norm vectors have no cosine; "
+                f"q_id={q_ids[q_norm == 0].tolist()} "
+                f"t_id={t_ids[t_norm == 0].tolist()}"
+            )
         dots = _seq_fold_matmul(T, Q, np)
         cos = dots / np.sqrt(q_norm[None, :] * t_norm[:, None])
         q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)

@@ -31,6 +31,39 @@ from pyspark.sql import DataFrame
 Transport = Callable[[str, list[dict]], None]
 
 
+def _load_partitions(df, route, transport, batch_size, max_retries, backoff) -> None:
+    """One ``foreachPartition`` pass over ``df`` with a batch buffer per
+    collection ``route(doc)`` names: a full buffer is sent at once, the
+    rest in sorted collection order at partition end, every send with
+    bounded retry — so batches are per (partition, collection)."""
+    if batch_size < 1:
+        raise ValueError("batch_size must be >= 1")
+
+    def send(collection: str, batch: list[dict]) -> None:
+        for attempt in range(max_retries + 1):
+            try:
+                transport(collection, batch)
+                return
+            except Exception:
+                if attempt == max_retries:
+                    raise
+                if backoff is not None:
+                    backoff(attempt + 1)
+
+    def handle_partition(rows) -> None:
+        buffers: dict[str, list[dict]] = {}
+        for row in rows:
+            doc = row.asDict(recursive=True)
+            coll = route(doc)
+            buffers.setdefault(coll, []).append(doc)
+            if len(buffers[coll]) >= batch_size:
+                send(coll, buffers.pop(coll))
+        for coll in sorted(buffers):
+            send(coll, buffers[coll])
+
+    df.foreachPartition(handle_partition)
+
+
 def upsert_via_transport(
     df: DataFrame,
     collection: str,
@@ -49,33 +82,9 @@ def upsert_via_transport(
     task-level retry re-runs the partition (safe under the idempotent-upsert
     contract).
     """
-    if batch_size < 1:
-        raise ValueError("batch_size must be >= 1")
-
-    def handle_partition(rows) -> None:
-        batch: list[dict] = []
-
-        def flush() -> None:
-            if not batch:
-                return
-            for attempt in range(max_retries + 1):
-                try:
-                    transport(collection, batch)
-                    break
-                except Exception:
-                    if attempt == max_retries:
-                        raise
-                    if backoff is not None:
-                        backoff(attempt + 1)
-            batch.clear()
-
-        for row in rows:
-            batch.append(row.asDict(recursive=True))
-            if len(batch) >= batch_size:
-                flush()
-        flush()
-
-    df.foreachPartition(handle_partition)
+    _load_partitions(
+        df, lambda doc: collection, transport, batch_size, max_retries, backoff
+    )
 
 
 def upsert_graph_via_transport(
@@ -92,14 +101,12 @@ def upsert_graph_via_transport(
     one logical collection per distinct vertex collection value, then the
     edge set as the ``"edges"`` collection.
 
-    The per-collection split filters the vertex frame rather than grouping
-    driver-side; each filter is one narrow scan of the (typically persisted)
-    vertices plan.  Distinct collection values are a tiny driver list by
-    construction (ontology prefixes)."""
-    colls = [
-        r[0]
-        for r in vertices.select(vertex_collection_col).distinct().collect()
-    ]
+    The vertices load in one pass: each partition routes its rows into a
+    buffer per collection value, so the load is one Spark job however many
+    collections there are.  The distinct collection values (a tiny driver
+    list by construction: ontology prefixes) are checked first, so a bad
+    value fails on the driver before any request is sent."""
+    colls = [r[0] for r in vertices.select(vertex_collection_col).distinct().collect()]
     bad = [c for c in colls if c is None or not isinstance(c, str)]
     if bad:
         raise ValueError(
@@ -108,18 +115,9 @@ def upsert_graph_via_transport(
             "before loading (str(None) would silently create a 'None' "
             "collection in the graph service)"
         )
-    for coll in sorted(colls):
-        upsert_via_transport(
-            vertices.filter(vertices[vertex_collection_col] == coll),
-            str(coll),
-            transport,
-            batch_size,
-            max_retries,
-            backoff,
-        )
-    upsert_via_transport(
-        edges, "edges", transport, batch_size, max_retries, backoff
-    )
+    args = (transport, batch_size, max_retries, backoff)
+    _load_partitions(vertices, lambda doc: doc[vertex_collection_col], *args)
+    _load_partitions(edges, lambda doc: "edges", *args)
 
 
 def arango_flatten_transport(

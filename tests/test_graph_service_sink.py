@@ -8,6 +8,7 @@ import glob
 import json
 import os
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,8 +107,67 @@ def test_graph_upsert_rejects_null_collection(spark, tmp_path):
     edges = spark.createDataFrame(
         [], "from_collection string, to_collection string, from_key string, to_key string"
     )
+    # a bare ValueError means the driver raised it (a task failure surfaces
+    # as a Spark PythonException), before the transport saw any request
     with pytest.raises(ValueError, match="non-null strings"):
         upsert_graph_via_transport(vertices, edges, _dir_transport(root), batch_size=10)
+    assert os.listdir(root) == []
+
+
+def _load_jobs(spark, vertices, edges, transport, batch_size):
+    """Run the graph load under a fresh job group; return its Spark job count."""
+    sc = spark.sparkContext
+    group = f"graph-load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graph load job count")
+    try:
+        upsert_graph_via_transport(vertices, edges, transport, batch_size=batch_size)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_graph_upsert_job_count_independent_of_collections(spark, tmp_path):
+    """The vertex load is one pass over the frame, not one job per
+    collection: 2 and 12 collections run the same number of Spark jobs.
+    Batches stay per (partition, collection): every request carries docs
+    of one collection, at most batch_size of them, and the request count
+    is the sum over (partition, collection) of ceil(rows / batch_size)."""
+    edges = spark.createDataFrame(
+        [("C0", "C1", "k0", "k1")],
+        "from_collection string, to_collection string, from_key string, to_key string",
+    )
+    batch_size = 3
+    jobs = {}
+    for n_colls in (2, 12):
+        # rows interleave collections so each of the 3 partitions holds
+        # several collections, some with more than one full batch
+        rows = [(f"C{i % n_colls}", f"k{i}", i) for i in range(7 * n_colls + 5)]
+        vertices = spark.sparkContext.parallelize(rows, 3).toDF(
+            "collection string, key string, v long"
+        )
+        root = str(tmp_path / f"c{n_colls}")
+        os.mkdir(root)
+        jobs[n_colls] = _load_jobs(
+            spark, vertices, edges, _dir_transport(root), batch_size
+        )
+
+        expected_requests = 1  # the one-row edge batch
+        for part in vertices.rdd.glom().collect():
+            per_coll = Counter(r.collection for r in part)
+            expected_requests += sum(-(-n // batch_size) for n in per_coll.values())
+        files = glob.glob(os.path.join(root, "*.jsonl"))
+        assert len(files) == expected_requests
+        vertex_docs = []
+        for path in files:
+            coll = os.path.basename(path).split("__")[0]
+            with open(path) as f:
+                batch = [json.loads(line) for line in f]
+            assert 1 <= len(batch) <= batch_size
+            if coll != "edges":
+                assert {d["collection"] for d in batch} == {coll}
+                vertex_docs.extend(batch)
+        assert sorted((d["collection"], d["key"], d["v"]) for d in vertex_docs) == sorted(rows)
+    assert jobs[2] == jobs[12]
 
 
 def _keyed_store_transport(root: str, fail_marker: str | None = None):

@@ -3,6 +3,7 @@ chunk_text, and mad_outlier_filter — the round-4 third-block additions."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_ontologies_spark.operators.quality import mad_outlier_filter
@@ -326,6 +327,27 @@ def test_cosine_topk_routed_double_bit_identical_to_expression(spark):
             )
         )
         assert c == a, n_blocks
+
+
+@pytest.mark.parametrize("zero_id, side", [(2, "q_id"), (17, "t_id")])
+def test_cosine_topk_routed_double_rejects_zero_norm(spark, zero_id, side):
+    """A zero vector has NaN cosine, which the scorer's numpy top-k and
+    Spark's window order differently, so the routed double rung must fail
+    loudly, naming the vector, instead of silently diverging from
+    similarity_topk(quantized=False).  A zero query (id < 5) is a zero
+    corpus vector too; a zero corpus-only vector (id 17) must still fail."""
+    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        cosine_topk_routed_double,
+    )
+
+    rows = [
+        (i, [0.0, 0.0, 0.0] if i == zero_id else [1.0 + i, -0.5, 0.25 * i])
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+    q = df.filter(F.col("vec_id") < 5)
+    with pytest.raises(Exception, match=rf"zero-norm.*{side}=\[[^]]*\b{zero_id}\b"):
+        cosine_topk_routed_double(q, df, k=3, n_blocks=2).collect()
 
 
 def test_ivf_vectorized_serving_matches_expression_path(spark):
