@@ -602,12 +602,14 @@ def graph_build_full(spark):
     Spark's CacheManager matches the second timed iteration's identical plan
     to the first iteration's cache — without the clear, min-of-2 would time a
     partially cached run, not the full build.  persist_clean=True because a
-    production run lands clean triples once (to storage or cache) rather than
-    recomputing the flatten+dedup subtree per consumer — the A/B is in
-    tools/profile_graph_build.py.  Since the edges DAG stopped consuming the
-    attrs pivot (valid-keys semi-joins, see plans/graph_build.py) the two
-    modes are within noise of each other at sf0.1 (min ~7.3 vs ~7.6 s over
-    5 runs); True is kept as the production posture for ontology corpora."""
+    production run materializes clean triples once rather than recomputing
+    the flatten+dedup subtree per consumer: build_graph checkpoints them
+    eagerly (inside this call, so inside the timed region), and the URI-dim,
+    vertex and edge plans start from that leaf instead of carrying its
+    lineage.  The on/off A/B is in tools/profile_graph_build.py; against a
+    lazy persist of the same frame the checkpoint measured min-of-3 8.5 vs
+    9.7 s at sf0.1 (medians of 6 alternating process pairs, 5 won, local[4]
+    on a 4-vCPU host)."""
     from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS, fixture_ro_terms
     from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 

@@ -61,7 +61,12 @@ def extract_triples(
     this plan references it from ~8 places (namespace derivation, class
     semi-join, bnode flattener, dedup) — parse ONCE, consume many.  In a
     production run the same effect comes from landing raw triples to parquet
-    right after parsing; the persist is the in-session equivalent.
+    right after parsing; the persist is the in-session equivalent.  Both
+    caches (raw parse, root namespaces) are needed only until the returned
+    triples are materialized: ``ontology_graph_from_owl`` releases them as
+    soon as ``build_graph`` has checkpointed its clean triples, and a caller
+    that collects them through ``persisted_out`` should do the same once its
+    own copy of the output is materialized.
     """
     raw = scan_rdf_triples(spark, path, glob)
     if materialize:
@@ -115,7 +120,10 @@ def ontology_graph_from_owl(spark: SparkSession, path: str, test_object: bool = 
     triples = extract_triples(spark, path, test_object, persisted_out=persisted)
     ro_terms = scan_xml_elements(spark, path, glob="ro.owl")
     # ontology corpora fit executor storage by construction (the reference
-    # holds every triple in one JVM heap) — persist the clean triples too
+    # holds every triple in one JVM heap) — materialize the clean triples too
     result = build_graph(triples, ro_terms, persist_clean=True)
-    result.persisted.extend(persisted)
+    # build_graph has checkpointed the clean triples: nothing downstream
+    # reads the raw parse or the namespace dimension again
+    for df in persisted:
+        df.unpersist()
     return result

@@ -56,10 +56,17 @@ class GraphBuildResult:
     persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        """Release the dimension caches (URI dim, vertex set) once every
-        output of this build has been materialized."""
+        """Release the dimension caches (URI dim, vertex set) and the
+        clean-triples checkpoint once every output of this build has been
+        materialized.  Reading an output afterwards recomputes a cache but
+        fails loudly (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) on the checkpoint."""
         for df in self.persisted:
             df.unpersist()
+            # DataFrame.unpersist() leaves local-checkpoint blocks in place:
+            # they belong to the RDD behind the frame's LogicalRDD leaf
+            leaf = df._jdf.queryExecution().analyzed()
+            if leaf.nodeName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
 
 
 def clean_triples(
@@ -270,20 +277,31 @@ def build_graph(
         out of the edges DAG entirely: it runs only when the caller
         materializes ``vertices`` (see build_vertices).
 
-    The triple stream (clean) is NOT persisted by default: when the input is
-    fact-scale it doesn't fit executor storage, and its dedup exchange is
+    The triple stream (clean) is NOT materialized by default: when the input
+    is fact-scale it doesn't fit executor storage, and its dedup exchange is
     reused by AQE within a job where plans coincide.  ``persist_clean=True``
     opts in for ontology-scale corpora (the reference holds ALL triples in a
-    single JVM heap — cluster executor storage is strictly larger), where it
-    saves the flatten-join + dedup recompute in each of the ~4 consumers.
-    Call ``result.unpersist()`` after materializing all outputs.
+    single JVM heap — cluster executor storage is strictly larger): the clean
+    triples are materialized once, by an eager ``localCheckpoint`` run here,
+    which saves the flatten-join + dedup recompute in each of the ~4
+    consumers AND cuts their lineage, so the URI-dim, vertex, edge and sink
+    plans all start from one materialized leaf.  A lazy persist does not cut
+    it: every reference to a cached frame carries that frame's whole plan,
+    and under the caller's own caches (extract_triples' raw parse and root
+    namespaces) the corpus build's executed plans grew to 7-14 MB of text
+    with thousands of joins, re-described by the driver at every execution
+    start and adaptive re-plan (SCALE.md "Global posture").  The trade:
+    local-checkpoint blocks cannot be recomputed if the executor holding
+    them dies — on a multi-node cluster swap in a reliable ``checkpoint()``.
+    Call ``result.unpersist()`` after materializing all outputs; it frees the
+    checkpoint too.
     """
     persisted: list[DataFrame] = []
     # src_file is provenance the graph build never consumes — dropping it
     # keeps the global dedup a pure HashAggregate distinct (see clean_triples)
     clean = clean_triples(triples, keep_src_file=False)
     if persist_clean:
-        clean = clean.persist(StorageLevel.MEMORY_AND_DISK)
+        clean = clean.localCheckpoint(eager=True)
         persisted.append(clean)
     uri_dim = parse_uri_dim(clean, persisted_out=persisted)
     vertices, deprecated, valid_keys = build_vertices(clean, ro_terms, uri_dim)

@@ -21,8 +21,9 @@ def pipeline_two_pass(
     pass2_file: str = "cl.owl",
     pass2_root_ns: str | Column = "http://purl.obolibrary.org/obo/CL",
 ) -> tuple[GraphBuildResult, GraphBuildResult]:
-    # ontology-scale inputs: persist each pass's clean triples (see
-    # build_graph docstring for when this is and isn't appropriate)
+    # ontology-scale inputs: checkpoint each pass's clean triples, so each
+    # pass's graph plans start from a materialized leaf (see the build_graph
+    # docstring for when this is and isn't appropriate)
     pass1 = build_graph(triples, ro_terms, persist_clean=True)
     strict = filter_valid_triple(
         triples.filter(F.col("src_file") == pass2_file), pass2_root_ns, test_object=True

@@ -116,6 +116,36 @@ def test_owl_graph_end_to_end(spark, owl_dir):
     assert {r["term"] for r in g.deprecated.collect()} == {"CL_0000999"}
 
 
+def test_owl_graph_plans_stay_small(spark, owl_dir):
+    """build_graph checkpoints the clean triples, so the vertex and edge
+    plans start from one materialized leaf instead of nesting the raw-parse,
+    root-namespace and clean-triples caches (12 MB / 3,594 MapInPandas for
+    vertices and 24 MB / 7,030 for edges with nested persists)."""
+    g = ontology_graph_from_owl(spark, owl_dir)
+    for df in (g.vertices, g.edges):
+        df.collect()  # finalize the adaptive plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(plan) < 1 << 20
+        assert plan.count("MapInPandas") <= 20
+    g.unpersist()
+
+
+def test_owl_graph_unpersist_releases_storage(spark, owl_dir):
+    """unpersist() frees every block the build holds, the clean-triples
+    checkpoint included (DataFrame.unpersist() alone leaves it cached)."""
+
+    def cached_rdds():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    g = ontology_graph_from_owl(spark, owl_dir)
+    g.vertices.collect()
+    g.edges.collect()
+    assert cached_rdds() - before
+    g.unpersist()
+    assert cached_rdds() - before == set()
+
+
 def test_strict_pass_object_filter(spark, owl_dir):
     clean = extract_triples(spark, owl_dir, test_object=True)
     # strict: named objects outside the root namespace are dropped
