@@ -4,40 +4,42 @@ Composes the binaryFile/mapInPandas scans with the reference's filter chain:
 root-namespace resolution, class filter, predicate whitelist, restriction
 flattening, validity filter, global dedup — all declarative DataFrame ops
 (SURVEY.md §3).
+
+Like the reference's OntologyTripleParser, which parses each file once and
+hands the graph builder a finished triple list, ``extract_triples`` parses
+when it is called: the raw parse and the per-file root namespaces are
+materialized with eager local checkpoints, and the returned clean-triples
+plan starts from those two leaves.  Callers free them with
+``plans.graph_build.release`` once their own copy of the output exists.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..constants import IAO_ROOT_TERM, KIND_IRI
+from ..operators.aggregates import agg_first_fallback_rootns
 from ..operators.filters import filter_skip_file
-from ..plans.graph_build import clean_triples
 from ..sources.owl import OWL_NS, RDF_NS, scan_rdf_triples, scan_xml_elements
-from .graph_build import GraphBuildResult, build_graph
+from .graph_build import GraphBuildResult, build_graph, clean_triples, release
 
 RDF_TYPE = RDF_NS + "type"
 OWL_CLASS = OWL_NS + "Class"
 
 
+def _is_class_decl() -> Column:
+    return (F.col("predicate") == RDF_TYPE) & (F.col("object_iri") == OWL_CLASS)
+
+
 def derive_root_ns(raw: DataFrame) -> DataFrame:
-    """Per-file root namespace: the IAO_0000700 root term split at '_', else
-    the (deterministically min) class URI split at '_'.
-    Ref: OntologyTripleParser.java:130-150 (document-order 'first class'
-    replaced by min for reproducibility, SURVEY.md §2.4)."""
-    iao = raw.filter(F.col("predicate") == IAO_ROOT_TERM).groupBy("src_file").agg(
-        F.min(F.split(F.col("object_iri"), "_").getItem(0)).alias("declared_ns")
+    """Per-file root namespace of raw triples: ``agg_first_fallback_rootns``
+    over the ``rdf:type owl:Class`` statements and the IAO_0000700 root-term
+    statements.  Ref: OntologyTripleParser.java:130-150."""
+    iao = raw.filter(F.col("predicate") == IAO_ROOT_TERM).withColumnRenamed(
+        "object_iri", "root_uri"
     )
-    classes = (
-        raw.filter((F.col("predicate") == RDF_TYPE) & (F.col("object_iri") == OWL_CLASS))
-        .groupBy("src_file")
-        .agg(F.min(F.split(F.col("subject"), "_").getItem(0)).alias("fallback_ns"))
-    )
-    return classes.join(iao, "src_file", "left").select(
-        "src_file", F.coalesce("declared_ns", "fallback_ns").alias("root_ns")
-    )
+    return agg_first_fallback_rootns(raw.filter(_is_class_decl()), iao)
 
 
 def extract_triples(
@@ -56,38 +58,40 @@ def extract_triples(
     global dedup (clean_triples) → validity filter (strict object check when
     test_object).  Ref: OntologyTripleParser.java:62-121,159-171.
 
-    ``materialize=True`` persists the raw parsed triples: the Arrow-batched
-    Python RDF parse is the most expensive narrow stage in the pipeline and
-    this plan references it from ~8 places (namespace derivation, class
-    semi-join, bnode flattener, dedup) — parse ONCE, consume many.  In a
-    production run the same effect comes from landing raw triples to parquet
-    right after parsing; the persist is the in-session equivalent.  Both
-    caches (raw parse, root namespaces) are needed only until the returned
-    triples are materialized: ``ontology_graph_from_owl`` releases them as
-    soon as ``build_graph`` has checkpointed its clean triples, and a caller
-    that collects them through ``persisted_out`` should do the same once its
-    own copy of the output is materialized.
+    ``materialize=True`` (the default) parses here, at call time: the raw
+    parsed triples and then the per-file root namespaces are materialized
+    with eager ``localCheckpoint``s.  The Arrow-batched Python RDF parse is
+    the most expensive narrow stage in the pipeline and this plan references
+    it from ~8 places (namespace derivation, class semi-join, bnode
+    flattener, dedup) — parse ONCE, consume many; the one-row-per-file
+    namespace frame feeds three of them.  A lazy persist would compute each
+    once too, but every plan reading a cached frame re-plans that frame's
+    whole subtree, while a checkpoint leaves a plain materialized leaf.  In
+    a production run the same effect comes from landing raw triples to
+    parquet right after parsing.  The trade is the one SCALE.md "Global
+    posture" records: a lost executor loses its checkpoint blocks.
+
+    Both checkpoints are appended to ``persisted_out`` and are needed only
+    until the returned triples are materialized.  Free them with
+    ``plans.graph_build.release`` (``DataFrame.unpersist()`` does not free
+    checkpoint blocks): ``ontology_graph_from_owl`` does so as soon as
+    ``build_graph`` has checkpointed its clean triples, and a caller that
+    collects them should do the same once its own copy of the output is
+    materialized.  ``materialize=False`` leaves the whole chain lazy.
     """
     raw = scan_rdf_triples(spark, path, glob)
     if materialize:
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+        raw = raw.localCheckpoint(eager=True)
         if persisted_out is not None:
             persisted_out.append(raw)
     raw = filter_skip_file(raw)
     root_ns = derive_root_ns(raw)
     if materialize:
-        # per-file namespace dimension (one row per file): referenced by the
-        # class filter, the bnode flattener feed, and the final validity
-        # filter — persist so its two aggregations run once, not three times
-        root_ns = root_ns.persist(StorageLevel.MEMORY_AND_DISK)
+        root_ns = root_ns.localCheckpoint(eager=True)
         if persisted_out is not None:
             persisted_out.append(root_ns)
 
-    classes = (
-        raw.filter((F.col("predicate") == RDF_TYPE) & (F.col("object_iri") == OWL_CLASS))
-        .select("src_file", "subject")
-        .distinct()
-    )
+    classes = raw.filter(_is_class_decl()).select("src_file", "subject").distinct()
     class_stmts = raw.join(classes, on=["src_file", "subject"], how="left_semi")
     class_stmts = class_stmts.join(root_ns, "src_file").filter(
         F.col("subject").startswith(F.col("root_ns"))
@@ -125,5 +129,5 @@ def ontology_graph_from_owl(spark: SparkSession, path: str, test_object: bool = 
     # build_graph has checkpointed the clean triples: nothing downstream
     # reads the raw parse or the namespace dimension again
     for df in persisted:
-        df.unpersist()
+        release(df)
     return result

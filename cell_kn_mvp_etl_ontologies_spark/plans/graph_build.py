@@ -61,12 +61,18 @@ class GraphBuildResult:
         materialized.  Reading an output afterwards recomputes a cache but
         fails loudly (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) on the checkpoint."""
         for df in self.persisted:
-            df.unpersist()
-            # DataFrame.unpersist() leaves local-checkpoint blocks in place:
-            # they belong to the RDD behind the frame's LogicalRDD leaf
-            leaf = df._jdf.queryExecution().analyzed()
-            if leaf.nodeName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
+            release(df)
+
+
+def release(df: DataFrame) -> None:
+    """Free the storage a frame holds, whether it was persisted or
+    local-checkpointed.  ``DataFrame.unpersist()`` leaves local-checkpoint
+    blocks in place: they belong to the RDD behind the frame's LogicalRDD
+    leaf, which is unpersisted here too."""
+    df.unpersist()
+    leaf = df._jdf.queryExecution().analyzed()
+    if leaf.nodeName() == "LogicalRDD":
+        leaf.rdd().unpersist(False)
 
 
 def clean_triples(
@@ -287,14 +293,16 @@ def build_graph(
     consumers AND cuts their lineage, so the URI-dim, vertex, edge and sink
     plans all start from one materialized leaf.  A lazy persist does not cut
     it: every reference to a cached frame carries that frame's whole plan,
-    and under the caller's own caches (extract_triples' raw parse and root
-    namespaces) the corpus build's executed plans grew to 7-14 MB of text
-    with thousands of joins, re-described by the driver at every execution
-    start and adaptive re-plan (SCALE.md "Global posture").  The trade:
+    and over nested caches (raw parse → root namespaces → clean triples)
+    the corpus build's executed plans grew to 7-14 MB of text with
+    thousands of joins, re-described by the driver at every execution start
+    and adaptive re-plan (SCALE.md "Global posture").  ``extract_triples``
+    checkpoints the raw parse and root namespaces for the same reason, so
+    the checkpoint job here also plans from materialized leaves.  The trade:
     local-checkpoint blocks cannot be recomputed if the executor holding
     them dies — on a multi-node cluster swap in a reliable ``checkpoint()``.
     Call ``result.unpersist()`` after materializing all outputs; it frees the
-    checkpoint too.
+    checkpoint too (see ``release``).
     """
     persisted: list[DataFrame] = []
     # src_file is provenance the graph build never consumes — dropping it

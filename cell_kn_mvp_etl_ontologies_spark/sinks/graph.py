@@ -16,6 +16,9 @@ incremental path.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import read_state_parquet, replace_parquet_dir
@@ -38,12 +41,31 @@ def write_graph(
     graph: str,
     mode: str = "overwrite",
 ) -> None:
-    vertices.write.mode(mode).partitionBy("collection").parquet(
-        _vertices_path(root, database, graph)
-    )
-    edges.write.mode(mode).partitionBy("from_collection", "to_collection").parquet(
-        _edges_path(root, database, graph)
-    )
+    """Land a graph's vertices and edges under ``{root}/{database}/{graph}``.
+
+    The two writes are independent jobs whose final stages run only a few
+    tasks each, so they run concurrently: the edge write on a second thread,
+    the vertex write on the calling thread, both sharing the session's
+    executors.  The second thread is wrapped with
+    ``inheritable_thread_target``, so the caller's local properties (job
+    group, description, scheduler pool) and the session's job tags carry
+    over: cancelling the caller's job group cancels both writes.  The call
+    returns once both writes are done; if either fails it raises on the
+    calling thread, the vertex write's error first.
+    """
+
+    def write_edges() -> None:
+        edges.write.mode(mode).partitionBy("from_collection", "to_collection").parquet(
+            _edges_path(root, database, graph)
+        )
+
+    # leaving the pool joins the edge thread, also when the vertex write raises
+    with ThreadPoolExecutor(max_workers=1, thread_name_prefix="write_graph") as pool:
+        edges_written = pool.submit(inheritable_thread_target(edges.sparkSession)(write_edges))
+        vertices.write.mode(mode).partitionBy("collection").parquet(
+            _vertices_path(root, database, graph)
+        )
+        edges_written.result()
 
 
 def read_graph_vertices(spark: SparkSession, root: str, database: str, graph: str) -> DataFrame:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,6 +43,41 @@ def test_graph_sink_roundtrip(spark, graph, tmp_path):
     # partition pruning: reading one collection touches only its directory
     assert back.filter(F.col("collection") == "GO").count() == 1
     assert os.path.isdir(f"{root}/Cell-KN-Ontologies/KN-Ontologies-v2.0/vertices/collection=CL")
+
+
+def test_write_graph_concurrent_writes_keep_job_group(spark, graph, tmp_path):
+    """write_graph lands edges on a second thread: its jobs stay in the
+    caller's job group, both directories land, an edge failure is raised
+    to the caller, and no thread outlives the call."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    root = str(tmp_path / "store")
+    threads = threading.active_count()
+    before = job_ids()
+    sc.setJobGroup("wg", "write_graph concurrency")
+    try:
+        write_graph(graph.vertices, graph.edges, root, "db", "g")
+        started = job_ids() - before
+        assert started
+        assert started <= set(sc.statusTracker().getJobIdsForGroup("wg"))
+        assert os.path.exists(f"{root}/db/g/vertices/_SUCCESS")
+        assert os.path.exists(f"{root}/db/g/edges/_SUCCESS")
+        assert threading.active_count() == threads
+
+        bad = graph.edges.withColumn(
+            "from_key", F.coalesce(F.raise_error(F.lit("edge boom")).cast("string"), "from_key")
+        )
+        with pytest.raises(Exception, match="edge boom"):
+            write_graph(graph.vertices, bad, str(tmp_path / "bad"), "db", "g")
+        assert threading.active_count() == threads
+    finally:
+        jsc.clearJobGroup()
 
 
 def test_upsert_parquet(spark, tmp_path):

@@ -11,6 +11,7 @@ from cell_kn_mvp_etl_ontologies_spark.plans.extract import (
     extract_triples,
     ontology_graph_from_owl,
 )
+from cell_kn_mvp_etl_ontologies_spark.plans.graph_build import release
 from cell_kn_mvp_etl_ontologies_spark.sources.owl import (
     scan_ontology_meta,
     scan_rdf_triples,
@@ -98,6 +99,20 @@ def test_extract_triples_golden(spark, owl_dir):
     assert clean.filter(F.col("src_file") == "ro.owl").count() == 0
     # BFO class outside root namespace excluded
     assert clean.filter(F.col("subject").contains("BFO")).count() == 0
+
+
+def test_extract_hands_off_checkpoints(spark, owl_dir):
+    """extract_triples materializes the raw parse and the root namespaces
+    with eager local checkpoints: the returned plan reads two plain leaves,
+    not cached subplans that every later plan would re-plan."""
+    persisted = []
+    clean = extract_triples(spark, owl_dir, persisted_out=persisted)
+    plan = clean._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    assert len(persisted) == 2
+    for df in persisted:
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+        release(df)
 
 
 def test_owl_graph_end_to_end(spark, owl_dir):
