@@ -89,7 +89,7 @@ _PRIORITY = [
     # here per the standing rotation mechanics; the full 50-row record
     # remains below, deduped by _ordered).
     "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "source_owl_datasource", "stream_cdc_apply", "stream_dedup_watermark",
+    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
     "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
     "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
     "agg_cube", "agg_distinct_exact_twin", "agg_grouping_sets", "agg_pivot_wide",
@@ -161,7 +161,7 @@ _PRIORITY = [
     "multimodal_feature_extract", "pack_sequences_greedy", "pipeline_incremental_graph", "pipeline_two_pass",
     "quality_expectations", "scan_xml_elements", "setop_intersect_except", "similarity_ann_lsh",
     "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "source_owl_datasource", "stream_cdc_apply", "stream_dedup_watermark",
+    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
     "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
     "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
     # ================= end ROUND 13 PREFIX =================
@@ -174,7 +174,7 @@ _PRIORITY = [
     # standing rotation mechanics) and displace from its tail for new
     # r14 contracts.
     "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "source_owl_datasource", "stream_cdc_apply", "stream_dedup_watermark",
+    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
     "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
     "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
     "agg_cube", "agg_distinct_exact_twin", "agg_grouping_sets", "agg_pivot_wide",
@@ -589,7 +589,7 @@ _PRIORITY = [
     "sort_by_key", "dedup_embedding_cosine", "project_triple_nodes",
     # -- (c) r3 backlog: parser blast radius first --
     "extract_triples_owl", "graph_build_vertices", "graph_build_edges",
-    "join_flatten_restriction", "scan_xml_elements", "source_owl_datasource",
+    "join_flatten_restriction", "scan_xml_elements",
     "pipeline_two_pass", "sink_graph_upsert", "sink_side_output_deprecated",
     "source_http_versioned",
     # -- (c) r3 backlog, alphabetical fill --

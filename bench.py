@@ -196,7 +196,8 @@ def cosine_topk_80k(spark):
     per-pair interpreted HOF fold.  The scorer replays the fold's
     sequential IEEE association, so the output — including every double
     cos value — is bit-identical to similarity_topk(quantized=False),
-    pinned by tools/probe_cosine_double_ab.py (500/500 rows equal at this
+    pinned by ``git show 3609c14:tools/probe_cosine_double_ab.py`` (500/500
+    rows equal at this
     exact shape) and by tests/test_sketches.py::
     test_cosine_topk_routed_double_bit_identical_to_expression.  The small
     cosine_topk row above stays on the expression path as the reference
@@ -402,7 +403,8 @@ def maxsim_routed_10k(spark):
     (similarity_maxsim_routed_vec, shared oracle constant).
 
     Round 8 (VERDICT r7 #5) measured the trained-cells A/B AT THIS EXACT
-    CORPUS/SHAPE (tools/probe_maxsim_trained_recall.py, SCALE.md
+    CORPUS/SHAPE (``git show 3609c14:tools/probe_maxsim_trained_recall.py``,
+    SCALE.md
     §maxsim-trained-serving): trained routing buys recall only at low
     probe fractions (nprobe=1: 0.442→0.500; nprobe=4: 0.542→0.610) and
     is a WASH at this row's nprobe=8 (hash 0.680 vs trained 0.674) while
@@ -810,7 +812,7 @@ def cdc_chunks_5k(spark):
     # Round 14: cset feeds three consumers (census + both sides of the
     # pair join); without a materialization boundary the Arrow chunking
     # pass ran FOUR times per iteration (4 MapInPandas nodes in
-    # plans/r14/cdc_chunks_5k_before.txt).  An eager localCheckpoint runs
+    # ``git show 3609c14:plans/r14/cdc_chunks_5k_before.txt``).  An eager localCheckpoint runs
     # it once per timed iteration — per-call, so min-of-3 still pays the
     # full chunking cost every iteration (no cross-iteration cache
     # match).  Interleaved A/B min-of-4: 6.82 s -> 5.77 s, identical 809

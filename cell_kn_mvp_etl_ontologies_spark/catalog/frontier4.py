@@ -697,7 +697,8 @@ def multimodal_cdc_chunks_q(spark, sf_dir):
     # Round 14: cset feeds three consumers (census, both sides of the
     # pair join) — an eager localCheckpoint materializes the chunk pass
     # once instead of re-running it per consumer (4 corpus scans -> 1;
-    # plan evidence in plans/r14/cdc_chunks_5k_{before,after}.txt).
+    # plan evidence in ``git show 3609c14:plans/r14/cdc_chunks_5k_before.txt``
+    # and ``..._after.txt``).
     cset = cdc_chunk_hashes(corpus, "doc_id", "text").localCheckpoint()
     nc = cset.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     x = cset.select(F.col("doc_id").alias("a"), "ch")

@@ -401,30 +401,6 @@ def scan_rdf_triples_split_q(spark, sf_dir):
 
 
 @register(
-    "source_owl_datasource",
-    oracle="""
-    SELECT * FROM (VALUES
-      ('macrophage.owl', 'iri', 20), ('macrophage.owl', 'bnode', 3), ('macrophage.owl', 'literal', 15),
-      ('ro.owl', 'iri', 6), ('ro.owl', 'literal', 4),
-      ('version-info-test.owl', 'iri', 2), ('version-info-test.owl', 'literal', 1),
-      ('no-version-test.owl', 'iri', 1),
-      ('no-IAO_0000700-test.owl', 'iri', 2), ('no-IAO_0000700-test.owl', 'literal', 1)
-    ) AS t(src_file, object_kind, n)
-    """,
-)
-def source_owl_datasource_q(spark, sf_dir):
-    """The same triple extraction through the formal Spark 4 Python
-    DataSource API (`spark.read.format("owl")`): one InputPartition per
-    file, no Arrow round-trip of raw bytes.  Must agree exactly with
-    scan_rdf_triples (shared parser)."""
-    from ..sources.owl_datasource import register_owl_source
-
-    register_owl_source(spark)
-    raw = spark.read.format("owl").load(_fixture_owl_dir())
-    return raw.groupBy("src_file", "object_kind").agg(F.count(F.lit(1)).cast("int").alias("n"))
-
-
-@register(
     "extract_triples_owl",
     oracle="""
     SELECT * FROM (VALUES ('iri', 7), ('literal', 14)) AS t(object_kind, n)

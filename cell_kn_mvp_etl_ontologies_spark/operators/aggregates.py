@@ -47,7 +47,7 @@ def agg_pivot_vertex_attrs(literal_triples: DataFrame) -> DataFrame:
     replaced by sorted-set policy per SURVEY.md §2.4).
     """
     # TWO-LEVEL aggregation (round 11, VERDICT r10 #3's measured A/B —
-    # tools/probe_pivot_ab.py): per-(id,number,attr) sorted value set, then
+    # ``git show 3609c14:tools/probe_pivot_ab.py``): per-(id,number,attr) sorted value set, then
     # per-vertex MAP assembly from the compact (attr, values) rows.  This
     # replaced the original one-ObjectHashAggregate form (collect the full
     # (attr, value) pair multiset per vertex, regroup with an

@@ -275,7 +275,8 @@ def cdc_chunk_hashes_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFra
                 # ord() per character (UTF-32 code units ARE codepoints) but
                 # C-speed instead of one interpreter iteration per char —
                 # the chunk pass's dominant cost at the 5k-doc bench shape
-                # (round-14 interleaved A/B in tools/probe_cdc_codes_ab.py)
+                # (round-14 interleaved A/B in
+                # ``git show 3609c14:tools/probe_cdc_codes_ab.py``)
                 codes = np.frombuffer(
                     text.encode("utf-32-le"), dtype="<u4"
                 ).astype(np.int64)

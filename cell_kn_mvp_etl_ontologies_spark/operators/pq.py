@@ -349,7 +349,8 @@ def hamming_words(qw: Column, tw: Column) -> Column:
     """Hamming distance between two equal-width packed-sign word arrays:
     sum of bit_count(xor) per word.  The round-14 optimization round A/B'd
     a size-guarded unrolled variant here and REVERTED it — interleaved
-    same-session probe (tools/probe_r14_regress_ab.py) measured the bench
+    same-session probe (``git show 3609c14:tools/probe_r14_regress_ab.py``)
+    measured the bench
     row ann_hamming_80k at 1.61 s (HOF fold) vs 5.75 s (guarded unroll):
     the unroll multiplies references to the packed-word columns, whose
     producing expressions the planner then duplicates per reference."""

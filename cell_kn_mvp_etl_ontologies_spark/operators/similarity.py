@@ -27,7 +27,7 @@ from .windows import window_rank_topk
 # itself a derived expression — exactly the serving paths, where
 # ``quantize_vec`` output feeds ``_dot_long`` through CollapseProject —
 # the planner duplicates that subtree per reference.  Interleaved same-
-# session A/B at the bench rows (tools/probe_r14_regress_ab.py):
+# session A/B at the bench rows (``git show 3609c14:tools/probe_r14_regress_ab.py``):
 # ann_ivf_80k 1.59 s (HOF) vs 6.38 s (unroll), ann_hamming_80k 1.61 vs
 # 5.75, cosine_topk_80k a wash.  The HOF fold stays: one reference per
 # input array, specialized evaluation loop.
@@ -756,7 +756,7 @@ def ivf_topk_prebuilt_routed(
       2. queries are quantized ONCE via the expression path
          (``quantize_vec`` — so there is exactly one rounding mode in play)
          and joined to their probed cells: (cell, q_id, q_vec, q_norm);
-      3. a cogrouped ``applyInPandas`` on cell brings each cell's index
+      3. a cogrouped ``applyInArrow`` on cell brings each cell's index
          members and its probing queries together on the EXECUTOR — one
          int64 matmul per cell, local top-k per query under the final total
          order (cos DESC, t_id ASC);
@@ -859,8 +859,8 @@ def _pa_list_matrix(col, np):
     single contiguous array, so ``flatten().to_numpy()`` + a reshape
     replaces the pandas path's per-row object boxing (one numpy array
     allocated per row) and the O(n) ``np.stack`` gather.  Dtype follows
-    the Arrow value type.  Rejects nulls and ragged widths loudly (the
-    pandas twin's ``np.stack`` would have raised on both)."""
+    the Arrow value type.  Rejects nulls and ragged widths loudly (as a
+    per-row ``np.stack`` would)."""
     arr = col.combine_chunks()
     if arr.null_count:
         raise ValueError("NULL vector in cogroup scorer input")
@@ -874,16 +874,18 @@ def _pa_list_matrix(col, np):
 
 
 def _block_cogroup_scorer_arrow(k: int):
-    """Arrow-native twin of ``_block_cogroup_scorer`` (the round-14 §4.2
-    boundary fix): the cogrouped scorer receives ``pyarrow.Table`` pairs
-    directly (``applyInArrow``), so the vector columns cross the boundary
-    as flat int64 buffers instead of being boxed into object-dtype pandas
-    columns row by row — the boxing was the measured residual wall of the
-    routed rows after the compute itself was vectorized.  The numpy core
-    (exact_int_matmul → IEEE cosine division → grouped_topk_indices) is
-    byte-for-byte the pandas twin's; only input extraction and output
-    construction change, so results are bit-identical (pinned by
-    tools/verify_routed_ann.py and the interleaved A/B probe)."""
+    """Cogrouped (members, queries) → local-top-k scorer of the routed
+    rungs (``ivf_topk_prebuilt_routed``, ``cosine_topk_routed``).  Per
+    cell/block group: one int64 matmul (``exact_int_matmul``), one
+    IEEE-shaped cosine division (double(dot) / sqrt(double·double) — the
+    exact expression-path shape), local top-k per query under the final
+    (cos DESC, t_id ASC) total order (``grouped_topk_indices``).  The
+    groups arrive as ``pyarrow.Table`` pairs (``applyInArrow``), so the
+    vector columns cross the boundary as flat int64 buffers rather than
+    object-dtype pandas columns boxed row by row (the round-14 §4.2
+    boundary fix: the boxing was the measured residual wall of the routed
+    rows).  Results are bit-identical to the expression path, pinned by
+    tools/verify_routed_ann.py."""
     import numpy as np
     import pyarrow as pa
 
@@ -898,6 +900,8 @@ def _block_cogroup_scorer_arrow(k: int):
     def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
         if mem.num_rows == 0 or qs.num_rows == 0:
             return empty
+        # members pre-sorted by t_id so grouped_topk_indices' stable
+        # argsort replays the (cos DESC, t_id ASC) lexsort tie order
         t_ids = mem.column("t_id").to_numpy()
         ord_t = np.argsort(t_ids, kind="stable")
         t_ids = t_ids[ord_t]
@@ -920,65 +924,6 @@ def _block_cogroup_scorer_arrow(k: int):
     return score
 
 
-def _block_cogroup_scorer(k: int):
-    """Pandas form of the cogrouped (members, queries) → local-top-k
-    scorer.  Production consumers (``ivf_topk_prebuilt_routed``,
-    ``cosine_topk_routed``) now run the Arrow twin above
-    (``_block_cogroup_scorer_arrow`` — identical numpy core, no pandas
-    boxing of the vector columns); this form is kept as the A/B reference
-    used by tools/probe_scorer_vec_ab.py and the bit-identity pins.
-    Per cell/block group: one int64 matmul, one IEEE-shaped cosine
-    division (double(dot) / sqrt(double·double) — the exact
-    expression-path shape), local top-k per query under the final
-    (cos DESC, t_id ASC) total order."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {
-            "q_id": pd.Series(dtype="int64"),
-            "t_id": pd.Series(dtype="int64"),
-            "cos": pd.Series(dtype="float64"),
-        }
-    )
-
-    def score(mem: pd.DataFrame, qs: pd.DataFrame) -> pd.DataFrame:
-        if mem.empty or qs.empty:
-            return empty
-        # members pre-sorted by t_id so grouped_topk_indices' stable
-        # argsort replays the (cos DESC, t_id ASC) lexsort tie order
-        t_ids = mem["t_id"].to_numpy(dtype=np.int64)
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = np.stack(mem["t_vec"].to_numpy()[ord_t]).astype(np.int64)
-        t_norm = mem["t_norm"].to_numpy(dtype=np.int64)[ord_t]
-        q_ids = qs["q_id"].to_numpy(dtype=np.int64)
-        Q = np.stack(qs["q_vec"].to_numpy()).astype(np.int64)
-        q_norm = qs["q_norm"].to_numpy(dtype=np.int64)
-        # exact-by-bound float64 BLAS (round 14 — was a naive int64 matmul);
-        # the division below consumed double(dots) anyway, so values are
-        # IEEE-identical to the old astype path
-        dots = exact_int_matmul(T, Q.T)
-        cos = dots / np.sqrt(
-            q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-        )
-        # vectorized per-query top-k (round 14 — was a Python loop with one
-        # np.lexsort per query: 80k interpreter iterations at |Q|=10k);
-        # key = -cos gives ASC order == cos DESC, NaN placement unchanged
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "q_id": q_ids[q_idx],
-                "t_id": t_ids[t_row],
-                "cos": cos[t_row, q_idx],
-            }
-        )
-
-    return score
-
-
 def cosine_topk_routed(
     queries: DataFrame,
     targets: DataFrame,
@@ -995,7 +940,7 @@ def cosine_topk_routed(
 
     Bit-identical to ``cosine_topk_vectorized`` / ``similarity_topk
     (quantized=True)``: ONE quantization mode (expression-side HALF_UP
-    ``quantize_vec`` on both sides), the shared ``_block_cogroup_scorer``
+    ``quantize_vec`` on both sides), the shared ``_block_cogroup_scorer_arrow``
     (same int64 matmul and IEEE division bytes as the IVF rung), blocks
     partition the targets so per-block local top-k unions are
     duplicate-free and the global window refine returns the true top-k.
@@ -1070,8 +1015,8 @@ def _block_cogroup_scorer_double(k: int):
     ``_seq_fold_norms``), and the division is the identical
     ``dot / sqrt(q_norm · t_norm)`` shape, so every cos value is
     bit-identical to ``cosine_join``'s interpreted HOF output — pinned by
-    tools/probe_cosine_double_ab.py at the 80k bench shape and by unit
-    test.  A zero-norm query or corpus vector raises ``ValueError`` naming
+    ``git show 3609c14:tools/probe_cosine_double_ab.py`` at the 80k bench
+    shape and by unit test.  A zero-norm query or corpus vector raises ``ValueError`` naming
     its id: its cos is NaN, which numpy's local top-k places last while
     Spark's window would place first, breaking that bit-identity."""
     import numpy as np

@@ -18,9 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import IAO_ROOT_TERM, KIND_IRI
+from ..constants import IAO_ROOT_TERM
 from ..operators.aggregates import agg_first_fallback_rootns
-from ..operators.filters import filter_skip_file
+from ..operators.filters import filter_skip_file, valid_triple_predicate
 from ..sources.owl import OWL_NS, RDF_NS, scan_rdf_triples, scan_xml_elements
 from .graph_build import GraphBuildResult, build_graph, clean_triples, release
 
@@ -47,7 +47,6 @@ def extract_triples(
     path: str,
     test_object: bool = False,
     glob: str = "*.owl",
-    materialize: bool = True,
     persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Clean triples from a directory of OWL files.
@@ -58,9 +57,9 @@ def extract_triples(
     global dedup (clean_triples) → validity filter (strict object check when
     test_object).  Ref: OntologyTripleParser.java:62-121,159-171.
 
-    ``materialize=True`` (the default) parses here, at call time: the raw
-    parsed triples and then the per-file root namespaces are materialized
-    with eager ``localCheckpoint``s.  The Arrow-batched Python RDF parse is
+    The parse runs here, at call time: the raw parsed triples and then the
+    per-file root namespaces are materialized with eager
+    ``localCheckpoint``s.  The Arrow-batched Python RDF parse is
     the most expensive narrow stage in the pipeline and this plan references
     it from ~8 places (namespace derivation, class semi-join, bnode
     flattener, dedup) — parse ONCE, consume many; the one-row-per-file
@@ -77,19 +76,13 @@ def extract_triples(
     checkpoint blocks): ``ontology_graph_from_owl`` does so as soon as
     ``build_graph`` has checkpointed its clean triples, and a caller that
     collects them should do the same once its own copy of the output is
-    materialized.  ``materialize=False`` leaves the whole chain lazy.
+    materialized.
     """
-    raw = scan_rdf_triples(spark, path, glob)
-    if materialize:
-        raw = raw.localCheckpoint(eager=True)
-        if persisted_out is not None:
-            persisted_out.append(raw)
-    raw = filter_skip_file(raw)
-    root_ns = derive_root_ns(raw)
-    if materialize:
-        root_ns = root_ns.localCheckpoint(eager=True)
-        if persisted_out is not None:
-            persisted_out.append(root_ns)
+    parsed = scan_rdf_triples(spark, path, glob).localCheckpoint(eager=True)
+    raw = filter_skip_file(parsed)
+    root_ns = derive_root_ns(raw).localCheckpoint(eager=True)
+    if persisted_out is not None:
+        persisted_out.extend([parsed, root_ns])
 
     classes = raw.filter(_is_class_decl()).select("src_file", "subject").distinct()
     class_stmts = raw.join(classes, on=["src_file", "subject"], how="left_semi")
@@ -100,19 +93,12 @@ def extract_triples(
     bnode_stmts = raw.filter(F.col("subject").startswith("_:")).join(root_ns, "src_file")
     kept = class_stmts.unionByName(bnode_stmts)
 
-    subject_ok = F.col("subject").contains(F.col("root_ns"))
-    if test_object:
-        object_named = F.col("object_kind") == KIND_IRI
-        object_ok = F.coalesce(F.col("object_iri").contains(F.col("root_ns")), F.lit(False))
-        valid = subject_ok & (~object_named | object_ok)
-    else:
-        valid = subject_ok
     # clean first (whitelist + flatten + dedup), then validity — flattened
     # triples must pass the same validity check (OntologyTripleParser.java:109-115)
     cleaned = clean_triples(kept.drop("root_ns"), skip_dictionary_file=False)
     return (
         cleaned.join(root_ns, "src_file")
-        .filter(valid)
+        .filter(valid_triple_predicate(F.col("root_ns"), test_object))
         .drop("root_ns")
     )
 

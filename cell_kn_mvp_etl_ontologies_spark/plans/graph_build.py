@@ -109,7 +109,6 @@ def clean_triples(
 
 def parse_uri_dim(
     clean: DataFrame,
-    materialize: bool = True,
     persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Distinct-URI dimension with parsed VTuple fields.
@@ -120,8 +119,8 @@ def parse_uri_dim(
     cheap hash joins (AQE broadcasts the dim when small) for a ~10-100× cut in
     string-parse CPU.
 
-    ``materialize=True`` (the default) persists the parsed dimension
-    (MEMORY_AND_DISK) before the validity filter.  The persist is load-bearing,
+    The parsed dimension is persisted (MEMORY_AND_DISK) before the validity
+    filter.  The persist is load-bearing,
     not a cache hint: ``PushDownPredicates`` substitutes the ``valid`` alias
     with its defining expression when pushing the filter through the parse
     projections, inlining ~8 copies of the whole regex chain into a filter
@@ -133,8 +132,7 @@ def parse_uri_dim(
     codegen stage, and computes the dimension once for all three joins
     against it instead of once per join.  At scale the dimension is orders of
     magnitude smaller than the triple stream, so executor storage holds it
-    comfortably; pass ``materialize=False`` only for plan-shape inspection of
-    the unpersisted DAG.
+    comfortably.
 
     Output: (node_uri, id, number) — only valid rows retained, so joins
     against it double as the validity filter (left join + null check, or
@@ -150,10 +148,9 @@ def parse_uri_dim(
         .dropDuplicates(["node_uri"])
     )
     parsed = with_vtuple(uris, "node_uri", "")
-    if materialize:
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(parsed)
+    parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
+    if persisted_out is not None:
+        persisted_out.append(parsed)
     return parsed.filter(F.col("valid")).select("node_uri", "id", "number")
 
 

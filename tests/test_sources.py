@@ -170,22 +170,6 @@ def test_strict_pass_object_filter(spark, owl_dir):
     assert clean.filter(F.col("object_kind") == "literal").count() > 0
 
 
-def test_owl_datasource_matches_mapinpandas_scan(spark, owl_dir):
-    """The formal DataSource ('owl' format) and the binaryFile+mapInPandas
-    scan share a parser and must produce identical triple sets, with one
-    partition per input file."""
-    from cell_kn_mvp_etl_ontologies_spark.sources.owl_datasource import register_owl_source
-
-    register_owl_source(spark)
-    via_ds = spark.read.format("owl").load(owl_dir)
-    via_scan = scan_rdf_triples(spark, owl_dir)
-    assert via_ds.count() == via_scan.count()
-    assert via_ds.exceptAll(via_scan).count() == 0
-    assert via_scan.exceptAll(via_ds).count() == 0
-    n_files = via_scan.select("src_file").distinct().count()
-    assert via_ds.rdd.getNumPartitions() == n_files
-
-
 # ---------------------------------------------------------------------------
 # scan_rdf_triples_split — byte-range-parallel parse of large single files
 # ---------------------------------------------------------------------------
