@@ -60,766 +60,183 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Breadth-first ordering: the driver's recorded correctness gate covers a
-# PREFIX of this dict (50 entries in round 1), so the front must be a
-# representative cross-section of EVERY SURVEY.md §2 subsection — ontology
-# pipeline, scans/sinks, filters, joins, aggs, windows/sorts/setops, scalar
-# functions, text search, dedup, similarity, text analysis, multimodal,
-# streaming, and the training surface — not 50 entries of one module.  The
-# full catalog (all registered queries, same checker) is verified locally
-# every round via `tools/check_correctness.py --json-out CORRECTNESS_LOCAL_r{N}.json`.
+# Breadth-first ordering: the recorded correctness gate covers a PREFIX of
+# queries() (its first 50 entries), so the front is a representative
+# cross-section of every SURVEY.md §2 subsection, with contracts that have
+# no recorded gate evidence yet moved to the head.  Each id appears once;
+# the list names every registered query.  The full catalog (same checker)
+# is verified locally with `tools/check_correctness.py`.
 _PRIORITY = [
-    # ================= ROUND 14 PREFIX =================
-    # (a) the 13 contracts NEW in round 14 (catalog/frontier11.py — the
-    # two VERDICT r13 prescriptions #4/#5 first, then the round-14
-    # batches; stream_ks_maintain and stream_spearman_maintain are the
-    # IVM twins of the EXISTING frontier4/frontier5 batch rows, sharing
-    # their oracles), jumping to the head per the standing rule; each
-    # displaces one row from the tail of the precomputed r14 rotation
-    # block, so 37 rotation rows fill the gate and the displaced 13
-    # (fn_version_newer .. stream_file_source) head the precomputed
-    # ROUND-15 block (see the end-of-block comment below).
     "eval_bleu_parts", "stream_bleu_maintain", "dedup_segment_boundary_audit",
-    "eval_meteor_parts", "eval_precision_recall_hits",
-    "stream_ks_maintain", "multimodal_audio_energy",
-    "stream_spearman_maintain", "temporal_acf_profile", "text_kneser_ney_counts",
-    "stream_acf_maintain", "stream_kneser_ney_maintain", "text_good_turing_counts",
-    # (b) the first 37 rows of the precomputed stalest-driver rotation
-    # (the ROUND-14 HEAD block recomputed at round-13 close, promoted
-    # here per the standing rotation mechanics; the full 50-row record
-    # remains below, deduped by _ordered).
-    "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
-    "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
-    "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
-    "agg_cube", "agg_distinct_exact_twin", "agg_grouping_sets", "agg_pivot_wide",
-    "agg_quantiles", "agg_salted_hot_key", "cluster_kmeans", "dedup_containment",
-    "dedup_ngram_jaccard", "dedup_pipeline_keep_canonical", "dedup_simhash", "dedup_url_canonicalize",
-    "fn_contains", "fn_doc_collection_name", "fn_doc_key", "fn_make_vertex_id",
-    "fn_pred_last_path", "fn_term_split", "fn_uri_basename",
-    "fn_uri_fragment", "fn_uri_rewrite_special",
-    # ================= end ROUND 14 PREFIX (50 slots: 13 new + 37
-    # rotation; the 13 displaced rotation rows — fn_version_newer,
-    # graph_closure, graph_triangle_count, join_asof_events,
-    # join_salted_skew, multimodal_columns, profile_numeric,
-    # sample_weighted, similarity_ann_ivf, similarity_ann_ivf_kmeans,
-    # similarity_ann_recall, stream_dedup_vs_corpus, stream_file_source
-    # — head the precomputed ROUND-15 block below, which is re-derived
-    # exactly at round close) =================
-    # PRECOMPUTED ROUND-15 HEAD (re-derived exactly at round-14 close):
-    # pure stalest-driver rotation — the 50 rows whose newest
-    # driver-round hash proof is oldest AFTER the r14 gate lands (the 13
-    # rows displaced past this round's 50-slot cut by the 13 new
-    # contracts first — r4 evidence — then the r5-evidence tail,
-    # alphabetical within a staleness class; every one hash-green in the
-    # r14 local sweep).  At round-15 start: promote this block above the
-    # r14 block (the standing rotation mechanics) and displace from its
-    # tail for new r15 contracts.
-    "fn_version_newer", "graph_closure", "graph_triangle_count", "join_asof_events",
-    "join_salted_skew", "multimodal_columns", "profile_numeric", "sample_weighted",
-    "similarity_ann_ivf", "similarity_ann_ivf_kmeans", "similarity_ann_recall", "stream_dedup_vs_corpus",
-    "stream_file_source", "stream_graph_upsert", "stream_index_maintain", "stream_join_dim",
-    "stream_split_route", "stream_stateful_totals", "stream_stream_join", "stream_time_rollup",
-    "stream_window_session", "stream_window_sliding", "stream_window_tumbling", "text_fingerprint",
-    "text_index_positions", "text_pii_redact", "udf_surface", "agg_dedup_edges_last_wins",
-    "agg_heavy_hitters_cms", "agg_unpivot_long", "ddl_database_graph", "dedup_bloom_screen",
-    "dedup_embedding_clustered", "dedup_fuzzy_levenshtein", "dedup_keep_best_quality", "dedup_minhash_lsh_capped",
-    "dedup_substring_spans", "filter_outlier_mad", "filter_quality_percentile", "graph_bfs_distance",
-    "interleave_weighted", "join_asof_forward", "join_bloom_prefilter", "multimodal_decode_stub",
-    "multimodal_frame_sample", "multimodal_resize", "pack_sequences", "sample_cap_per_group",
-    "sample_stratified", "scan_dir_regex",
-    # ================= end PRECOMPUTED ROUND-15 HEAD =================
-    # ================= ROUND 13 PREFIX (executed; kept for the record —
-    # duplicates below the r14 block are deduped by _ordered) =============
-    # (precomputed at round-12 close): with the
-    # never-driver set at ∅ and zero carry-over, the r13 prefix is pure
-    # STALEST-DRIVER rotation — the 50 rows whose newest driver-round
-    # hash proof is oldest (3 rows at r2, 47 at r3/r4; every one is
-    # hash-green in the r12 local sweep).  New/changed r13 contracts
-    # displace from the tail of this block per the standing rule.
-    # (a) the 14 contracts NEW in round 13 (catalog/frontier10.py — the
-    # two VERDICT r12 prescriptions #3/#4 first, then the round-13
-    # batches), jumping to the head per the standing rule; each pushes
-    # one stale-rotation row past the 50-slot cut, so 36 rotation rows
-    # fill the gate and the displaced 16 are the precomputed ROUND-14
-    # head (stalest-first, per the end-of-block comment).
-    "graph_louvain_rounds", "pack_sequences_bpe",
-    "text_chrf_parts", "stream_chrf_maintain", "eval_rouge_l",
-    "eval_isotonic_calibration", "graph_louvain_two_level",
-    "stream_isotonic_maintain", "dedup_simhash_multiprobe",
-    "quality_referential_integrity", "stream_referential_maintain",
-    "window_sessionize_gap_sweep", "multimodal_scene_boundaries",
-    "graph_coreness_bounded",
-    # (b) the precomputed stalest-driver rotation.
-    "dedup_embedding_cosine", "project_triple_nodes", "sort_by_key", "agg_bitmap_overlap",
-    "agg_dedup_edges", "agg_first_fallback_rootns", "agg_funnel_steps", "agg_incremental_maintain",
-    "agg_pivot_vertex_attrs", "agg_retention_cohort", "agg_time_rollup", "cdc_snapshot_diff",
-    "contamination_ngram", "dedup_connected_components", "dedup_incremental_lsh", "dedup_minhash_lsh",
-    "extract_triples_owl", "filter_deprecated_obsolete", "filter_predicate_ns_whitelist", "filter_valid_triple",
-    "graph_build_edges", "graph_build_vertices", "graph_pagerank", "join_anti_new_only",
-    "join_flatten_restriction", "join_range_interval", "join_upsert", "join_upsert_scd2",
-    "multimodal_feature_extract", "pack_sequences_greedy", "pipeline_incremental_graph", "pipeline_two_pass",
-    "quality_expectations", "scan_xml_elements", "setop_intersect_except", "similarity_ann_lsh",
-    "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
-    "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
-    "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
-    # ================= end ROUND 13 PREFIX =================
-    # PRECOMPUTED ROUND-14 HEAD (recomputed at round-13 close): pure
-    # stalest-driver rotation — the 50 rows whose newest driver-round
-    # hash proof is oldest AFTER the r13 gate lands (16 rows displaced
-    # past this round's 50-slot cut by the 14 new contracts, then the
-    # r3/r4-evidence tail; every one hash-green in the r13 local sweep).
-    # At round-14 start: promote this block above the r13 block (the
-    # standing rotation mechanics) and displace from its tail for new
-    # r14 contracts.
-    "similarity_topk", "sink_graph_upsert", "sink_side_output_deprecated", "sink_zorder_cluster",
-    "source_http_versioned", "stream_cdc_apply", "stream_dedup_watermark",
-    "text_bm25_topk", "text_inverted_index", "text_tokenize_stats", "window_last_wins",
-    "window_rank_topk", "window_running_sum", "window_sessionize", "agg_bitmap_distinct",
-    "agg_cube", "agg_distinct_exact_twin", "agg_grouping_sets", "agg_pivot_wide",
-    "agg_quantiles", "agg_salted_hot_key", "cluster_kmeans", "dedup_containment",
-    "dedup_ngram_jaccard", "dedup_pipeline_keep_canonical", "dedup_simhash", "dedup_url_canonicalize",
-    "fn_contains", "fn_doc_collection_name", "fn_doc_key", "fn_make_vertex_id",
-    "fn_pred_last_path", "fn_term_split", "fn_uri_basename", "fn_uri_fragment",
-    "fn_uri_rewrite_special", "fn_version_newer", "graph_closure", "graph_triangle_count",
-    "join_asof_events", "join_salted_skew", "multimodal_columns", "profile_numeric",
-    "sample_weighted", "similarity_ann_ivf", "similarity_ann_ivf_kmeans", "similarity_ann_recall",
-    "stream_dedup_vs_corpus", "stream_file_source",
-    # ================= end PRECOMPUTED ROUND-14 HEAD =================
-    # ================= ROUND 12 PREFIX (executed; kept for the record —
-    # duplicates below the r13 block are deduped by _ordered) =============
-    # (a) contracts NEW in round 12 — jump to the head per the standing
-    # rule: the two VERDICT r11 prescriptions (the df-capped weighted-
-    # Jaccard twin #2 and the routed radius-search rung #3, both
-    # catalog/frontier9.py), followed by the round-12 operator batch.
-    "dedup_minhash_weighted_capped", "similarity_range_search_routed",
-    # ... and the round-12 operator batch (catalog/frontier9.py): the
-    # drawdown pair, the Pettitt changepoint, clipped BLEU precision, the
-    # three ingest-QA profiles, the stop-template report, LPT sharding,
-    # vocab coverage, and the multimodal metadata health profile.
-    "temporal_max_drawdown", "stream_drawdown_maintain",
-    "temporal_changepoint_pettitt", "eval_bleu_ngram_precision",
-    "quality_functional_dependency", "quality_uniqueness_profile",
-    "quality_value_length_profile", "text_boilerplate_census",
-    "shard_assign_lpt", "text_vocab_coverage", "multimodal_metadata_profile",
-    "temporal_seasonality_strength", "eval_snips_offpolicy",
-    "graph_bipartite_projection_capped", "stream_vocab_coverage_maintain",
-    "eval_krippendorff_alpha", "graph_louvain_move",
-    "sketch_kmv_difference", "filter_outlier_iqr", "temporal_snaive_backtest",
-    "eval_mcc_parts", "profile_correlation_pairs",
-    "stream_snips_maintain", "stream_iqr_maintain",
-    # NOTE: 26 new contracts + the 24-row backlog below = exactly the
-    # 50-slot gate, zero carry-over (VERDICT r11 #1's budget).
-    # (b) contracts CHANGED by the r11 ADVICE fixes (both already in the
-    # backlog below, listed here for the record): sketch_kmv_distinct
-    # (audit column renamed exact_distinct_hashes — schema-visible) and
-    # stream_novelty_maintain (counters now fold by SUM with revocation
-    # deltas — result-identical on every arrival order the oracle sees).
-    # (c) the 24-row never-driver backlog (VERDICT r11 #1): the round-11
-    # extension batch (catalog/frontier8.py — radius search, weighted
-    # Jaccard, FFD packing, schema drift, rate-shift audit, grouped
-    # K-fold, substring decontamination, expectations IVM, the KMV
-    # sketch family and round-11 IVMs), all hash-green in
-    # CORRECTNESS_LOCAL_r11 AND the judge's independent r11 re-run.
-    "similarity_range_search", "dedup_minhash_weighted",
-    "pack_sequences_ffd", "quality_schema_drift",
-    "temporal_rate_shift_audit", "sample_group_kfold",
-    "contamination_substring_scan", "stream_expectations_maintain",
-    "stream_schema_drift_maintain", "quality_column_collision_profile",
-    "agg_weighted_median", "pairs_hard_negatives",
-    "eval_threshold_best_f1", "agg_mode_per_group",
-    "sample_balanced_downsample", "text_ngram_novelty_profile",
-    "stream_weighted_median_maintain",
-    "sketch_kmv_distinct", "sketch_kmv_intersection", "stream_kmv_maintain",
-    "temporal_twap", "stream_novelty_maintain", "temporal_median_decompose",
-    "eval_auc_delong_var",
-    # ================= end ROUND 12 PREFIX (executed) =================
-    # ================= ROUND 11 PREFIX (executed; kept for the record —
-    # VERDICT r10 #1: the never-driver backlog is EXACTLY 49 rows and the
-    # gate is 50 slots, so this round CLOSES the set) =================
-    # (a) the single NEW contract this round (held to <=1 per VERDICT r10
-    # #1): the hot-chunk-capped CDC census (VERDICT r10 #5 — the
-    # boilerplate-chunk quadratic guard, mirroring dedup_minhash_lsh_capped).
-    "cdc_chunks_capped",
-    # (b) ALL 49 never-driver-verified rows (catalog minus the union of
-    # CORRECTNESS_r1-r10 hash-green keys; recomputed this round and equal
-    # to the r10-precomputed list), stalest-first.  All are hash-green in
-    # the r7/r9/r10 local sweeps.  NOTE on the round-11 ADVICE fixes: the
-    # four r10 ADVICE findings (integer bucket arithmetic in
-    # dag_ancestors_bucketed, AnalysisException-only state reads in the
-    # IVM maintainers, the arango reserved-key guard, DECIMAL(38,0)
-    # per-bin Brier quotients) are RESULT-NEUTRAL hardening — every
-    # touched gated row was re-verified hash-exact against its oracle in
-    # this round's local sweep (ADVICE_RESPONSES_r11.md), so per the
-    # changed-CONTRACT rule none of them displaces a backlog slot: the
-    # observable gate contract (query results at any representable scale
-    # both engines share) is unchanged; only failure paths and
-    # overflow-range behavior moved.
-    "dedup_remove_segments", "sample_repeat_temperature",
-    "similarity_maxsim_trained_recall", "fn_json_extract_agg",
-    "semistructured_keys_profile", "stream_ohlc", "stream_maxsim_maintain",
-    "profile_topk_values", "temporal_rolling_anomaly",
-    "dedup_exact_normalized", "text_code_detector", "text_readability_stats",
-    "sample_recency_decay", "quality_freshness_profile",
-    "temporal_new_entity_curve", "graph_random_walks", "agg_session_paths",
-    "graph_walk_skipgram_pairs", "sample_class_weights",
-    "embedding_distance_histogram", "temporal_autocorr_lag1",
-    "agg_attribution_models", "temporal_activity_heatmap",
-    "sample_split_chronological", "quality_split_balance",
-    "graph_biased_walks", "embedding_farthest_point_init",
-    "temporal_local_peaks", "cluster_kmeans_inertia_ab",
-    "agg_attribution_lookback_sweep", "embedding_label_separation",
-    "join_point_in_time_features", "quality_split_leakage",
-    "fn_target_encode_oof", "temporal_growth_accounting",
-    "eval_feature_chi2_cells", "text_char_diversity",
-    "pairs_contrastive_dataset", "dedup_cluster_size_profile",
-    "text_mojibake_detector", "dedup_blocker_union_audit",
-    "embedding_dim_minmax_params", "temporal_dwell_time",
-    "join_interval_overlap_duration", "sample_rolling_origin_folds",
-    "graph_degree_gini", "text_sentence_repetition",
-    "quality_event_order_audit", "graph_modularity_audit",
-    # ================= end ROUND 11 PREFIX (50 slots; never-driver set
-    # is now EMPTY — every catalog row has at least one driver-round
-    # proof, and the 3-round freshness floor covers staleness from here
-    # on) =================
-    # ================= ROUND 10 PREFIX (executed; kept for the record —
-    # duplicates below the r11 block are deduped by _ordered) =============
-    # (a) contracts NEW/CHANGED since the r9 gate — jump to the head per the
-    # standing rule.  The post-r9-artifact guard commit (8555e21, ADVICE r9)
-    # changed four gated contracts: the two kendall-tau rows (n<2 → explicit
-    # NULL tau in BOTH engines; census columns coalesce to zero) and the two
-    # largest-remainder consumers (Σweight ≤ 0 now raises loudly via
-    # assert_true, matching DuckDB's division error).  New rows added in
-    # round 10 itself (pq_train_codebooks per VERDICT r9 #4, and the
-    # frontier7 batch) follow them — each displaces one tail slot of the
-    # never-driver fill in (b).
-    "eval_kendall_tau_full", "eval_kendall_tau_bucketed",
-    "sample_allocation_largest_remainder", "stream_allocation_maintain",
-    "pq_train_codebooks", "graph_dag_lca_frontier",
-    "quality_seasonal_null_audit", "temporal_ewma_crossover",
-    "graph_reciprocity", "agg_log_histogram", "text_hapax_ratio",
-    "sample_inverse_propensity", "eval_lift_at_k", "join_nearest_value",
-    "dedup_sequence_fingerprint", "stream_reciprocity_maintain",
-    "eval_cindex", "graph_dag_path_count", "stream_hapax_maintain",
-    "temporal_kaplan_meier", "stream_seasonal_null_maintain",
-    "eval_cindex_full", "quality_k_anonymity", "stream_kaplan_meier_maintain",
-    "graph_harmonic_centrality_bounded", "eval_brier_decomposition",
-    "temporal_velocity_profile", "stream_velocity_maintain",
-    # (b) the never-driver-verified backlog, stalest-first (VERDICT r9 #1):
-    # the 31 rows displaced by the r9 frontier6 head block first, then the
-    # frontier3 tail from dedup_exact_normalized onward.  All 71 are
-    # hash-green in CORRECTNESS_LOCAL_r09 and re-swept in _r10.  The
-    # round-10 head block settled at 28 slots (4 changed contracts + 24
-    # new rows: pq_train_codebooks, graph_dag_lca_frontier, and the
-    # 22-row frontier7 batch), so 22 backlog rows fit the 50-slot prefix
-    # (through `window_distribution`); the remaining 49 —
-    # `dedup_remove_segments` onward in the order below — are the
-    # precomputed ROUND-11 prefix, stalest-first, unless contracts
-    # change.  EVIDENCE FRESHNESS FLOOR (tightened 4 → 3 rounds this
-    # round per VERDICT r9 #6): tests/test_catalog_survey_sync.py asserts
-    # no catalog row's newest evidence (driver OR local sweep) is older
-    # than 3 rounds.
-    "quality_langid_confusion", "eval_binary_detector_metrics",
-    "temporal_wow_growth", "graph_two_hop_reach",
-    "quality_duplication_scorecard", "agg_aging_buckets",
-    "join_asof_tolerance", "text_burstiness_profile", "multimodal_frame_dedup",
-    "agg_association_rules", "agg_session_bounce", "agg_pivot_topk_other",
-    "sample_bootstrap_poisson", "quality_ab_chi2_parts",
-    "temporal_downsample_ltb", "quality_sequence_gaps",
-    "dedup_lsh_banding_audit", "temporal_interval_coalesce",
-    "dedup_phonetic_blocking", "graph_degree_stats",
-    "quality_referential_integrity", "window_distribution",
-    "dedup_remove_segments", "sample_repeat_temperature",
-    "similarity_maxsim_trained_recall", "fn_json_extract_agg",
-    "semistructured_keys_profile", "stream_ohlc", "stream_maxsim_maintain",
-    "profile_topk_values", "temporal_rolling_anomaly",
-    "dedup_exact_normalized", "text_code_detector", "text_readability_stats",
-    "sample_recency_decay", "quality_freshness_profile",
-    "temporal_new_entity_curve", "graph_random_walks", "agg_session_paths",
-    "graph_walk_skipgram_pairs", "sample_class_weights",
-    "embedding_distance_histogram", "temporal_autocorr_lag1",
-    "agg_attribution_models", "temporal_activity_heatmap",
-    "sample_split_chronological", "quality_split_balance",
-    # ================= end ROUND 10 PREFIX (50 slots) =================
-    # ================= ROUND 9 PREFIX (executed; kept for the record —
-    # duplicates below the r10 block are deduped by _ordered) =============
-    # (a) contracts NEW/CHANGED in round 9 — jump to the head: the
-    # treated-vs-control Qini/uplift table (VERDICT r8 #6, brand-new
-    # contract) and the frontier6 batch (AUUC scalar, Brier/skill,
-    # directed SCC — all with same-round local-sweep evidence, merged
-    # into CORRECTNESS_LOCAL_r09), then the four frontier5 rows that had
-    # never seen ANY recorded driver gate (they led the precomputed plan;
-    # the r8 gate ran before they landed — VERDICT r8 'What's wrong' #1).
-    # The thirty-one frontier6 head slots displace the 31 tail rows of the
-    # precomputed 45-stalest block (quality_langid_confusion,
-    # eval_binary_detector_metrics,
-    # temporal_wow_growth, graph_two_hop_reach,
-    # quality_duplication_scorecard, agg_aging_buckets, join_asof_tolerance,
-    # text_burstiness_profile, multimodal_frame_dedup,
-    # agg_association_rules, agg_session_bounce, agg_pivot_topk_other,
-    # sample_bootstrap_poisson, quality_ab_chi2_parts,
-    # temporal_downsample_ltb, quality_sequence_gaps,
-    # dedup_lsh_banding_audit, temporal_interval_coalesce,
-    # dedup_phonetic_blocking, graph_degree_stats,
-    # quality_referential_integrity, window_distribution,
-    # dedup_remove_segments, sample_repeat_temperature,
-    # similarity_maxsim_trained_recall, fn_json_extract_agg,
-    # semistructured_keys_profile, stream_ohlc,
-    # stream_maxsim_maintain, profile_topk_values,
-    # temporal_rolling_anomaly) to the r10 prefix.
-    "eval_uplift_qini", "eval_uplift_auuc", "eval_brier_score", "graph_scc",
-    "graph_dag_depth", "eval_kendall_tau_full", "eval_spearman_rescaled",
-    "graph_condensation", "graph_scc_fb", "stream_uplift_maintain",
-    "fn_sft_render_spans",
-    "eval_pr_curve", "eval_average_precision", "eval_pairwise_winrate",
-    "pairs_dpo_dataset", "pack_attention_spans", "fn_chat_truncate_budget",
-    "profile_moments", "graph_dag_depth_frontier", "stream_pr_curve_maintain",
-    "graph_dag_lca_similarity", "eval_kendall_tau_bucketed",
-    "eval_wilcoxon_signed_rank", "sample_allocation_largest_remainder",
-    "graph_betweenness_bounded", "eval_rank_biased_overlap",
-    "graph_eccentricity_bounded", "stream_allocation_maintain",
-    "temporal_holt_linear", "sample_systematic_interval",
-    "eval_friedman_ranks", "eval_cochran_q",
-    "eval_spearman_rank", "eval_kendall_tau", "eval_mcnemar",
-    "eval_gains_deciles",
-    # (b) the 45 stalest of the remaining 85 never-driver-verified rows,
-    # catalog order (== staleness order within the r7 additions): the
-    # kcore/bigram/asof-nearest/LPA overflow first, then the OHLC/MaxSim
-    # late batch, then the frontier3 tail from temporal_interval_coalesce
-    # onward.  All are hash-green in CORRECTNESS_LOCAL_r07 (and re-swept
-    # in CORRECTNESS_LOCAL_r09 this round).  The 71 never-driver rows that
-    # don't fit — the 31 displaced by the frontier6 head block (named
-    # above) plus the frontier3 tail from dedup_exact_normalized onward —
-    # are the precomputed ROUND-10 prefix, stalest-first, unless
-    # contracts change.  EVIDENCE FRESHNESS FLOOR (VERDICT r8 #8): after this gate
-    # no catalog row's newest evidence (driver OR local sweep) may be
-    # older than 4 rounds; tests/test_catalog_survey_sync.py asserts it
-    # against the checked-in artifacts.
-    "graph_kcore", "text_lm_bigram_score", "join_asof_nearest",
-    "graph_label_propagation", "temporal_ohlc", "join_interval_overlap",
-    "text_collocations_pmi", "graph_common_neighbors", "similarity_maxsim",
-    "similarity_maxsim_routed", "similarity_maxsim_routed_vec",
-    "similarity_maxsim_recall", "embedding_mrl_recall",
-    "agg_bitmap_sliding_distinct",
-    # ================= end ROUND 9 PREFIX (50 slots) =================
-    # ================= ROUND 8 PREFIX (executed; kept for the record —
-    # duplicates below the r9 block are deduped by _ordered) =============
-    # (a) contracts CHANGED in round 8 — jump to the head: the CDC trio
-    # (codepoint Arrow chunker + empty-payload guard + unbounded oracle
-    # series, ADVICE r7), the markov driver mirror (sink states,
-    # ADVICE r7), the four ntile_exact conversions (distributed two-pass
-    # rank replaces single-partition windows, ADVICE r7), the two sketch
-    # gates upgraded rows-only → bounded-error hash gates (VERDICT r7
-    # #7), the NEW routed brute-cosine gate and its guard-touched
-    # vectorized twin (VERDICT r7 #2/#9).
-    "multimodal_cdc_chunks", "multimodal_cdc_chunks_arrow",
-    "stream_cdc_dedup_vs_corpus", "agg_markov_stationary",
-    "eval_calibration_ece", "eval_calibration_bins", "agg_hist_equi_depth",
-    "agg_lorenz_curve", "agg_approx_distinct", "agg_approx_quantiles",
-    "similarity_topk_routed", "similarity_topk_vectorized",
-    # (b) the 38 stalest never-driver-verified rows (verified against
-    # CORRECTNESS_r01-r07 keys; all hash-green in CORRECTNESS_LOCAL_r07):
-    # the r7 boundary-displaced block first (catalog order), then the
-    # frontier3 tail.  The remaining ~46 never-driver rows (frontier3
-    # tail from temporal_interval_coalesce onward, the OHLC/MaxSim late
-    # batch, and the kcore/bigram/asof-nearest/LPA overflow) are the
-    # precomputed r9 prefix, stalest-first, unless contracts change.
-    "stream_drift_monitor", "text_keyword_rake", "stream_skyline_maintain",
-    "join_band_bucketed", "window_streak_islands",
-    "temporal_cusum_changepoint", "agg_attribution_linear",
-    "graph_resource_allocation", "agg_gini_concentration",
-    "agg_hhi_concentration", "quality_benford", "stream_benford_maintain",
-    "join_star_revenue_rollup", "graph_jaccard_neighbors",
-    "temporal_seasonal_profile", "text_tfidf_topk", "text_zipf_rank",
-    "temporal_markov_transitions", "dedup_sorted_neighborhood",
-    "text_vocab_growth", "stream_star_rollup_maintain",
-    "graph_clustering_coefficient", "quality_completeness_profile",
-    "agg_pareto_coverage", "embedding_norm_profile",
-    "agg_funnel_time_to_convert", "dedup_minhash_estimate_audit",
-    "graph_ktruss", "stream_markov_maintain", "stream_tfidf_maintain",
-    "sample_negatives_hash", "temporal_interarrival_profile",
-    "agg_rfm_scores", "graph_degree_assortativity", "multimodal_dedup_exact",
-    "temporal_event_trigrams", "agg_cohort_ltv", "stream_interarrival_maintain",
-    # ================= end ROUND 8 PREFIX (50 slots) =================
-    # CHANGED-CONTRACT BLOCK (must hold the prefix head): the round-7
-    # operator/gate REWRITES — one-pass corrupt routing (VERDICT r6 #5),
-    # the lang-fallback/typed-literal gates rebased onto sf tables (#6),
-    # the RDF/XML scan pair re-gating the parser's lang-tag lowercasing
-    # (ADVICE r6) — plus the round-7 feature queries those verdict items
-    # added (stemmer #3, composed IVF-PQ recall #4, OPQ A/B #7, session
-    # eviction #8) and the round-7 additions that would otherwise carry
-    # NO driver evidence at all.  With ~77 round-7-new queries and 50
-    # slots, the overflow (OHLC/MaxSim late batch, tail of late batch 2)
-    # waits for round 8 with CORRECTNESS_LOCAL_r07.json as its evidence.
-    # ROUND 7 FINAL BATCH (catalog/frontier4.py): retrieval evaluation
-    # (exact AUC, NDCG/MRR), RRF hybrid fusion, CDC payload dedup,
-    # feature hashing, CUPED, survival risk table — new contracts take
-    # the very head per the changed-contract rule.
-    "eval_auc_rank", "eval_ranking_ndcg", "similarity_rrf_fusion",
-    "multimodal_cdc_chunks", "fn_feature_hashing", "eval_ab_cuped",
-    "temporal_survival_hazard", "stream_cdc_dedup_vs_corpus",
-    "graph_ppr_seeded", "pack_efficiency_audit",
-    "quality_lexicon_screen", "embedding_jl_recall", "embedding_isotropy_probe",
-    "agg_markov_stationary", "sink_manifest_skipping", "eval_welch_ttest",
-    "agg_bayes_shrunk_rate", "quality_cross_source_dup", "eval_reco_diversity",
-    "stream_manifest_maintain",
-    "join_spatial_grid", "graph_sssp_weighted", "eval_regression_metrics",
-    "multimodal_cdc_chunks_arrow", "sample_token_budget_mix",
-    "quality_parity_audit", "contamination_filter_train",
-    "eval_bootstrap_ci", "eval_ks_two_sample",
-    "temporal_mann_kendall", "agg_winsorized_mean",
-    "eval_calibration_ece", "eval_knn_probe", "temporal_theil_sen",
-    "eval_cohens_kappa",
-    "source_jsonl_corrupt_routing", "fn_label_lang_fallback",
-    "quality_typed_literals", "scan_rdf_triples", "scan_rdf_triples_split",
-    "text_search_stemmed", "text_view_four_analyzers",
-    "similarity_ivf_pq_recall", "similarity_opq_recall",
-    "stream_session_eviction",
-    # ROUND 7 LATE BATCH 2 (continuation): Pareto skyline + AllPairs
-    # prefix-filtered set-similarity join (catalog/frontier2.py) — new
-    # contracts take the head per the changed-contract rule.
-    "skyline_pareto", "join_set_similarity_prefix",
-    "graph_hits", "agg_drift_tvd", "window_rolling_median",
-    "stream_drift_monitor", "agg_hist_equi_depth", "text_keyword_rake",
-    "stream_skyline_maintain", "join_band_bucketed", "window_streak_islands",
-    "temporal_cusum_changepoint", "agg_attribution_linear", "graph_resource_allocation",
-    # ROUND 7 LATE BATCH 3 (catalog/frontier3.py): concentration indices,
-    # Benford audit (+streaming twin), star rollup, Jaccard link
-    # prediction, seasonality, integer TF-IDF, Zipf head.
-    "agg_gini_concentration", "agg_hhi_concentration", "quality_benford",
-    "stream_benford_maintain", "join_star_revenue_rollup",
-    "graph_jaccard_neighbors", "temporal_seasonal_profile",
-    "text_tfidf_topk", "text_zipf_rank",
-    "temporal_markov_transitions", "dedup_sorted_neighborhood",
-    "text_vocab_growth", "stream_star_rollup_maintain",
-    "graph_clustering_coefficient", "quality_completeness_profile",
-    "agg_pareto_coverage",
-    "embedding_norm_profile", "agg_funnel_time_to_convert",
-    "dedup_minhash_estimate_audit",
-    "graph_ktruss", "stream_markov_maintain",
-    "stream_tfidf_maintain", "sample_negatives_hash",
-    "temporal_interarrival_profile",
-    "agg_rfm_scores", "graph_degree_assortativity", "multimodal_dedup_exact",
-    "temporal_event_trigrams", "agg_cohort_ltv", "stream_interarrival_maintain",
-    "temporal_interval_coalesce", "dedup_phonetic_blocking", "agg_session_bounce",
-    "agg_pivot_topk_other", "sample_bootstrap_poisson", "quality_ab_chi2_parts",
-    "temporal_downsample_ltb", "quality_sequence_gaps", "dedup_lsh_banding_audit",
-    "quality_langid_confusion", "eval_binary_detector_metrics",
-    "temporal_wow_growth", "graph_two_hop_reach",
-    "quality_duplication_scorecard", "agg_aging_buckets",
-    "join_asof_tolerance", "text_burstiness_profile", "multimodal_frame_dedup",
-    "agg_association_rules", "dedup_exact_normalized", "eval_calibration_bins",
-    "text_code_detector", "text_readability_stats", "sample_recency_decay",
-    "quality_freshness_profile", "temporal_new_entity_curve",
-    "graph_random_walks", "agg_session_paths",
-    "graph_walk_skipgram_pairs", "sample_class_weights",
-    "embedding_distance_histogram",
-    "temporal_autocorr_lag1", "agg_attribution_models",
-    "temporal_activity_heatmap", "sample_split_chronological",
-    "quality_split_balance",
-    "agg_lorenz_curve", "graph_biased_walks",
-    "embedding_farthest_point_init", "temporal_local_peaks",
-    "cluster_kmeans_inertia_ab", "agg_attribution_lookback_sweep",
-    "embedding_label_separation",
-    "join_point_in_time_features", "quality_split_leakage",
-    "fn_target_encode_oof",
-    "temporal_growth_accounting", "eval_feature_chi2_cells",
-    "text_char_diversity", "pairs_contrastive_dataset",
-    "dedup_cluster_size_profile", "text_mojibake_detector",
-    "dedup_blocker_union_audit",
-    "embedding_dim_minmax_params", "temporal_dwell_time",
-    "join_interval_overlap_duration", "sample_rolling_origin_folds",
-    "graph_degree_gini", "text_sentence_repetition", "quality_event_order_audit",
-    "graph_modularity_audit",
-    # ROUND 7 LATE BATCH (continuation): twenty-two queries added after the
-    # main r7 rotation was laid down — OHLC candles, interval-overlap
-    # join, PMI collocations, common-neighbor link prediction,
-    # multi-vector MaxSim (brute + routed identity + cogrouped-vectorized
-    # identity + single-probe recall audit), and the matryoshka truncation
-    # audit (catalog/frontier.py).
-    # They take the head per the changed-contract rule; the twenty-two rows
-    # they displace from the 50-slot prefix (tail of the r3 alphabetical
-    # backlog: join_upsert, join_upsert_scd2, multimodal_feature_extract,
-    # pack_sequences_greedy, pipeline_incremental_graph,
-    # quality_expectations, setop_intersect_except + the already-deferring
-    # similarity_ann_lsh/similarity_topk) stay r3-driver-green +
-    # local-r7-green and move to the round-8 plan below.
-    "temporal_ohlc", "join_interval_overlap", "text_collocations_pmi",
-    "graph_common_neighbors", "similarity_maxsim", "embedding_mrl_recall",
-    "similarity_maxsim_routed", "similarity_maxsim_recall",
-    "similarity_maxsim_routed_vec",
-    "agg_bitmap_sliding_distinct", "temporal_rolling_anomaly",
-    "profile_topk_values", "stream_ohlc", "stream_maxsim_maintain",
-    "fn_json_extract_agg", "semistructured_keys_profile",
-    "similarity_maxsim_trained_recall",
-    "sample_repeat_temperature", "dedup_remove_segments",
-    "window_distribution", "quality_referential_integrity", "graph_degree_stats",
-    # ROUND 7 ROTATION (VERDICT.md r6 "Next round" #1, executing the plan
-    # precomputed last round): (a) the FOUR queries new this round
-    # (text_en stemmed search per VERDICT r6 #3, composed IVF-PQ recall
-    # audit per #4, OPQ-lite recall A/B per #7, session-window eviction
-    # audit per #8) and the THREE whose operator/oracle changed (one-pass
-    # corrupt routing per #5; lang-fallback + typed-literal gates rebased
-    # onto the sf documents table per #6), plus the RDF/XML scan pair —
-    # the parser's lang-tag lowercasing (ADVICE r6) is output-invariant on
-    # the fixtures but the operator changed, so they re-gate; (b) the three
-    # r2-only rows displaced last round; (c) the r3-verified backlog —
-    # the parser blast radius first (extract/build/flatten/sinks/meta),
-    # then alphabetical.  The 15 r3 rows that don't fit
-    # (pipeline_incremental_graph, quality_expectations,
-    # setop_intersect_except, similarity_ann_lsh, similarity_topk —
-    # displaced by the late-round text_view_four_analyzers / graph_kcore /
-    # text_lm_bigram_score / join_asof_nearest /
-    # graph_label_propagation additions — plus sink_zorder_cluster,
-    # stream_cdc_apply, stream_dedup_watermark, text_bm25_topk,
-    # text_inverted_index, text_tokenize_stats, window_last_wins,
-    # window_rank_topk, window_running_sum, window_sessionize) stay
-    # r3-driver-green + local-r7-green; after this gate no catalog query
-    # has evidence older than r3.
-    #
-    # -- (a) new in round 7 + changed contracts --
-    "text_search_stemmed", "text_view_four_analyzers", "graph_kcore",
-    "text_lm_bigram_score", "join_asof_nearest", "graph_label_propagation",
-    "similarity_ivf_pq_recall", "similarity_opq_recall",
-    "stream_session_eviction", "source_jsonl_corrupt_routing",
-    "fn_label_lang_fallback", "quality_typed_literals",
-    "scan_rdf_triples", "scan_rdf_triples_split",
-    # -- (b) the three r2-only rows --
-    "sort_by_key", "dedup_embedding_cosine", "project_triple_nodes",
-    # -- (c) r3 backlog: parser blast radius first --
-    "extract_triples_owl", "graph_build_vertices", "graph_build_edges",
-    "join_flatten_restriction", "scan_xml_elements",
-    "pipeline_two_pass", "sink_graph_upsert", "sink_side_output_deprecated",
-    "source_http_versioned",
-    # -- (c) r3 backlog, alphabetical fill --
-    "agg_bitmap_overlap", "agg_dedup_edges", "agg_first_fallback_rootns",
-    "agg_funnel_steps", "agg_incremental_maintain", "agg_pivot_vertex_attrs",
-    "agg_retention_cohort", "agg_time_rollup", "cdc_snapshot_diff",
-    "contamination_ngram", "dedup_connected_components", "dedup_incremental_lsh",
-    "dedup_minhash_lsh", "filter_deprecated_obsolete",
-    "filter_predicate_ns_whitelist", "filter_valid_triple", "graph_pagerank",
-    "join_anti_new_only", "join_range_interval", "join_upsert",
-    "join_upsert_scd2", "multimodal_feature_extract", "pack_sequences_greedy",
-    "pipeline_incremental_graph", "quality_expectations",
-    "setop_intersect_except", "similarity_ann_lsh", "similarity_topk",
-    # ROUND-8 ROTATION PLAN (recomputed at round end): the r7 prefix-50
-    # boundary now falls after window_rolling_median (slot 50 — the
-    # thirty-five frontier4 final-batch queries took the head, displacing
-    # stream_drift_monitor, agg_hist_equi_depth, text_keyword_rake,
-    # stream_skyline_maintain, window_streak_islands,
-    # temporal_cusum_changepoint,
-    # agg_attribution_linear, graph_resource_allocation,
-    # agg_gini_concentration, agg_hhi_concentration, quality_benford,
-    # stream_benford_maintain, join_star_revenue_rollup,
-    # graph_jaccard_neighbors, temporal_seasonal_profile, text_tfidf_topk,
-    # text_zipf_rank, temporal_markov_transitions,
-    # dedup_sorted_neighborhood, text_vocab_growth,
-    # stream_star_rollup_maintain, graph_clustering_coefficient,
-    # quality_completeness_profile, agg_pareto_coverage,
-    # embedding_norm_profile, agg_funnel_time_to_convert,
-    # dedup_minhash_estimate_audit, graph_ktruss, stream_markov_maintain,
-    # stream_tfidf_maintain, sample_negatives_hash,
-    # temporal_interarrival_profile, agg_rfm_scores, and
-    # graph_degree_assortativity past the boundary); those 23 join the ~85
-    # catalog queries outside the prefix with NO driver evidence ever
-    # (verified against CORRECTNESS_r01-r06 keys): everything in this
-    # header block from graph_ktruss onward (the round-7 extension batches
-    # 8-31), the OHLC/MaxSim late batch (temporal_ohlc ..
-    # graph_degree_stats, 22), and the graph_kcore / text_lm_bigram_score /
-    # join_asof_nearest / graph_label_propagation overflow — all hash-green
-    # in CORRECTNESS_LOCAL_r07.json (same checker).  Round 8 prefix = the
-    # 50 stalest of those (catalog order, newest-first within ties); the
-    # remainder + the r2-only trio + the r3 backlog ride to r9 unless a
-    # contract changes.  As always, operator/oracle changes jump to the
-    # head.
-    # ------------------------------------------------------------------
-    # ROUND 6 ROTATION (VERDICT.md r5, "Next round: do this" #1): the 50-slot
-    # prefix is (a) the EIGHT round-5 late additions that were the only
-    # catalog queries without driver evidence, (b) the NINE queries NEW in
-    # round 6 (trained-PQ chain per VERDICT r5 #4, composed streaming IVF-PQ
-    # maintenance per #7, the lang-fallback label query over the new
-    # object_lang column, sqrt source balancing, Hamming recall audit,
-    # routed IVF-PQ serving, typed-literal validation, the
-    # streaming-maintained-index serve loop, and corrupt-routing JSONL
-    # ingest), (c) the queries
-    # whose contract CHANGED this round — scan_rdf_triples
-    # (+object_lang/object_datatype columns, VERDICT r5 #2) and
-    # agg_pivot_vertex_attrs_capped (oracle NULLS FIRST fix, ADVICE r5) —
-    # plus the schema-change blast radius (split scan, end-to-end graph
-    # build), and (d) backfill with the stalest driver-green rows: all 19
-    # with r1-only evidence and 10 of the 13 with r2-only evidence.  Every
-    # query rotated out stays verified in CORRECTNESS_LOCAL_r06.json (same
-    # checker).
-    #
-    # -- (a) the 8 never-driver-verified round-5 additions --
-    "similarity_pq_adc", "similarity_pq_rerank", "similarity_ivf_pq",
-    "similarity_pq_recall", "similarity_hamming_topk",
-    "similarity_hamming_rerank", "stream_pq_encode_maintain",
-    "sample_split_by_group",
-    # -- (b) new in round 6 --
-    "similarity_pq_trained", "stream_ivf_pq_maintain", "fn_label_lang_fallback",
-    "sample_source_sqrt", "similarity_hamming_recall", "similarity_ivf_pq_routed",
-    "quality_typed_literals", "stream_ivf_pq_serve", "source_jsonl_corrupt_routing",
-    # -- (c) contract changed this round + blast radius.  Slot math: the
-    # nine (b) rows displace join_flatten_restriction, the two
-    # graph_build_* rows, extract_triples_owl (from c), and sort_by_key,
-    # dedup_embedding_cosine, project_triple_nodes (from d) — all seven
-    # stay r2/r3-driver-green AND hash-green locally
-    # this round (the goldens were unchanged by the schema widening;
-    # scan_rdf_triples and owl_graph_end_to_end inside the prefix cover
-    # the same parse + build DAG end-to-end) --
-    "scan_rdf_triples", "agg_pivot_vertex_attrs_capped",
-    "scan_rdf_triples_split", "owl_graph_end_to_end",
-    # -- (d) stalest driver-green: the 19 r1-only rows --
-    "agg_collect_edge_labels", "agg_count_metrics", "agg_distinct_vertices",
-    "filter_isin_valid_vertices", "filter_object_is_literal",
-    "filter_root_ns_class", "filter_skip_file", "fn_doc_id_helpers",
-    "fn_extract_version_date", "fn_json_config", "fn_normalize_edge_label",
-    "fn_normalize_edge_source", "join_semi_edge_endpoints",
-    "scan_ontology_meta", "scan_term_prefixes", "setop_union_files",
-    "setop_union_label_sets", "sink_jsonl_export",
-    "sink_side_output_edge_labels",
-    # -- (d) the 13 r2-only rows --
-    # (sort_by_key and dedup_embedding_cosine yield their slots to
-    # quality_typed_literals and stream_ivf_pq_serve — both r2-green +
-    # local-r6-green; sort_by_key is a pure orderBy wrapper and
-    # dedup_embedding_cosine is the small-scale facet of the r5-green
-    # dedup_embedding_clustered)
-    # (project_triple_nodes also yields its slot — r2-green + local-r6-
-    # green thin projection whose consumers graph_build/owl_graph_end_to_end
-    # sit inside the prefix)
-    "agg_distinct_triples", "dedup_exact_hash",
-    "embedding_quantize", "fn_uri_parse", "fn_vtuple", "join_ro_label_lookup",
-    "sample_split_hash",
-    "text_lang_id", "text_phrase_search", "text_quality_score",
-    # ROUND-7 ROTATION PLAN (precomputed): after this gate runs, every
-    # catalog query has driver evidence.  The stalest rows are then
-    # sort_by_key, dedup_embedding_cosine, and project_triple_nodes
-    # (r2-only, displaced this round) plus the ~46 r3-verified
-    # queries not in this prefix (CORRECTNESS_r03.json keys minus
-    # scan_rdf_triples/scan_rdf_triples_split/owl_graph_end_to_end, and
-    # including the four displaced rows join_flatten_restriction,
-    # graph_build_vertices, graph_build_edges, extract_triples_owl) —
-    # give them the r7 prefix, then fill with r4-verified rows, oldest
-    # first.  Any query whose oracle or operator changes in round 7 jumps
-    # to the head, as always.
-    # ------------------------------------------------------------------
-    # ROUND 5 ROTATION (VERDICT.md r4, "Next round: do this" #1): after the
-    # round-4 gate, exactly 46 of the 179 catalog queries had never been
-    # through a driver correctness gate (all hash-green locally in
-    # CORRECTNESS_LOCAL_r04.json; list computed from the set difference of
-    # CORRECTNESS_r0{1,2,3,4}.json keys vs the full catalog).  This round the
-    # 50-slot prefix is exactly those 46 plus the 4 stalest driver-green
-    # queries (r1-only evidence) so that after r5 ZERO catalog queries lack
-    # driver evidence.  Three of the 46 (agg_approx_distinct,
-    # agg_approx_quantiles) are by-design rows-only sketch checks;
-    # text_bpe_train gained an exact unrolled-CTE oracle this round.
-    #
-    # -- the 46 never-driver-verified queries --
-    "agg_approx_distinct", "agg_approx_quantiles", "agg_dedup_edges_last_wins",
-    "agg_heavy_hitters_cms", "agg_unpivot_long", "ddl_database_graph",
-    "dedup_bloom_screen", "dedup_embedding_clustered",
-    "dedup_fuzzy_levenshtein", "dedup_keep_best_quality",
+    "eval_meteor_parts", "eval_precision_recall_hits", "stream_ks_maintain",
+    "multimodal_audio_energy", "stream_spearman_maintain", "temporal_acf_profile",
+    "text_kneser_ney_counts", "stream_acf_maintain", "stream_kneser_ney_maintain",
+    "text_good_turing_counts", "similarity_topk", "sink_graph_upsert",
+    "sink_side_output_deprecated", "sink_zorder_cluster", "source_http_versioned",
+    "stream_cdc_apply", "stream_dedup_watermark", "text_bm25_topk",
+    "text_inverted_index", "text_tokenize_stats", "window_last_wins",
+    "window_rank_topk", "window_running_sum", "window_sessionize",
+    "agg_bitmap_distinct", "agg_cube", "agg_distinct_exact_twin", "agg_grouping_sets",
+    "agg_pivot_wide", "agg_quantiles", "agg_salted_hot_key", "cluster_kmeans",
+    "dedup_containment", "dedup_ngram_jaccard", "dedup_pipeline_keep_canonical",
+    "dedup_simhash", "dedup_url_canonicalize", "fn_contains", "fn_doc_collection_name",
+    "fn_doc_key", "fn_make_vertex_id", "fn_pred_last_path", "fn_term_split",
+    "fn_uri_basename", "fn_uri_fragment", "fn_uri_rewrite_special", "fn_version_newer",
+    # ---- end of the 50-entry gate prefix ----
+    "graph_closure", "graph_triangle_count", "join_asof_events", "join_salted_skew",
+    "multimodal_columns", "profile_numeric", "sample_weighted", "similarity_ann_ivf",
+    "similarity_ann_ivf_kmeans", "similarity_ann_recall", "stream_dedup_vs_corpus",
+    "stream_file_source", "stream_graph_upsert", "stream_index_maintain",
+    "stream_join_dim", "stream_split_route", "stream_stateful_totals",
+    "stream_stream_join", "stream_time_rollup", "stream_window_session",
+    "stream_window_sliding", "stream_window_tumbling", "text_fingerprint",
+    "text_index_positions", "text_pii_redact", "udf_surface",
+    "agg_dedup_edges_last_wins", "agg_heavy_hitters_cms", "agg_unpivot_long",
+    "ddl_database_graph", "dedup_bloom_screen", "dedup_embedding_clustered",
+    "dedup_fuzzy_levenshtein", "dedup_keep_best_quality", "dedup_minhash_lsh_capped",
     "dedup_substring_spans", "filter_outlier_mad", "filter_quality_percentile",
     "graph_bfs_distance", "interleave_weighted", "join_asof_forward",
     "join_bloom_prefilter", "multimodal_decode_stub", "multimodal_frame_sample",
-    "multimodal_resize", "pack_sequences", "sample_cap_per_group",
-    "sample_stratified", "shard_assign", "similarity_topk_vectorized",
-    "sink_bucketed_table", "sink_compact", "sink_range_sharded",
-    "stream_ann_index_maintain", "stream_bloom_screen", "temporal_ema_smooth",
-    "temporal_gap_fill", "text_bpe_encode", "text_bpe_pair_counts",
-    "text_bpe_train", "text_c4_line_filter", "text_chunk_split",
-    "text_edge_ngram_analyzer", "text_inverted_index_capped",
+    "multimodal_resize", "pack_sequences", "sample_cap_per_group", "sample_stratified",
+    "scan_dir_regex", "graph_louvain_rounds", "pack_sequences_bpe", "text_chrf_parts",
+    "stream_chrf_maintain", "eval_rouge_l", "eval_isotonic_calibration",
+    "graph_louvain_two_level", "stream_isotonic_maintain", "dedup_simhash_multiprobe",
+    "quality_referential_integrity", "stream_referential_maintain",
+    "window_sessionize_gap_sweep", "multimodal_scene_boundaries",
+    "graph_coreness_bounded", "dedup_embedding_cosine", "project_triple_nodes",
+    "sort_by_key", "agg_bitmap_overlap", "agg_dedup_edges", "agg_first_fallback_rootns",
+    "agg_funnel_steps", "agg_incremental_maintain", "agg_pivot_vertex_attrs",
+    "agg_retention_cohort", "agg_time_rollup", "cdc_snapshot_diff",
+    "contamination_ngram", "dedup_connected_components", "dedup_incremental_lsh",
+    "dedup_minhash_lsh", "extract_triples_owl", "filter_deprecated_obsolete",
+    "filter_predicate_ns_whitelist", "filter_valid_triple", "graph_build_edges",
+    "graph_build_vertices", "graph_pagerank", "join_anti_new_only",
+    "join_flatten_restriction", "join_range_interval", "join_upsert",
+    "join_upsert_scd2", "multimodal_feature_extract", "pack_sequences_greedy",
+    "pipeline_incremental_graph", "pipeline_two_pass", "quality_expectations",
+    "scan_xml_elements", "setop_intersect_except", "similarity_ann_lsh",
+    "dedup_minhash_weighted_capped", "similarity_range_search_routed",
+    "temporal_max_drawdown", "stream_drawdown_maintain", "temporal_changepoint_pettitt",
+    "eval_bleu_ngram_precision", "quality_functional_dependency",
+    "quality_uniqueness_profile", "quality_value_length_profile",
+    "text_boilerplate_census", "shard_assign_lpt", "text_vocab_coverage",
+    "multimodal_metadata_profile", "temporal_seasonality_strength",
+    "eval_snips_offpolicy", "graph_bipartite_projection_capped",
+    "stream_vocab_coverage_maintain", "eval_krippendorff_alpha", "graph_louvain_move",
+    "sketch_kmv_difference", "filter_outlier_iqr", "temporal_snaive_backtest",
+    "eval_mcc_parts", "profile_correlation_pairs", "stream_snips_maintain",
+    "stream_iqr_maintain", "similarity_range_search", "dedup_minhash_weighted",
+    "pack_sequences_ffd", "quality_schema_drift", "temporal_rate_shift_audit",
+    "sample_group_kfold", "contamination_substring_scan",
+    "stream_expectations_maintain", "stream_schema_drift_maintain",
+    "quality_column_collision_profile", "agg_weighted_median", "pairs_hard_negatives",
+    "eval_threshold_best_f1", "agg_mode_per_group", "sample_balanced_downsample",
+    "text_ngram_novelty_profile", "stream_weighted_median_maintain",
+    "sketch_kmv_distinct", "sketch_kmv_intersection", "stream_kmv_maintain",
+    "temporal_twap", "stream_novelty_maintain", "temporal_median_decompose",
+    "eval_auc_delong_var", "cdc_chunks_capped", "dedup_remove_segments",
+    "sample_repeat_temperature", "similarity_maxsim_trained_recall",
+    "fn_json_extract_agg", "semistructured_keys_profile", "stream_ohlc",
+    "stream_maxsim_maintain", "profile_topk_values", "temporal_rolling_anomaly",
+    "dedup_exact_normalized", "text_code_detector", "text_readability_stats",
+    "sample_recency_decay", "quality_freshness_profile", "temporal_new_entity_curve",
+    "graph_random_walks", "agg_session_paths", "graph_walk_skipgram_pairs",
+    "sample_class_weights", "embedding_distance_histogram", "temporal_autocorr_lag1",
+    "agg_attribution_models", "temporal_activity_heatmap", "sample_split_chronological",
+    "quality_split_balance", "graph_biased_walks", "embedding_farthest_point_init",
+    "temporal_local_peaks", "cluster_kmeans_inertia_ab",
+    "agg_attribution_lookback_sweep", "embedding_label_separation",
+    "join_point_in_time_features", "quality_split_leakage", "fn_target_encode_oof",
+    "temporal_growth_accounting", "eval_feature_chi2_cells", "text_char_diversity",
+    "pairs_contrastive_dataset", "dedup_cluster_size_profile", "text_mojibake_detector",
+    "dedup_blocker_union_audit", "embedding_dim_minmax_params", "temporal_dwell_time",
+    "join_interval_overlap_duration", "sample_rolling_origin_folds",
+    "graph_degree_gini", "text_sentence_repetition", "quality_event_order_audit",
+    "graph_modularity_audit", "eval_kendall_tau_full", "eval_kendall_tau_bucketed",
+    "sample_allocation_largest_remainder", "stream_allocation_maintain",
+    "pq_train_codebooks", "graph_dag_lca_frontier", "quality_seasonal_null_audit",
+    "temporal_ewma_crossover", "graph_reciprocity", "agg_log_histogram",
+    "text_hapax_ratio", "sample_inverse_propensity", "eval_lift_at_k",
+    "join_nearest_value", "dedup_sequence_fingerprint", "stream_reciprocity_maintain",
+    "eval_cindex", "graph_dag_path_count", "stream_hapax_maintain",
+    "temporal_kaplan_meier", "stream_seasonal_null_maintain", "eval_cindex_full",
+    "quality_k_anonymity", "stream_kaplan_meier_maintain",
+    "graph_harmonic_centrality_bounded", "eval_brier_decomposition",
+    "temporal_velocity_profile", "stream_velocity_maintain", "quality_langid_confusion",
+    "eval_binary_detector_metrics", "temporal_wow_growth", "graph_two_hop_reach",
+    "quality_duplication_scorecard", "agg_aging_buckets", "join_asof_tolerance",
+    "text_burstiness_profile", "multimodal_frame_dedup", "agg_association_rules",
+    "agg_session_bounce", "agg_pivot_topk_other", "sample_bootstrap_poisson",
+    "quality_ab_chi2_parts", "temporal_downsample_ltb", "quality_sequence_gaps",
+    "dedup_lsh_banding_audit", "temporal_interval_coalesce", "dedup_phonetic_blocking",
+    "graph_degree_stats", "window_distribution", "eval_uplift_qini", "eval_uplift_auuc",
+    "eval_brier_score", "graph_scc", "graph_dag_depth", "eval_spearman_rescaled",
+    "graph_condensation", "graph_scc_fb", "stream_uplift_maintain",
+    "fn_sft_render_spans", "eval_pr_curve", "eval_average_precision",
+    "eval_pairwise_winrate", "pairs_dpo_dataset", "pack_attention_spans",
+    "fn_chat_truncate_budget", "profile_moments", "graph_dag_depth_frontier",
+    "stream_pr_curve_maintain", "graph_dag_lca_similarity", "eval_wilcoxon_signed_rank",
+    "graph_betweenness_bounded", "eval_rank_biased_overlap",
+    "graph_eccentricity_bounded", "temporal_holt_linear", "sample_systematic_interval",
+    "eval_friedman_ranks", "eval_cochran_q", "eval_spearman_rank", "eval_kendall_tau",
+    "eval_mcnemar", "eval_gains_deciles", "graph_kcore", "text_lm_bigram_score",
+    "join_asof_nearest", "graph_label_propagation", "temporal_ohlc",
+    "join_interval_overlap", "text_collocations_pmi", "graph_common_neighbors",
+    "similarity_maxsim", "similarity_maxsim_routed", "similarity_maxsim_routed_vec",
+    "similarity_maxsim_recall", "embedding_mrl_recall", "agg_bitmap_sliding_distinct",
+    "multimodal_cdc_chunks", "multimodal_cdc_chunks_arrow",
+    "stream_cdc_dedup_vs_corpus", "agg_markov_stationary", "eval_calibration_ece",
+    "eval_calibration_bins", "agg_hist_equi_depth", "agg_lorenz_curve",
+    "agg_approx_distinct", "agg_approx_quantiles", "similarity_topk_routed",
+    "stream_drift_monitor", "text_keyword_rake", "stream_skyline_maintain",
+    "join_band_bucketed", "window_streak_islands", "temporal_cusum_changepoint",
+    "agg_attribution_linear", "graph_resource_allocation", "agg_gini_concentration",
+    "agg_hhi_concentration", "quality_benford", "stream_benford_maintain",
+    "join_star_revenue_rollup", "graph_jaccard_neighbors", "temporal_seasonal_profile",
+    "text_tfidf_topk", "text_zipf_rank", "temporal_markov_transitions",
+    "dedup_sorted_neighborhood", "text_vocab_growth", "stream_star_rollup_maintain",
+    "graph_clustering_coefficient", "quality_completeness_profile",
+    "agg_pareto_coverage", "embedding_norm_profile", "agg_funnel_time_to_convert",
+    "dedup_minhash_estimate_audit", "graph_ktruss", "stream_markov_maintain",
+    "stream_tfidf_maintain", "sample_negatives_hash", "temporal_interarrival_profile",
+    "agg_rfm_scores", "graph_degree_assortativity", "multimodal_dedup_exact",
+    "temporal_event_trigrams", "agg_cohort_ltv", "stream_interarrival_maintain",
+    "eval_auc_rank", "eval_ranking_ndcg", "similarity_rrf_fusion", "fn_feature_hashing",
+    "eval_ab_cuped", "temporal_survival_hazard", "graph_ppr_seeded",
+    "pack_efficiency_audit", "quality_lexicon_screen", "embedding_jl_recall",
+    "embedding_isotropy_probe", "sink_manifest_skipping", "eval_welch_ttest",
+    "agg_bayes_shrunk_rate", "quality_cross_source_dup", "eval_reco_diversity",
+    "stream_manifest_maintain", "join_spatial_grid", "graph_sssp_weighted",
+    "eval_regression_metrics", "sample_token_budget_mix", "quality_parity_audit",
+    "contamination_filter_train", "eval_bootstrap_ci", "eval_ks_two_sample",
+    "temporal_mann_kendall", "agg_winsorized_mean", "eval_knn_probe",
+    "temporal_theil_sen", "eval_cohens_kappa", "source_jsonl_corrupt_routing",
+    "fn_label_lang_fallback", "quality_typed_literals", "scan_rdf_triples",
+    "scan_rdf_triples_split", "text_search_stemmed", "text_view_four_analyzers",
+    "similarity_ivf_pq_recall", "similarity_opq_recall", "stream_session_eviction",
+    "skyline_pareto", "join_set_similarity_prefix", "graph_hits", "agg_drift_tvd",
+    "window_rolling_median", "similarity_pq_adc", "similarity_pq_rerank",
+    "similarity_ivf_pq", "similarity_pq_recall", "similarity_hamming_topk",
+    "similarity_hamming_rerank", "stream_pq_encode_maintain", "sample_split_by_group",
+    "similarity_pq_trained", "stream_ivf_pq_maintain", "sample_source_sqrt",
+    "similarity_hamming_recall", "similarity_ivf_pq_routed", "stream_ivf_pq_serve",
+    "agg_pivot_vertex_attrs_capped", "owl_graph_end_to_end", "agg_collect_edge_labels",
+    "agg_count_metrics", "agg_distinct_vertices", "filter_isin_valid_vertices",
+    "filter_object_is_literal", "filter_root_ns_class", "filter_skip_file",
+    "fn_doc_id_helpers", "fn_extract_version_date", "fn_json_config",
+    "fn_normalize_edge_label", "fn_normalize_edge_source", "join_semi_edge_endpoints",
+    "scan_ontology_meta", "scan_term_prefixes", "setop_union_files",
+    "setop_union_label_sets", "sink_jsonl_export", "sink_side_output_edge_labels",
+    "agg_distinct_triples", "dedup_exact_hash", "embedding_quantize", "fn_uri_parse",
+    "fn_vtuple", "join_ro_label_lookup", "sample_split_hash", "text_lang_id",
+    "text_phrase_search", "text_quality_score", "shard_assign", "sink_bucketed_table",
+    "sink_compact", "sink_range_sharded", "stream_ann_index_maintain",
+    "stream_bloom_screen", "temporal_ema_smooth", "temporal_gap_fill",
+    "text_bpe_encode", "text_bpe_pair_counts", "text_bpe_train", "text_c4_line_filter",
+    "text_chunk_split", "text_edge_ngram_analyzer", "text_inverted_index_capped",
     "text_inverted_index_view", "text_lm_quality_score", "text_ngram_analyzer",
-    "text_repetition_filter", "text_search_ddl", "udf_grouped_agg",
-    "window_analytics",
-    # -- 3 queries NEW in round 5 (routed ANN serving per VERDICT r4 #2,
-    # skew-capped pivot per #7, stop-template LSH cap per #4) so they get
-    # driver evidence immediately --
+    "text_repetition_filter", "text_search_ddl", "udf_grouped_agg", "window_analytics",
     "similarity_ann_ivf_routed",
-    "dedup_minhash_lsh_capped",
-    # -- 1 stalest driver-green row (r1-only evidence) to refresh recency --
-    "scan_dir_regex",
-    # ROUND-6 ROTATION PLAN: after this gate runs, the only catalog queries
-    # without driver evidence will be the EIGHT round-5 late additions —
-    # similarity_pq_adc, similarity_pq_rerank, similarity_ivf_pq,
-    # similarity_pq_recall, similarity_hamming_topk,
-    # similarity_hamming_rerank, stream_pq_encode_maintain,
-    # sample_split_by_group (all hash-green
-    # locally in CORRECTNESS_LOCAL_r05.json; the PQ/Hamming block also
-    # under the ansi/tz/local-cluster sweeps, SCALE.md §round-5-sweeps) —
-    # rotate exactly those into the r6 prefix, then backfill the remaining
-    # ~43 slots with the stalest driver-green rows (r1-only evidence
-    # first).
-    # ------------------------------------------------------------------
-    # Below this line: the round-4 prefix, kept for stable ordering of the
-    # unfenced remainder (every query below is driver-green in
-    # CORRECTNESS_r0{1..4}.json and re-verified locally each round).
-    #
-    # ROUND 4 ROTATION (VERDICT.md r3, "Next round: do this" #1): across
-    # rounds 1-3 the driver directly verified 83 of the 154 catalog queries;
-    # the other 71 were only ever green under the builder's local run of the
-    # same checker (CORRECTNESS_LOCAL_r0{2,3}.json).  This round the entire
-    # 50-slot gated prefix is given to never-driver-verified queries so the
-    # hard signal covers them: all 12 remaining stream_* queries, the k-means
-    # + IVF ANN surface, graph analytics, the fn_* scalar micro-queries, the
-    # remaining dedup/agg/text families, and the two new round-4 queries
-    # (split OWL parse, ANN recall harness).  Every query rotated OUT of the
-    # prefix is driver-green in CORRECTNESS_r0{1,2,3}.json and stays verified
-    # in the local full-catalog artifact (CORRECTNESS_LOCAL_r04.json, same
-    # checker tools/check_correctness.py).
-    #
-    # ROUND-5 ROTATION PLAN (precomputed this round): after r4's gate runs,
-    # 47 catalog queries will still lack driver evidence — rotate
-    # THEM into the front of the r5 prefix: the round-4 late additions
-    # (temporal_gap_fill, agg_unpivot_long, dedup_fuzzy_levenshtein,
-    # graph_bfs_distance, dedup_substring_spans, dedup_embedding_clustered,
-    # agg_approx_quantiles, stream_ann_index_maintain, sink_bucketed_table,
-    # sink_compact, text_inverted_index_capped, udf_grouped_agg,
-    # multimodal_decode_stub/frame_sample/resize, window_analytics,
-    # agg_dedup_edges_last_wins, agg_approx_distinct, and the third-block
-    # additions join_bloom_prefilter, agg_heavy_hitters_cms,
-    # text_chunk_split, filter_outlier_mad, dedup_bloom_screen,
-    # stream_bloom_screen, text_bpe_pair_counts, text_bpe_train,
-    # text_bpe_encode, text_lm_quality_score, similarity_topk_vectorized,
-    # dedup_keep_best_quality, temporal_ema_smooth, join_asof_forward)
-    # plus the 14 remaining
-    # r1-r3 locals (ddl_database_graph, filter_quality_percentile,
-    # interleave_weighted, pack_sequences, sample_cap_per_group,
-    # sample_stratified, shard_assign, sink_range_sharded,
-    # text_c4_line_filter, text_edge_ngram_analyzer, text_inverted_index_view,
-    # text_ngram_analyzer, text_repetition_filter, text_search_ddl) — then
-    # fill the remaining ~18 slots with the oldest driver-green queries
-    # (r1 evidence only) so recency stays fresh.
-    #
-    # new in round 4 (never seen by any gate before)
-    "similarity_ann_recall",
-    # streaming (§2.11) — the entire family had zero driver evidence
-    "stream_file_source", "stream_window_tumbling", "stream_window_sliding",
-    "stream_window_session", "stream_stateful_totals", "stream_join_dim",
-    "stream_stream_join", "stream_graph_upsert", "stream_index_maintain",
-    "stream_dedup_vs_corpus", "stream_split_route", "stream_time_rollup",
-    # clustering / ANN / graph analytics / profiling (VERDICT #1 call-outs)
-    "cluster_kmeans", "similarity_ann_ivf", "similarity_ann_ivf_kmeans",
-    "graph_triangle_count", "graph_closure", "agg_bitmap_distinct",
-    "profile_numeric", "sample_weighted",
-    # scalar-function micro-queries (§2.8)
-    "fn_uri_basename", "fn_uri_fragment", "fn_pred_last_path",
-    "fn_term_split", "fn_uri_rewrite_special", "fn_make_vertex_id",
-    "fn_doc_collection_name", "fn_doc_key", "fn_contains", "fn_version_newer",
-    # joins / skew patterns (§2.3, §2.12)
-    "join_asof_events", "join_salted_skew",
-    # aggregations (§2.4) — rollup/cube/pivot/quantiles/skew-salted
-    "agg_grouping_sets", "agg_cube", "agg_pivot_wide", "agg_quantiles",
-    "agg_salted_hot_key", "agg_distinct_exact_twin",
-    # dedup family (§2.12) — simhash/jaccard/containment/url/pipeline
-    "dedup_simhash", "dedup_ngram_jaccard", "dedup_containment",
-    "dedup_url_canonicalize", "dedup_pipeline_keep_canonical",
-    # text analysis / search internals (§2.9, §2.12)
-    "text_fingerprint", "text_index_positions", "text_pii_redact",
-    # multimodal + UDF surface (§2.12)
-    "multimodal_columns", "udf_surface",
 ]
 
 

@@ -7,8 +7,9 @@ Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Queries are the engine's heavy paths: scan+agg, broadcast join + top-k,
 triples-shaped dedup+pivot, MinHash LSH (uncapped continuity row + the
 stop-template capped twin), the full ANN ladder on the shared 80k corpus
-(brute expression + numpy twin, IVF serving, cogroup-routed serving at
-|Q|=10k, PQ shortlist+rerank, binary Hamming scan), windowed running sums,
+(brute-force double and quantized cosine through the routed top-k kernel,
+IVF serving, cogroup-routed serving at |Q|=10k, routed IVF-PQ, PQ
+shortlist+rerank, binary Hamming scan), windowed running sums,
 as-of join, inverted/positional indexes, BM25, training curation, CDC,
 graph analytics, and the flagship ontology build.  Results are
 materialized with the noop sink so timings measure full compute without
@@ -213,11 +214,10 @@ def cosine_topk_80k(spark):
 
 def cosine_topk_80k_vec(spark):
     """Routed-cogroup brute twin of cosine_topk_80k (quantized; gate- and
-    test-proven bit-identical to the expression path AND the old
-    driver-collect vectorized twin): hash-blocked targets × block-
-    replicated queries, one int64 matmul per block — NO driver collect on
-    either side (VERDICT r7 #2; the collect-based cosine_topk_vectorized
-    stays as the guarded |Q|≪|T| audit tier)."""
+    test-proven bit-identical to similarity_topk(quantized=True), the
+    catalog row similarity_topk_routed): hash-blocked targets × block-
+    replicated queries, one int64 matmul per block through routed_topk —
+    NO driver collect on either side (VERDICT r7 #2)."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed,
     )
@@ -373,10 +373,10 @@ def ann_ivf_routed_10k(spark):
     """Large-batch IVF serving (VERDICT r4 #2): |Q| = 10,000 queries against
     the same prebuilt 80k-corpus index via ivf_topk_prebuilt_routed — the
     fully-distributed cogroup path with NO driver collect of the query side.
-    At this batch size the collect-based vectorized twin would ship a
-    10k x 64 matrix (plus a 10k-entry routing dict) through the driver; the
-    routed path keeps routing as a cell-keyed join and scores each cell with
-    one executor-side matmul.  Bit-identity to ivf_topk_prebuilt at this
+    A driver-collect design would ship a 10k x 64 matrix (plus a 10k-entry
+    routing dict) through the driver; the routed path emits each query's
+    vector from the probe map and scores each cell with one executor-side
+    matmul.  Bit-identity to ivf_topk_prebuilt at this
     exact shape is asserted by tools/verify_routed_ann.py (run once per
     round; recorded in SCALE.md)."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (

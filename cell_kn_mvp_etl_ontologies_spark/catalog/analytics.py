@@ -829,39 +829,9 @@ def text_lm_quality_score_q(spark, sf_dir):
     return unigram_lm_scores(docs, "text", "doc_id")
 
 
-# --------------------------------------------------------------------------
-# similarity_topk_vectorized — numpy twin of the expression-path brute force
-# --------------------------------------------------------------------------
-def _register_similarity_topk_vectorized():
-    # reuse the exact oracle of similarity_topk: passing the SAME SQL proves
-    # the Arrow/numpy path is bit-identical to the expression path's contract
-    from . import ORACLES
-
-    @register("similarity_topk_vectorized", oracle=ORACLES["similarity_topk"])
-    def similarity_topk_vectorized_q(spark, sf_dir):
-        """Arrow-batched numpy brute-force cosine top-k (operators/
-        similarity.py cosine_topk_vectorized) on the identical workload and
-        oracle as similarity_topk — the gate pins bit-identity between the
-        interpreted higher-order-function path and the vectorized matmul
-        path (quantized ints + one IEEE-shaped float division each)."""
-        from ..operators.similarity import cosine_topk_vectorized
-
-        em = (
-            _t(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") < 200)
-            .select("vec_id", "embedding")
-        )
-        q = em.filter(F.col("vec_id") < 10)
-        out = cosine_topk_vectorized(q, em, k=5)
-        return out.select("q_id", "t_id", "cos", F.col("rnk").cast("long").alias("rnk"))
-
-
-_register_similarity_topk_vectorized()
-
-
 def _register_similarity_topk_routed():
-    # same oracle a third time: expression path, driver-collect vectorized
-    # twin, and the fully-routed cogroup all pin to one SQL contract
+    # same oracle as similarity_topk: the expression path and the routed
+    # cogroup both pin to one SQL contract
     from . import ORACLES
 
     @register("similarity_topk_routed", oracle=ORACLES["similarity_topk"])
@@ -870,9 +840,8 @@ def _register_similarity_topk_routed():
         (operators/similarity.py cosine_topk_routed): hash-blocked targets
         cogrouped with block-replicated queries — ZERO driver collect on
         either side, the production serving shape of the brute tier
-        (VERDICT r7 #2).  Same workload and oracle as similarity_topk /
-        similarity_topk_vectorized, so the gate pins all three forms to
-        one SQL contract."""
+        (VERDICT r7 #2).  Same workload and oracle as similarity_topk,
+        so the gate pins both forms to one SQL contract."""
         from ..operators.similarity import cosine_topk_routed
 
         em = (

@@ -42,7 +42,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import quantize_np, quantize_vec, sq_dist_long as _sq_dist
+from .similarity import (
+    TopkKernel,
+    _cos_quantized,
+    _ivf_route,
+    _pa_list_matrix,
+    _quantized_side,
+    quantize_np,
+    quantize_vec,
+    routed_topk,
+    sq_dist_long as _sq_dist,
+)
 from .windows import window_rank_topk
 
 
@@ -168,6 +178,35 @@ def pq_encode(
     ).select(F.col("id").alias("t_id"), "codes")
 
 
+def _collect_codebooks(codebooks: DataFrame):
+    """Codebooks collected driver-side — m·ksub rows, the KB-scale
+    always-legal collect — as ({sub: (ksub, subdim) int64 codewords},
+    {sub: their cells}), each subspace in ascending cell order so numpy's
+    first-minimum ``argmin`` IS the (dist ASC, cell ASC) tie-break and a
+    ``searchsorted`` maps a code to its codeword row."""
+    import numpy as np
+
+    from .guards import check_driver_bound
+
+    crows = codebooks.select("sub", "cell", "cv").collect()
+    check_driver_bound(
+        len(crows),
+        1_048_576,
+        "pq codebook driver collect (m·ksub rows)",
+        "a smaller codebook (m·ksub beyond 2^20 entries is no longer the "
+        "KB-scale always-legal collect this path assumes)",
+    )
+    by_sub: dict[int, list] = {}
+    for r in crows:
+        by_sub.setdefault(int(r.sub), []).append((int(r.cell), list(r.cv)))
+    C, cell_order = {}, {}
+    for sub, rows_ in by_sub.items():
+        rows_.sort()
+        cell_order[sub] = np.array([c for c, _ in rows_], dtype=np.int64)
+        C[sub] = np.array([v for _, v in rows_], dtype=np.int64)
+    return C, cell_order
+
+
 def pq_encode_vectorized(
     df: DataFrame,
     codebooks: DataFrame,
@@ -192,24 +231,7 @@ def pq_encode_vectorized(
     import numpy as np
     import pandas as pd
 
-    crows = codebooks.select("sub", "cell", "cv").collect()
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        len(crows),
-        1_048_576,
-        "pq codebook driver collect (m·ksub rows)",
-        "a smaller codebook (m·ksub beyond 2^20 entries is no longer the "
-        "KB-scale always-legal collect this path assumes)",
-    )
-    by_sub: dict[int, list] = {}
-    for r in crows:
-        by_sub.setdefault(int(r.sub), []).append((int(r.cell), list(r.cv)))
-    C, cell_order = {}, {}
-    for sub, rows_ in by_sub.items():
-        rows_.sort()  # ascending cell -> argmin's first-min IS the tie-break
-        cell_order[sub] = np.array([c for c, _ in rows_], dtype=np.int64)
-        C[sub] = np.array([v for _, v in rows_], dtype=np.int64)
+    C, cell_order = _collect_codebooks(codebooks)
     subdim = C[0].shape[1]
 
     def encode(batches):
@@ -412,26 +434,13 @@ def hamming_rerank_topk(
     Output: (q_id, t_id, cos, rnk) by exact quantized cosine DESC, t_id
     ASC — the same final order as ``similarity_topk(quantized=True)``, so
     recall against it is purely a question of shortlist coverage."""
-    from .similarity import _dot_long
-
     short = hamming_topk(queries, corpus, shortlist, id_col, vec_col).select(
         "q_id", "t_id"
     )
-    t = corpus.select(
-        F.col(id_col).alias("t_id"), quantize_vec(F.col(vec_col), scale).alias("vb")
-    ).withColumn("t_norm", _dot_long(F.col("vb"), F.col("vb")))
-    q = queries.select(
-        F.col(id_col).alias("q_id"), quantize_vec(F.col(vec_col), scale).alias("va")
-    ).withColumn("q_norm", _dot_long(F.col("va"), F.col("va")))
+    t = _quantized_side(corpus, "t_id", "t", scale, id_col, vec_col)
+    q = _quantized_side(queries, "q_id", "q", scale, id_col, vec_col)
     cand = short.join(t, on="t_id").join(F.broadcast(q), on="q_id")
-    scored = cand.select(
-        "q_id",
-        "t_id",
-        (
-            _dot_long(F.col("va"), F.col("vb")).cast("double")
-            / F.sqrt(F.col("q_norm").cast("double") * F.col("t_norm").cast("double"))
-        ).alias("cos"),
-    )
+    scored = cand.select("q_id", "t_id", _cos_quantized("q", "t").alias("cos"))
     return window_rank_topk(
         scored, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
     )
@@ -671,6 +680,44 @@ def ivf_pq_topk(
     return _adc_sum_topk(sub_scores, m, k)
 
 
+def _adc_kernel(codebooks: DataFrame, m: int) -> TopkKernel:
+    """The ADC kernel of ``ivf_pq_topk_routed``: (n_t, n_q) int64 ADC
+    distances of a cell's members' ``codes`` to its queries' ``q_vec``.
+    Each query's lookup table (m·ksub squared-L2 entries) comes from one
+    broadcast subtract per subspace, and each member's m codes gather
+    through it — exact int64 throughout, never a decoded vector."""
+    import numpy as np
+
+    C, cell_order = _collect_codebooks(codebooks)
+    if sorted(C) != list(range(m)):
+        raise ValueError(f"ivf_pq_topk_routed: codebooks cover subs {sorted(C)}, want 0..{m - 1}")
+    subdim = C[0].shape[1]
+
+    def score(mem, qs):
+        codes = _pa_list_matrix(mem.column("codes"), np).astype(np.int64)  # (n_t, m)
+        if codes.shape[1] != m:
+            raise ValueError(f"ivf_pq_topk_routed: codes width {codes.shape[1]} != m={m}")
+        Q = _pa_list_matrix(qs.column("q_vec"), np)
+        adc = np.zeros((codes.shape[0], Q.shape[0]), dtype=np.int64)
+        for s in range(m):
+            # code -> codebook row, via searchsorted on the sorted cells;
+            # clip + verify so a corrupt code (not a codebook cell) fails
+            # the task loudly instead of gathering a neighbor's distance
+            idx = np.clip(np.searchsorted(cell_order[s], codes[:, s]), 0, cell_order[s].size - 1)
+            if not np.array_equal(cell_order[s][idx], codes[:, s]):
+                bad = codes[:, s][cell_order[s][idx] != codes[:, s]][0]
+                raise ValueError(
+                    f"ivf_pq_topk_routed: code {int(bad)} in subspace {s} "
+                    "is not a codebook cell"
+                )
+            diff = Q[:, None, s * subdim:(s + 1) * subdim] - C[s][None, :, :]
+            lut = np.einsum("qkd,qkd->qk", diff, diff)          # (n_q, ksub)
+            adc += lut[:, idx].T                                # (n_t, n_q)
+        return adc
+
+    return TopkKernel(score, "adc_dist", "long", descending=False)
+
+
 def ivf_pq_topk_routed(
     queries: DataFrame,
     index_codes: DataFrame,
@@ -682,147 +729,28 @@ def ivf_pq_topk_routed(
     scale: int = 1000,
 ) -> DataFrame:
     """Fully-distributed IVF-PQ serving — the cogrouped-ADC analogue of
-    ``ivf_topk_prebuilt_routed`` (which carried full vectors): queries stay
-    a DataFrame end-to-end, each probed cell's CODES meet its probing
-    queries on the executor, and scoring is a per-cell numpy LUT build +
-    int64 gather-sum — never a driver collect of anything query- or
-    corpus-sized, never a decoded corpus vector.
+    ``ivf_topk_prebuilt_routed`` (which carries full vectors): the same
+    probe map routes each query's quantized vector to its probed cells,
+    and ``routed_topk`` scores each cell's CODES against its probing
+    queries with the ADC kernel (``_adc_kernel``) — never a driver collect
+    of anything query- or corpus-sized, never a decoded corpus vector.
 
     ``index_codes`` is the offline artifact ``stream_ivf_pq_maintain``
     maintains and the batch build produces: (cell, t_id, codes ARRAY<INT>)
     — the prebuilt (corpus_cells ⨝ codes) pair in one frame, partitionable
-    by cell.  Per cell the task computes each probing query's ADC lookup
-    table (m·ksub int64 squared-L2 entries — KBs), gathers each member's m
-    codes through it, and emits a local top-k under the final total order
-    (adc ASC, t_id ASC); a global window refines (each t_id lives in
-    exactly one cell, so per-cell candidates are duplicate-free and the
-    union-of-local-top-k property holds per query).
+    by cell.  Ranking is (adc ASC, t_id ASC).
 
     Exactness: queries quantize via the expression path (``quantize_vec``,
     ONE rounding mode in play), LUT entries and sums are int64 — so the
-    output is bit-identical to ``ivf_pq_topk`` (pinned by test and by the
-    shared catalog oracle).  Codebooks are collected driver-side: m·ksub
-    rows, the always-legal KB-scale collect.
+    output is bit-identical to ``ivf_pq_topk``, pinned by
+    tests/test_pq.py::test_ivf_pq_routed_bit_identical_to_expression_path
+    and by the shared catalog oracle.
 
     Shuffle shape: one exchange of the routed queries on cell + one of the
     code index on cell (free when the index is written partitioned by
     cell).  A hot cell degrades to one long task, never a failure — the
     measured doctrine of SCALE.md §hot-cell; mitigation is k_cells at
     build time."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .similarity import ivf_assign_vectorized
-
-    crows = codebooks.select("sub", "cell", "cv").collect()
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        len(crows),
-        1_048_576,
-        "pq codebook driver collect (m·ksub rows)",
-        "a smaller codebook (m·ksub beyond 2^20 entries is no longer the "
-        "KB-scale always-legal collect this path assumes)",
-    )
-    by_sub: dict[int, list] = {}
-    for r in crows:
-        by_sub.setdefault(int(r.sub), []).append((int(r.cell), list(r.cv)))
-    C, cell_order = {}, {}
-    for sub, rows_ in by_sub.items():
-        rows_.sort()
-        cell_order[sub] = np.array([c for c, _ in rows_], dtype=np.int64)
-        C[sub] = np.array([v for _, v in rows_], dtype=np.int64)
-    if sorted(C) != list(range(m)):
-        raise ValueError(f"ivf_pq_topk_routed: codebooks cover subs {sorted(C)}, want 0..{m - 1}")
-    subdim = C[0].shape[1]
-
-    probe = ivf_assign_vectorized(queries, centroids, nprobe=nprobe, scale=scale).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), quantize_vec(F.col("embedding"), scale).alias("q_vec")
-    )
-    # BROADCAST the quantized query batch into the routing join (round 15,
-    # guide §3.1 — same move and same serving-contract budget argument as
-    # ivf_topk_prebuilt_routed): without the hint the planner sort-merge
-    # joined the two query-scale frames (two exchanges + two sorts per
-    # serve) just to attach the query vectors to their probe rows.
-    routed = probe.join(F.broadcast(q), on="q_id").select("cell", "q_id", "q_vec")
+    kernel = _adc_kernel(codebooks, m)
     members = index_codes.select("cell", "t_id", "codes")
-
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "adc_dist": pa.array([], pa.int64()),
-        }
-    )
-
-    # Arrow-native cogroup scorer (round 15 — the same §4.2 boundary fix as
-    # _block_cogroup_scorer_arrow): the codes and q_vec list columns cross
-    # the Python boundary as flat buffers (_pa_list_matrix) instead of being
-    # boxed into object-dtype pandas columns one numpy array per row.  The
-    # numpy core below is byte-for-byte the pandas twin's (searchsorted code
-    # verify, per-subspace broadcast-subtract LUTs, grouped_topk_indices),
-    # so results stay bit-identical to ivf_pq_topk.
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        from .similarity import _pa_list_matrix
-
-        t_ids = mem.column("t_id").to_numpy()
-        codes = _pa_list_matrix(mem.column("codes"), np).astype(np.int64)  # (n_t, m)
-        if codes.shape[1] != m:
-            raise ValueError(f"ivf_pq_topk_routed: codes width {codes.shape[1]} != m={m}")
-        # code value -> codebook row, via searchsorted on the sorted cells;
-        # clip + verify so a corrupt code (not a codebook cell) fails the
-        # task loudly instead of silently gathering a neighbor's distance
-        code_idx = np.empty_like(codes)
-        for s in range(m):
-            idx = np.searchsorted(cell_order[s], codes[:, s])
-            idx = np.clip(idx, 0, cell_order[s].size - 1)
-            if not np.array_equal(cell_order[s][idx], codes[:, s]):
-                bad = codes[:, s][cell_order[s][idx] != codes[:, s]][0]
-                raise ValueError(
-                    f"ivf_pq_topk_routed: code {int(bad)} in subspace {s} "
-                    "is not a codebook cell"
-                )
-            code_idx[:, s] = idx
-        q_ids = qs.column("q_id").to_numpy()
-        Q = _pa_list_matrix(qs.column("q_vec"), np)
-        # members pre-sorted by t_id so the vectorized top-k's stable
-        # argsort replays the (adc ASC, t_id ASC) lexsort tie order
-        # (round 14 — the old shape looped queries in Python, building
-        # each LUT m times per query and lexsorting per query)
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        code_idx = code_idx[ord_t]
-        # all queries' LUTs per subspace in one broadcast subtract
-        # (int64 elementwise — exact), one fancy-index gather per subspace
-        adc = np.zeros((t_ids.size, q_ids.size), dtype=np.int64)
-        for s in range(m):
-            qsub = Q[:, s * subdim:(s + 1) * subdim]            # (n_q, subdim)
-            diff = qsub[:, None, :] - C[s][None, :, :]          # (n_q, ksub, subdim)
-            lut = np.einsum("qkd,qkd->qk", diff, diff)          # (n_q, ksub)
-            adc += lut[:, code_idx[:, s]].T                     # (n_t, n_q)
-        from .similarity import grouped_topk_indices
-
-        q_idx, t_row = grouped_topk_indices(adc, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pa.table(
-            {
-                "q_id": q_ids[q_idx],
-                "t_id": t_ids[t_row],
-                "adc_dist": adc[t_row, q_idx],
-            }
-        )
-
-    cand = (
-        members.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(score, "q_id long, t_id long, adc_dist long")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("adc_dist").asc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+    return routed_topk(members, _ivf_route(queries, centroids, nprobe, scale), kernel, k)

@@ -14,6 +14,8 @@ path is used for benchmarking.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -83,6 +85,31 @@ def with_norm_sq(df: DataFrame, vec_col: str, out_col: str = "norm_sq") -> Colum
     return df.withColumn(out_col, _dot_long(F.col(vec_col), F.col(vec_col)))
 
 
+def _quantized_side(
+    df: DataFrame,
+    id_alias: str,
+    side: str,
+    scale: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id_alias, {side}_vec, {side}_norm): HALF_UP-quantized vectors with
+    their exact int64 squared norms — one side of a quantized cosine."""
+    vec = f"{side}_vec"
+    return df.select(
+        F.col(id_col).alias(id_alias), quantize_vec(F.col(vec_col), scale).alias(vec)
+    ).withColumn(f"{side}_norm", _dot_long(F.col(vec), F.col(vec)))
+
+
+def _cos_quantized(a: str, b: str) -> Column:
+    """Quantized cosine of two ``_quantized_side`` sides: the exact int64
+    dot and ONE IEEE-deterministic division,
+    ``double(dot) / sqrt(double(a_norm) * double(b_norm))``."""
+    return _dot_long(F.col(f"{a}_vec"), F.col(f"{b}_vec")).cast("double") / F.sqrt(
+        F.col(f"{a}_norm").cast("double") * F.col(f"{b}_norm").cast("double")
+    )
+
+
 def cosine_join_quantized(
     queries: DataFrame, targets: DataFrame, scale: int = 1000
 ) -> DataFrame:
@@ -92,25 +119,11 @@ def cosine_join_quantized(
     products are exact and associative; the single double division
     ``dot / sqrt(double(nq) * double(nt))`` is IEEE-deterministic.
     """
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), quantize_vec(F.col("embedding"), scale).alias("q_vec")
-    )
-    q = q.withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
-    t = targets.select(
-        F.col("vec_id").alias("t_id"), quantize_vec(F.col("embedding"), scale).alias("t_vec")
-    )
-    t = t.withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
+    q = _quantized_side(queries, "q_id", "q", scale)
+    t = _quantized_side(targets, "t_id", "t", scale)
     # Broadcast the query side: top-k/near-dup workloads have |Q| << |T|.
     pairs = t.join(F.broadcast(q), on=F.lit(True), how="inner")
-    dot = _dot_long(F.col("q_vec"), F.col("t_vec"))
-    return pairs.select(
-        "q_id",
-        "t_id",
-        (
-            dot.cast("double")
-            / F.sqrt(F.col("q_norm").cast("double") * F.col("t_norm").cast("double"))
-        ).alias("cos"),
-    )
+    return pairs.select("q_id", "t_id", _cos_quantized("q", "t").alias("cos"))
 
 
 def cosine_join(queries: DataFrame, targets: DataFrame) -> DataFrame:
@@ -175,27 +188,16 @@ def embedding_near_dups_clustered(
     from .clustering import kmeans_integer
 
     cells = kmeans_integer(corpus, "vec_id", "embedding", k=k, n_iter=n_iter, scale=scale)
-    q = corpus.select(
-        "vec_id", quantize_vec(F.col("embedding"), scale).alias("v")
-    ).withColumn("norm", _dot_long(F.col("v"), F.col("v")))
-    t = q.join(cells, on="vec_id")
-    a = t.select(
-        F.col("vec_id").alias("a"), F.col("v").alias("va"),
-        F.col("norm").alias("na"), "cell",
-    )
-    b = t.select(
-        F.col("vec_id").alias("b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"), "cell",
+    t = _quantized_side(corpus, "vec_id", "v", scale).join(cells, on="vec_id")
+    a, b = (
+        t.select(
+            F.col("vec_id").alias(s), F.col("v_vec").alias(f"{s}_vec"),
+            F.col("v_norm").alias(f"{s}_norm"), "cell",
+        )
+        for s in ("a", "b")
     )
     pairs = a.join(b, on="cell").filter(F.col("a") < F.col("b"))
-    scored = pairs.select(
-        "a",
-        "b",
-        (
-            _dot_long(F.col("va"), F.col("vb")).cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
-        ).alias("cos"),
-    )
+    scored = pairs.select("a", "b", _cos_quantized("a", "b").alias("cos"))
     return scored.filter(F.col("cos") > threshold)
 
 
@@ -215,29 +217,90 @@ def ivf_assign(
     shuffle of the corpus.  Centroid choice is the caller's (deterministic
     subsets work fine for oracle checking; k-means iterations can refine the
     same contract at scale)."""
-    c = centroids.select(
-        F.col(id_col).alias("cell"), quantize_vec(F.col(vec_col), scale).alias("c_vec")
-    ).withColumn("c_norm", _dot_long(F.col("c_vec"), F.col("c_vec")))
-    v = df.select(
-        F.col(id_col),
-        quantize_vec(F.col(vec_col), scale).alias("v_vec"),
-    ).withColumn("v_norm", _dot_long(F.col("v_vec"), F.col("v_vec")))
+    c = _quantized_side(centroids, "cell", "c", scale, id_col, vec_col)
+    v = _quantized_side(df, id_col, "v", scale, id_col, vec_col)
     pairs = v.join(F.broadcast(c), on=F.lit(True), how="inner")
-    scored = pairs.select(
-        id_col,
-        "cell",
-        (
-            _dot_long(F.col("v_vec"), F.col("c_vec")).cast("double")
-            / F.sqrt(F.col("v_norm").cast("double") * F.col("c_norm").cast("double"))
-        ).alias("c_cos"),
-    )
-    from .windows import window_rank_topk as _topk
-
-    ranked = _topk(
+    scored = pairs.select(id_col, "cell", _cos_quantized("v", "c").alias("c_cos"))
+    ranked = window_rank_topk(
         scored, [id_col], [F.col("c_cos").desc(), F.col("cell").asc()], nprobe,
         rank_col="probe_rank",
     )
     return ranked.select(id_col, "cell", "probe_rank")
+
+
+def _ivf_probe(
+    df: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    scale: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The numpy probe map shared by ``ivf_assign_vectorized`` and the
+    routed IVF rungs: (id_col, cell, probe_rank, qv) — each vector's
+    ``nprobe`` nearest centroids plus its quantized vector ``qv``, repeated
+    once per probe so a routed rung needs no join back to the queries.
+
+    The k-row centroid table is collected driver-side (k-scale — the one
+    collect that is always legal here) and each Arrow batch scores against
+    it with ONE matmul instead of k interpreted HOF dot products per row.
+    Both sides quantize through the expression path (``quantize_vec``), so
+    exactly one rounding mode is in play; cosine is the identical IEEE shape
+    (double(dot)/sqrt(double·double)); the nprobe selection replays the
+    (c_cos DESC, cell ASC) total order with a stable argsort over
+    cell-sorted centroid columns."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .guards import check_driver_bound
+
+    crows = centroids.select(
+        F.col(id_col).alias("cell"), quantize_vec(F.col(vec_col), scale).alias("cv")
+    ).collect()
+    check_driver_bound(
+        len(crows),
+        65_536,
+        "ivf_assign_vectorized (centroid driver collect)",
+        "a coarser cell count at index build time (centroids are "
+        "structurally k_cells rows — this bound failing means the index "
+        "was built with a corpus-scale cell count)",
+    )
+    cells = np.array([int(r.cell) for r in crows], dtype=np.int64)
+    C = np.array([list(r.cv) for r in crows], dtype=np.int64)
+    ord_c = np.argsort(cells, kind="stable")
+    cells, C = cells[ord_c], C[ord_c]
+    c_norm = (C * C).sum(axis=1)
+    kk = min(nprobe, cells.size)
+
+    def probe(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([batch])
+            V = _pa_list_matrix(tbl.column("qv"), np)
+            v_norm = (V * V).sum(axis=1)
+            cos = exact_int_matmul(V, C.T) / np.sqrt(
+                v_norm[:, None].astype(np.float64) * c_norm[None, :].astype(np.float64)
+            )
+            order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
+            rows = np.repeat(np.arange(batch.num_rows), kk)
+            d = V.shape[1]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(tbl.column(id_col).to_numpy()[rows], pa.int64()),
+                    pa.array(cells[order].reshape(-1), pa.int64()),
+                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), batch.num_rows)),
+                    pa.ListArray.from_arrays(
+                        pa.array(np.arange(rows.size + 1, dtype=np.int32) * d),
+                        pa.array(V[rows].reshape(-1), pa.int64()),
+                    ),
+                ],
+                names=[id_col, "cell", "probe_rank", "qv"],
+            )
+
+    return df.select(
+        id_col, quantize_vec(F.col(vec_col), scale).alias("qv")
+    ).mapInArrow(probe, f"{id_col} long, cell long, probe_rank int, qv array<bigint>")
 
 
 def ivf_assign_vectorized(
@@ -249,77 +312,20 @@ def ivf_assign_vectorized(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Bit-identical numpy twin of ``ivf_assign`` for LARGE assignment
-    batches: the k-row centroid table is collected driver-side (k-scale —
-    the one collect that is always legal here) and each Arrow batch of
-    vectors scores against it with ONE int64 matmul instead of k
-    interpreted HOF dot products per row.
+    batches (the ``_ivf_probe`` map).  probe_rank is INT, matching
+    ``ivf_assign``'s row_number type exactly so the two twins
+    union/compare without schema widening."""
+    return _ivf_probe(df, centroids, nprobe, scale, id_col, vec_col).drop("qv")
 
-    Exactness: centroids are quantized via the expression path
-    (``quantize_vec``) BEFORE collection, batch vectors via ``quantize_np``
-    (same HALF_UP); cosine is the identical IEEE shape
-    (double(dot)/sqrt(double·double)); the nprobe selection replays the
-    (c_cos DESC, cell ASC) total order with a lexsort.  Pinned equal to
-    ``ivf_assign`` by test, and the routed serving path built on it stays
-    hash-gated cross-engine by the similarity_ann_ivf_routed catalog
-    query."""
-    import numpy as np
-    import pandas as pd
 
-    crows = (
-        centroids.select(
-            F.col(id_col).alias("cell"), quantize_vec(F.col(vec_col), scale).alias("cv")
-        )
-        .collect()
-    )
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        len(crows),
-        65_536,
-        "ivf_assign_vectorized (centroid driver collect)",
-        "a coarser cell count at index build time (centroids are "
-        "structurally k_cells rows — this bound failing means the index "
-        "was built with a corpus-scale cell count)",
-    )
-    cells = np.array([int(r.cell) for r in crows], dtype=np.int64)
-    C = np.array([list(r.cv) for r in crows], dtype=np.int64)
-    # centroids pre-sorted by cell id: the reference order is
-    # lexsort((cells, -cos)) — cell-ASC tie-break — which a stable argsort
-    # on -cos alone reproduces over cell-sorted columns (round 14; the old
-    # shape ran one np.lexsort per input row in a Python loop)
-    ord_c = np.argsort(cells, kind="stable")
-    cells = cells[ord_c]
-    C = C[ord_c]
-    c_norm = (C * C).sum(axis=1)
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = quantize_np(np.stack(pdf[vec_col].to_numpy()), scale)
-            v_norm = (V * V).sum(axis=1)
-            # exact-by-bound float64 BLAS (round 14 — was naive int64)
-            dots = exact_int_matmul(V, C.T)
-            cos = dots / np.sqrt(
-                v_norm[:, None].astype(np.float64) * c_norm[None, :].astype(np.float64)
-            )
-            kk = min(nprobe, cells.size)
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, kk),
-                    "cell": cells[order].reshape(-1),
-                    "probe_rank": np.tile(
-                        np.arange(1, kk + 1, dtype=np.int32), ids.size
-                    ),
-                }
-            )
-
-    # probe_rank INT, matching ivf_assign's row_number type exactly so the
-    # two twins union/compare without schema widening
-    return df.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, cell long, probe_rank int"
+def _ivf_route(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, scale: int
+) -> DataFrame:
+    """(cell, q_id, q_vec): the routed-query side of the IVF rungs, one row
+    per probed cell, straight from the probe map — the query batch is never
+    joined back or broadcast, so its size has no broadcast bound."""
+    return _ivf_probe(queries, centroids, nprobe, scale, "vec_id", "embedding").select(
+        "cell", F.col("vec_id").alias("q_id"), F.col("qv").alias("q_vec")
     )
 
 
@@ -341,12 +347,8 @@ def ivf_topk(
     query_cells = ivf_assign(queries, centroids, nprobe=nprobe, scale=scale).select(
         F.col("vec_id").alias("q_id"), "cell"
     )
-    t = corpus.select(
-        F.col("vec_id").alias("t_id"), quantize_vec(F.col("embedding"), scale).alias("t_vec")
-    ).withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), quantize_vec(F.col("embedding"), scale).alias("q_vec")
-    ).withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
+    t = _quantized_side(corpus, "t_id", "t", scale)
+    q = _quantized_side(queries, "q_id", "q", scale)
     cand = (
         query_cells.join(corpus_cells, on="cell")
         .select("q_id", "t_id")
@@ -354,14 +356,7 @@ def ivf_topk(
         .filter(F.col("q_id") != F.col("t_id"))
     )
     pairs = cand.join(t, on="t_id").join(F.broadcast(q), on="q_id")
-    scored = pairs.select(
-        "q_id",
-        "t_id",
-        (
-            _dot_long(F.col("q_vec"), F.col("t_vec")).cast("double")
-            / F.sqrt(F.col("q_norm").cast("double") * F.col("t_norm").cast("double"))
-        ).alias("cos"),
-    )
+    scored = pairs.select("q_id", "t_id", _cos_quantized("q", "t").alias("cos"))
     return window_rank_topk(
         scored, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
     )
@@ -387,9 +382,7 @@ def build_ivf_index(
     cells = ivf_assign(corpus, centroids, nprobe=1, scale=scale).select(
         F.col("vec_id").alias("t_id"), "cell"
     )
-    t = corpus.select(
-        F.col("vec_id").alias("t_id"), quantize_vec(F.col("embedding"), scale).alias("t_vec")
-    ).withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
+    t = _quantized_side(corpus, "t_id", "t", scale)
     indexed = t.join(cells, on="t_id")
     if n_partitions:
         indexed = indexed.repartition(n_partitions, "cell")
@@ -411,19 +404,12 @@ def ivf_topk_prebuilt(
     query_cells = ivf_assign(queries, centroids, nprobe=nprobe, scale=scale).select(
         F.col("vec_id").alias("q_id"), "cell"
     )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), quantize_vec(F.col("embedding"), scale).alias("q_vec")
-    ).withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
+    q = _quantized_side(queries, "q_id", "q", scale)
     cand = index.join(F.broadcast(query_cells), on="cell").filter(
         F.col("q_id") != F.col("t_id")
     )
     scored = cand.join(F.broadcast(q), on="q_id").select(
-        "q_id",
-        "t_id",
-        (
-            _dot_long(F.col("q_vec"), F.col("t_vec")).cast("double")
-            / F.sqrt(F.col("q_norm").cast("double") * F.col("t_norm").cast("double"))
-        ).alias("cos"),
+        "q_id", "t_id", _cos_quantized("q", "t").alias("cos")
     )
     return window_rank_topk(
         scored, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
@@ -521,221 +507,6 @@ def hyperplane_lsh_bucket(df: DataFrame, vec_col: str, n_planes: int = 16, seed:
     return df.withColumn("lsh_bucket", bucket)
 
 
-def cosine_topk_vectorized(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    scale: int = 1000,
-    max_queries: int = 20_000,
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``similarity_topk(quantized=True)`` —
-    bit-identical results, vectorized hot loop.
-
-    The expression path's per-row ``zip_with``+``aggregate`` dot product is
-    a higher-order function, which Spark evaluates INTERPRETED (no codegen)
-    — the same finding that drove the bloom filter's hash-family choice.
-    Here the fix is the sanctioned vectorized-UDF path: the query matrix is
-    collected and quantized driver-side (|Q| << |T| is this operator's
-    contract — Q-scale, not data-scale, like the materialized bloom words),
-    and each Arrow batch of targets scores as ONE int64 matmul.
-
-    Exactness argument, step by step:
-      - quantization: both paths compute HALF_UP round(float64(x) * scale) —
-        ``quantize_np`` replicates Spark's half-away-from-zero rounding
-        exactly (dyadic values like 0.0625 land on .5 after scaling, where
-        np.rint's half-even would diverge);
-      - dot/norms: int64 arithmetic, exact and associative — matmul order
-        cannot matter;
-      - cosine: one float64 multiply + sqrt + divide, the same IEEE ops in
-        the same shape as the JVM expression — bit-identical doubles.
-
-    Each batch emits only its LOCAL top-k per query under the exact final
-    total order (cos DESC, t_id ASC), so candidates are n_batches*|Q|*k
-    rows — the per-partition-heap shape of TakeOrderedAndProject — and the
-    global window top-k over them equals the true top-k (union-of-local-
-    top-k property of total orders).
-
-    Zero-norm vectors: Spark's non-ANSI double division yields NULL for
-    0/0 (not IEEE NaN) and the DESC window orders nulls LAST; the numpy
-    side produces NaN, which ``-col``-keyed lexsort also orders last and
-    which the pandas→Arrow hop delivers back to Spark as NULL — so both
-    paths exclude zero-norm rows from any top-k that has k valid
-    candidates, and emit them trailing otherwise (pinned by test).  Under
-    ANSI the expression path raises DIVIDE_BY_ZERO instead: zero-norm
-    input is invalid there by construction.
-
-    Exceeding the |Q| contract raises :class:`guards.DriverBoundExceeded`
-    BEFORE the collect (one cheap count job) — the audit tier fails
-    loudly instead of degrading into a driver bottleneck; the unbounded
-    serving shape is ``cosine_topk_routed``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        queries.count(),
-        max_queries,
-        "cosine_topk_vectorized (query-side driver collect)",
-        "cosine_topk_routed (cogrouped, zero driver collect)",
-    )
-    qrows = queries.select("vec_id", "embedding").collect()
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    Q = quantize_np(np.array([r.embedding for r in qrows], dtype=np.float64), scale)
-    q_norm = (Q * Q).sum(axis=1)
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            T = quantize_np(np.stack(pdf["embedding"].to_numpy()), scale)
-            t_norm = (T * T).sum(axis=1)
-            dots = T @ Q.T
-            # same IEEE shape as the expression path: double(dot) /
-            # sqrt(double(nq) * double(nt))
-            cos = dots.astype(np.float64) / np.sqrt(
-                q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-            )
-            out_q, out_t, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                idx = np.nonzero(t_ids != qid)[0]
-                if idx.size == 0:
-                    continue
-                col = cos[idx, j]
-                order = np.lexsort((t_ids[idx], -col))[:k]
-                sel = idx[order]
-                out_q.append(np.full(sel.size, qid, dtype=np.int64))
-                out_t.append(t_ids[sel])
-                out_c.append(cos[sel, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "t_id": np.concatenate(out_t),
-                        "cos": np.concatenate(out_c),
-                    }
-                )
-
-    cand = targets.select("vec_id", "embedding").mapInPandas(
-        score, "q_id long, t_id long, cos double"
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
-
-
-def ivf_topk_prebuilt_vectorized(
-    queries: DataFrame,
-    index: DataFrame,
-    centroids: DataFrame,
-    k: int,
-    nprobe: int = 2,
-    scale: int = 1000,
-) -> DataFrame:
-    """Vectorized serving path over a ``build_ivf_index`` frame —
-    bit-identical to ``ivf_topk_prebuilt``, with the per-candidate HOF dot
-    replaced by per-cell numpy matmuls.
-
-    Shape: probe assignment is unchanged (broadcast-centroid map over the
-    query batch); the probed cell→queries routing table and the quantized
-    query matrix are collected driver-side (both Q-scale); the index is
-    FILTERED to probed cells (partition-pruned when the index is stored
-    partitioned/bucketed by cell) and each Arrow batch scores its members
-    against exactly the queries probing their cells — index vectors cross
-    into Python ONCE, already quantized, and each (batch, cell) group emits
-    only its local top-k per query under the final total order before the
-    global window refine.  Same exactness argument as
-    cosine_topk_vectorized (int64 dots, one IEEE-shaped division).
-    Honest measurement (80k corpus, 64 cells, nprobe=8, local[32]): 1.34 s
-    vs the expression path's 1.23 s — PARITY, not a win.  After IVF's 8x
-    candidate pruning the scoring volume (~500k pairs) is small enough that
-    probe assignment, Python worker startup, and the Arrow hop of the index
-    vectors offset the interpreted-HOF savings that gave the brute-force
-    twin its 2.4-3x.  Use this variant when cells are large (bigger corpora,
-    fewer cells, higher nprobe) — the matmul advantage grows linearly with
-    pairs-per-cell while the overheads stay fixed; below that regime the
-    expression path is already the right choice.
-
-    Exceeding the |Q| contract raises :class:`guards.DriverBoundExceeded`
-    before the collect; the unbounded serving shape is
-    ``ivf_topk_prebuilt_routed``."""
-    import numpy as np
-    import pandas as pd
-
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        queries.count(),
-        20_000,
-        "ivf_topk_prebuilt_vectorized (query-side driver collect)",
-        "ivf_topk_prebuilt_routed (cogrouped, zero driver collect)",
-    )
-    probe = ivf_assign(queries, centroids, nprobe=nprobe, scale=scale).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    qrows = queries.select("vec_id", "embedding").collect()
-    q_index = {int(r.vec_id): i for i, r in enumerate(qrows)}
-    # HALF_UP, same as quantize_vec: ivf_assign quantizes these queries
-    # half-up for probe assignment and the index's t_vec is half-up — one
-    # query vector must never be quantized two different ways (ADVICE r4).
-    Q = quantize_np(np.array([r.embedding for r in qrows], dtype=np.float64), scale)
-    q_ids_arr = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    q_norm = (Q * Q).sum(axis=1)
-    cell_to_q: dict[int, list[int]] = {}
-    for r in probe.collect():
-        cell_to_q.setdefault(int(r.cell), []).append(q_index[int(r.q_id)])
-    probed_cells = sorted(cell_to_q)
-
-    members = index.filter(F.col("cell").isin(probed_cells)).select(
-        "cell", "t_id", "t_vec", "t_norm"
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cells = pdf["cell"].to_numpy()
-            for cell in np.unique(cells):
-                qs = cell_to_q.get(int(cell))
-                if not qs:
-                    continue
-                sub = pdf[cells == cell]
-                t_ids = sub["t_id"].to_numpy(dtype=np.int64)
-                T = np.stack(sub["t_vec"].to_numpy()).astype(np.int64)
-                t_norm = sub["t_norm"].to_numpy(dtype=np.int64)
-                Qc, qn, qi = Q[qs], q_norm[qs], q_ids_arr[qs]
-                dots = T @ Qc.T
-                cos = dots.astype(np.float64) / np.sqrt(
-                    qn[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-                )
-                out_q, out_t, out_c = [], [], []
-                for j, qid in enumerate(qi):
-                    idx = np.nonzero(t_ids != qid)[0]
-                    if idx.size == 0:
-                        continue
-                    col = cos[idx, j]
-                    order = np.lexsort((t_ids[idx], -col))[:k]
-                    sel = idx[order]
-                    out_q.append(np.full(sel.size, qid, dtype=np.int64))
-                    out_t.append(t_ids[sel])
-                    out_c.append(cos[sel, j])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.concatenate(out_q),
-                            "t_id": np.concatenate(out_t),
-                            "cos": np.concatenate(out_c),
-                        }
-                    )
-
-    cand = members.mapInPandas(score, "q_id long, t_id long, cos double")
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
-
-
 def ivf_topk_prebuilt_routed(
     queries: DataFrame,
     index: DataFrame,
@@ -747,60 +518,23 @@ def ivf_topk_prebuilt_routed(
     """Fully-distributed vectorized IVF serving — NO driver collect of the
     query side (VERDICT r4 #2).  Bit-identical to ``ivf_topk_prebuilt``.
 
-    The collect-based twin (``ivf_topk_prebuilt_vectorized``) ships the
-    query matrix through the driver, a hop that stops scaling around
-    |Q|~10k.  Here queries stay a DataFrame end-to-end:
-
-      1. probe assignment (broadcast-centroid map, unchanged) produces the
-         (q_id, cell) routing table as a DataFrame;
-      2. queries are quantized ONCE via the expression path
-         (``quantize_vec`` — so there is exactly one rounding mode in play)
-         and joined to their probed cells: (cell, q_id, q_vec, q_norm);
-      3. a cogrouped ``applyInArrow`` on cell brings each cell's index
-         members and its probing queries together on the EXECUTOR — one
-         int64 matmul per cell, local top-k per query under the final total
-         order (cos DESC, t_id ASC);
-      4. a global window top-k refines the per-cell candidates (each t_id
-         lives in exactly one cell, so candidates are duplicate-free and
-         the union-of-local-top-k property applies per query).
+    Queries stay a DataFrame end-to-end: the probe map (``_ivf_route``)
+    emits each query's quantized vector once per probed cell, and
+    ``routed_topk`` cogroups those rows with the index members on cell and
+    scores them with the cosine kernel (each t_id lives in exactly one
+    cell, so per-cell candidates are duplicate-free and the
+    union-of-local-top-k property applies per query).
 
     Shuffle shape: one exchange of the routed queries + one of the index on
     cell (the second is free when the index was written
     partitioned/bucketed by cell — same co-location contract as
     ``ivf_topk_prebuilt``).  Per-cell state is bounded by cell size x
-    probing-query count; skewed cells split naturally across nothing — a
-    hot cell is the IVF analogue of a hot key, mitigated by raising k_cells
-    at build time (documented trade, same as the expression path)."""
-    # vectorized probe assignment (bit-identical twin of ivf_assign): at
-    # |Q|=10k the per-row interpreted HOF dots of the expression assign are
-    # the dominant serving cost once scoring is a cogrouped matmul
-    probe = ivf_assign_vectorized(queries, centroids, nprobe=nprobe, scale=scale).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        quantize_vec(F.col("embedding"), scale).alias("q_vec"),
-    ).withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
-    # BROADCAST the quantized query batch into the routing join (round 15,
-    # guide §3.1): q is |Q| rows — bounded by the serving contract, the same
-    # budget argument as _exact_rerank's shortlist broadcast — while the
-    # planner's estimate for the two opaque children (MapInPandas probe ×
-    # projected cache scan) was wide enough that it planned a SortMergeJoin:
-    # two exchanges + two sorts of query-scale frames per serve, all to
-    # attach 64-int vectors to their probe rows.  The broadcast leaves one
-    # exchange on the query side (the cell routing itself).
-    routed = probe.join(F.broadcast(q), on="q_id").select(
-        "cell", "q_id", "q_vec", "q_norm"
-    )
-    members = index.select("cell", "t_id", "t_vec", "t_norm")
-
-    cand = (
-        members.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_arrow(k), "q_id long, t_id long, cos double")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
+    probing-query count; a hot cell is the IVF analogue of a hot key,
+    mitigated by raising k_cells at build time (documented trade, same as
+    the expression path)."""
+    members = index.select("cell", "t_id", "t_vec")
+    return routed_topk(
+        members, _ivf_route(queries, centroids, nprobe, scale), COSINE, k
     )
 
 
@@ -828,7 +562,7 @@ def exact_int_matmul(A, B):
 
 
 def grouped_topk_indices(key, t_ids_sorted, q_ids, k: int):
-    """Vectorized per-query top-k used by the cogrouped scorers: for each
+    """Vectorized per-query top-k used by ``routed_topk``: for each
     column j of ``key`` (shape (n_t, n_q)), select the k smallest entries
     ASCENDING with NaN last and ties broken by row order — callers pass
     rows pre-sorted by t_id ASC, so a stable argsort reproduces the
@@ -873,113 +607,67 @@ def _pa_list_matrix(col, np):
     return flat.reshape(-1, d)
 
 
-def _block_cogroup_scorer_arrow(k: int):
-    """Cogrouped (members, queries) → local-top-k scorer of the routed
-    rungs (``ivf_topk_prebuilt_routed``, ``cosine_topk_routed``).  Per
-    cell/block group: one int64 matmul (``exact_int_matmul``), one
-    IEEE-shaped cosine division (double(dot) / sqrt(double·double) — the
-    exact expression-path shape), local top-k per query under the final
-    (cos DESC, t_id ASC) total order (``grouped_topk_indices``).  The
-    groups arrive as ``pyarrow.Table`` pairs (``applyInArrow``), so the
-    vector columns cross the boundary as flat int64 buffers rather than
-    object-dtype pandas columns boxed row by row (the round-14 §4.2
-    boundary fix: the boxing was the measured residual wall of the routed
-    rows).  Results are bit-identical to the expression path, pinned by
-    tools/verify_routed_ann.py."""
-    import numpy as np
+class TopkKernel(NamedTuple):
+    """What ``routed_topk`` needs to know about one score: ``score`` maps a
+    cell's (members, queries) Arrow tables — members sorted by t_id — to
+    an (n_t, n_q) numpy score matrix; ``col``/``ddl`` name and type the
+    output score column; ``descending`` says whether larger scores rank
+    first (a similarity) or last (a distance)."""
+
+    score: Callable
+    col: str
+    ddl: str
+    descending: bool
+
+
+def routed_topk(
+    members: DataFrame, routed_queries: DataFrame, kernel: TopkKernel, k: int
+) -> DataFrame:
+    """THE routed top-k of the cogrouped ANN rungs: (q_id, t_id, <score>,
+    rnk).  ``members`` carry (cell, t_id, …) and ``routed_queries`` carry
+    (cell, q_id, …); each cell's two sides meet in one cogrouped
+    ``applyInArrow`` task, where the kernel scores them as one matrix and
+    ``grouped_topk_indices`` keeps each query's local top-k (self
+    excluded) under the final (score, t_id ASC) total order — members are
+    stably sorted by t_id first so the argsort replays that tie order.  A
+    global ``window_rank_topk`` refines the per-cell candidates: each t_id
+    lives in exactly one cell, so candidates are duplicate-free and the
+    union of local top-k sets holds the global top-k (the per-partition
+    top-k plus global merge of TakeOrderedAndProject and REPOSE).
+
+    The groups cross the Python boundary as ``pyarrow.Table`` pairs, so
+    vector columns arrive as flat buffers (``_pa_list_matrix``) rather than
+    object-dtype pandas columns boxed row by row.  Results are
+    bit-identical to each rung's expression reference, pinned by
+    tools/verify_routed_ann.py and the rung tests."""
     import pyarrow as pa
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
-    )
+    score_type = {"double": pa.float64(), "long": pa.int64()}[kernel.ddl]
+    empty = pa.schema(
+        [("q_id", pa.int64()), ("t_id", pa.int64()), (kernel.col, score_type)]
+    ).empty_table()
 
     def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
         if mem.num_rows == 0 or qs.num_rows == 0:
             return empty
-        # members pre-sorted by t_id so grouped_topk_indices' stable
-        # argsort replays the (cos DESC, t_id ASC) lexsort tie order
+        mem = mem.sort_by("t_id")  # stable: replays the t_id ASC tie order
         t_ids = mem.column("t_id").to_numpy()
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = _pa_list_matrix(mem.column("t_vec"), np)[ord_t]
-        t_norm = mem.column("t_norm").to_numpy()[ord_t]
         q_ids = qs.column("q_id").to_numpy()
-        Q = _pa_list_matrix(qs.column("q_vec"), np)
-        q_norm = qs.column("q_norm").to_numpy()
-        dots = exact_int_matmul(T, Q.T)
-        cos = dots / np.sqrt(
-            q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
+        S = kernel.score(mem, qs)
+        q_idx, t_row = grouped_topk_indices(
+            -S if kernel.descending else S, t_ids, q_ids, k
         )
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
         return pa.table(
-            {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], "cos": cos[t_row, q_idx]}
+            {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], kernel.col: S[t_row, q_idx]}
         )
 
-    return score
-
-
-def cosine_topk_routed(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    scale: int = 1000,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """Brute-force cosine top-k served through the routed cogroup — the
-    ``ivf_topk_prebuilt_routed`` serving shape at nprobe = ALL cells,
-    with deterministic hash blocks standing in for trained cells.  This
-    retires the |Q|≪|T| driver collect of ``cosine_topk_vectorized`` from
-    the production/benched path (VERDICT r7 #2 — the same move that fixed
-    r6's ann_pq_rerank breach): queries stay a DataFrame end-to-end.
-
-    Bit-identical to ``cosine_topk_vectorized`` / ``similarity_topk
-    (quantized=True)``: ONE quantization mode (expression-side HALF_UP
-    ``quantize_vec`` on both sides), the shared ``_block_cogroup_scorer_arrow``
-    (same int64 matmul and IEEE division bytes as the IVF rung), blocks
-    partition the targets so per-block local top-k unions are
-    duplicate-free and the global window refine returns the true top-k.
-
-    Shuffle shape at 100 TB: one exchange of targets on block (free if
-    the corpus is stored bucketed by the same hash), one broadcast of the
-    block ids crossed with queries (|Q|·B rows of K-dim int vectors —
-    executor-side replication, never a driver hop).  Block count defaults
-    to shuffle parallelism; raise it to bound per-task matmul memory
-    (|block| × |Q| floats)."""
-    spark = queries.sparkSession
-    if n_blocks is None:
-        n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    t = targets.select(
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
-        F.col("vec_id").alias("t_id"),
-        quantize_vec(F.col("embedding"), scale).alias("t_vec"),
-    ).withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        quantize_vec(F.col("embedding"), scale).alias("q_vec"),
-    ).withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
-    # replicate each query to every block via explode(sequence(..)) — a
-    # pure codegen projection, no join node (the plan auditor's cartesian
-    # check stays meaningful for real accidents)
-    routed = q.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
-        "q_id",
-        "q_vec",
-        "q_norm",
-    )
     cand = (
-        t.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_arrow(k), "q_id long, t_id long, cos double")
+        members.groupBy("cell")
+        .cogroup(routed_queries.groupBy("cell"))
+        .applyInArrow(score, f"q_id long, t_id long, {kernel.col} {kernel.ddl}")
     )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+    order = F.col(kernel.col).desc() if kernel.descending else F.col(kernel.col).asc()
+    return window_rank_topk(cand, ["q_id"], [order, F.col("t_id").asc()], k, rank_col="rnk")
 
 
 def _seq_fold_matmul(T, Q, np):
@@ -1007,56 +695,94 @@ def _seq_fold_norms(V, np):
     return acc
 
 
-def _block_cogroup_scorer_double(k: int):
-    """Arrow cogrouped scorer for the DOUBLE (unquantized) brute-force
-    cosine rung — the ``_block_cogroup_scorer_arrow`` shape with float64
-    vectors and sequential-fold arithmetic.  Dots and norms replay the
-    expression fold's IEEE association exactly (``_seq_fold_matmul`` /
-    ``_seq_fold_norms``), and the division is the identical
-    ``dot / sqrt(q_norm · t_norm)`` shape, so every cos value is
-    bit-identical to ``cosine_join``'s interpreted HOF output — pinned by
-    ``git show 3609c14:tools/probe_cosine_double_ab.py`` at the 80k bench
-    shape and by unit test.  A zero-norm query or corpus vector raises ``ValueError`` naming
-    its id: its cos is NaN, which numpy's local top-k places last while
-    Spark's window would place first, breaking that bit-identity."""
+def _cosine_scores(mem, qs):
+    """The cosine kernel: (n_t, n_q) cos of members' ``t_vec`` against
+    queries' ``q_vec``, in the expression path's exact IEEE shape
+    ``double(dot) / sqrt(double(q_norm) · double(t_norm))``.  The Arrow
+    value type of the vector column picks the arithmetic: integer
+    (``quantize_vec`` output) → exact int64 dots and norms
+    (``exact_int_matmul``; order-free), float64 → the sequential fold that
+    replays the ``cosine_join`` HOF's association (``_seq_fold_matmul`` /
+    ``_seq_fold_norms``).
+
+    A zero-norm query or member raises ``ValueError`` naming its id: its
+    cos is NaN, which crosses Arrow as NaN and which Spark's DESC window
+    ranks FIRST, while the expression path's NULL ranks last."""
     import numpy as np
     import pyarrow as pa
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
+    T = _pa_list_matrix(mem.column("t_vec"), np)
+    Q = _pa_list_matrix(qs.column("q_vec"), np)
+    if pa.types.is_integer(mem.schema.field("t_vec").type.value_type):
+        t_norm, q_norm = (T * T).sum(axis=1), (Q * Q).sum(axis=1)
+        dots = exact_int_matmul(T, Q.T)
+    else:
+        t_norm, q_norm = _seq_fold_norms(T, np), _seq_fold_norms(Q, np)
+        dots = _seq_fold_matmul(T, Q, np)
+    if (q_norm == 0).any() or (t_norm == 0).any():
+        raise ValueError(
+            "routed cosine top-k: zero-norm vectors have no cosine; "
+            f"q_id={qs.column('q_id').to_numpy()[q_norm == 0].tolist()} "
+            f"t_id={mem.column('t_id').to_numpy()[t_norm == 0].tolist()}"
+        )
+    return dots / np.sqrt(
+        q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
     )
 
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        t_ids = mem.column("t_id").to_numpy()
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = _pa_list_matrix(mem.column("t_vec"), np)[ord_t]
-        q_ids = qs.column("q_id").to_numpy()
-        Q = _pa_list_matrix(qs.column("q_vec"), np)
-        t_norm = _seq_fold_norms(T, np)
-        q_norm = _seq_fold_norms(Q, np)
-        if (q_norm == 0).any() or (t_norm == 0).any():
-            raise ValueError(
-                "cosine_topk_routed_double: zero-norm vectors have no cosine; "
-                f"q_id={q_ids[q_norm == 0].tolist()} "
-                f"t_id={t_ids[t_norm == 0].tolist()}"
-            )
-        dots = _seq_fold_matmul(T, Q, np)
-        cos = dots / np.sqrt(q_norm[None, :] * t_norm[:, None])
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pa.table(
-            {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], "cos": cos[t_row, q_idx]}
-        )
 
-    return score
+COSINE = TopkKernel(_cosine_scores, "cos", "double", descending=True)
+
+
+def _cosine_topk_blocked(
+    queries: DataFrame, targets: DataFrame, k: int, n_blocks: int | None, vec
+) -> DataFrame:
+    """Brute-force cosine top-k through ``routed_topk`` with deterministic
+    hash blocks standing in for trained cells (nprobe = ALL blocks): each
+    target lives in one block, each query is replicated to every block via
+    explode(sequence(..)) — a pure codegen projection, no join node, so the
+    plan auditor's cartesian check stays meaningful.  ``vec`` maps the
+    embedding column to the vector the kernel scores."""
+    if n_blocks is None:
+        n_blocks = int(queries.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    members = targets.select(
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
+        F.col("vec_id").alias("t_id"),
+        vec(F.col("embedding")).alias("t_vec"),
+    )
+    routed = queries.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
+        F.col("vec_id").alias("q_id"),
+        vec(F.col("embedding")).alias("q_vec"),
+    )
+    return routed_topk(members, routed, COSINE, k)
+
+
+def cosine_topk_routed(
+    queries: DataFrame,
+    targets: DataFrame,
+    k: int,
+    scale: int = 1000,
+    n_blocks: int | None = None,
+) -> DataFrame:
+    """Brute-force quantized cosine top-k served through the routed
+    cogroup — the ``ivf_topk_prebuilt_routed`` serving shape at nprobe =
+    ALL cells, with hash blocks for cells (VERDICT r7 #2): queries stay a
+    DataFrame end-to-end, no driver collect on either side.
+
+    Bit-identical to ``similarity_topk(quantized=True)``: ONE quantization
+    mode (expression-side HALF_UP ``quantize_vec`` on both sides), the
+    int64 cosine kernel, and blocks that partition the targets.  A
+    zero-norm vector raises instead (see ``_cosine_scores``).
+
+    Shuffle shape at 100 TB: one exchange of targets on block (free if
+    the corpus is stored bucketed by the same hash) and one of the
+    block-replicated queries (|Q|·B rows of K-dim int vectors —
+    executor-side replication, never a driver hop).  Block count defaults
+    to shuffle parallelism; raise it to bound per-task matmul memory
+    (|block| × |Q| floats)."""
+    return _cosine_topk_blocked(
+        queries, targets, k, n_blocks, lambda c: quantize_vec(c, scale)
+    )
 
 
 def cosine_topk_routed_double(
@@ -1068,42 +794,17 @@ def cosine_topk_routed_double(
     """Brute-force DOUBLE cosine top-k served through the routed cogroup —
     the ``cosine_topk_routed`` shape for the unquantized rung (round 15,
     VERDICT r14 #3).  Bit-identical to ``similarity_topk(quantized=False)``:
-    vectors cross as float64 (the expression path's cast), dots/norms
-    replay the HOF fold's sequential IEEE association inside the scorer
-    (``_seq_fold_matmul``/``_seq_fold_norms``), the division is the same
-    ``dot / sqrt(q_norm · t_norm)``, and blocks partition the targets so
-    the per-block local top-k union + global window refine returns the
-    true top-k under the identical (cos DESC, t_id ASC) total order.
+    vectors cross as float64 (the expression path's cast), and the cosine
+    kernel replays the HOF fold's sequential IEEE association for that
+    value type.
 
     What it removes vs the expression twin: the per-pair interpreted
     ``aggregate ∘ zip_with`` fold of the BroadcastNestedLoopJoin plan —
     |Q|·|T| interpreted 64-dim folds become d vectorized multiply-adds per
     block.  The expression twin stays as the reference rung (bench row
     cosine_topk) pinning bit-identity."""
-    spark = queries.sparkSession
-    if n_blocks is None:
-        n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    t = targets.select(
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
-        F.col("vec_id").alias("t_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("t_vec"),
-    )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("q_vec"),
-    )
-    routed = q.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
-        "q_id",
-        "q_vec",
-    )
-    cand = (
-        t.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_double(k), "q_id long, t_id long, cos double")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
+    return _cosine_topk_blocked(
+        queries, targets, k, n_blocks, lambda c: F.transform(c, lambda x: x.cast("double"))
     )
 
 
@@ -1248,6 +949,14 @@ def maxsim_route_cells(
         t_sum = maxsim_doc_summaries(t_tokens, "t_id", scale)
     if q_sum is None:
         q_sum = maxsim_doc_summaries(q_tokens, "q_id", scale)
+    if vectorized_assign:
+        # the seed collect is an EXTRA eager job consuming the summaries
+        # subtree — materialize the summaries once so the collect and the
+        # two downstream assigns share them instead of re-deriving the
+        # corpus scan + fold per consumer (measured: without this the
+        # vectorized path LOST 1.7 s to recomputation at the bench shape)
+        t_sum = t_sum.localCheckpoint(eager=True)
+        q_sum = q_sum.localCheckpoint(eager=True)
     seeds = (
         t_sum.select(
             "t_id",
@@ -1267,31 +976,6 @@ def maxsim_route_cells(
     if vectorized_assign:
         import numpy as np
 
-        # the seed collect is an EXTRA eager job consuming the summaries
-        # subtree — materialize the summaries once so the collect and the
-        # two downstream assigns share them instead of re-deriving the
-        # corpus scan + fold per consumer (measured: without this the
-        # vectorized path LOST 1.7 s to recomputation at the bench shape)
-        t_sum = t_sum.localCheckpoint(eager=True)
-        q_sum = q_sum.localCheckpoint(eager=True)
-        seeds = (
-            t_sum.select(
-                "t_id",
-                "svec",
-                F.row_number()
-                .over(
-                    Window.orderBy(
-                        F.md5(F.col("t_id").cast("string")), F.col("t_id")
-                    )
-                )
-                .alias("_r"),
-            )
-            .filter(F.col("_r") <= n_cells)
-            .select(
-                (F.col("_r") - 1).cast("long").alias("cell"),
-                F.col("svec").alias("_sv"),
-            )
-        )
         rows = seeds.orderBy("cell").collect()  # bounded: ≤ n_cells rows
         S = np.asarray([r["_sv"] for r in rows], dtype=np.int64)
         cells_arr = np.asarray([r["cell"] for r in rows], dtype=np.int64)
@@ -1516,12 +1200,13 @@ def maxsim_topk_routed_vectorized(
     )
 
     # Arrow-native cogroup scorer (round 15 — the same §4.2 boundary fix as
-    # _block_cogroup_scorer_arrow): the flat token-matrix columns cross the
-    # Python boundary as ONE contiguous int64 buffer per side (list offsets
-    # give the per-doc slices) instead of being boxed into object-dtype
-    # pandas cells one numpy array per row.  The numpy core — one
-    # exactness-guarded matmul per (query, cell), segmented max, int64 sum —
-    # is byte-for-byte the pandas twin's, so results stay bit-identical.
+    # routed_topk): the flat token-matrix columns cross the Python boundary
+    # as ONE contiguous int64 buffer per side (list offsets give the per-doc
+    # slices) instead of being boxed into object-dtype pandas cells one
+    # numpy array per row.  The numpy core — one exactness-guarded matmul
+    # per (query, cell), segmented max, int64 sum — is exact, so results are
+    # bit-identical to maxsim_topk_routed, pinned by
+    # tests/test_frontier.py::test_maxsim_vectorized_matches_expression_at_pruning_probe.
     def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
         if mem.num_rows == 0 or qs.num_rows == 0:
             return empty

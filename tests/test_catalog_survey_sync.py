@@ -166,3 +166,30 @@ def test_never_driver_rows_sit_in_gate_prefix():
         "them into the prefix head or, if they exceed 50, stage the "
         "overflow as the precomputed next-round head with a comment."
     )
+
+
+def test_priority_list_is_duplicate_free_and_pins_the_gate_order():
+    """``_PRIORITY`` names each registered query exactly once, so deleting
+    a catalog row is one edit, and ``queries()`` keeps the order the gate
+    prefix was recorded under: the 507-row order before the
+    driver-collect brute cosine row was removed, minus that row (pinned as
+    a sha256 of the newline-joined ids)."""
+    import hashlib
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "entrymod", os.path.join(REPO, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    prio = entry._PRIORITY
+    dups = sorted({q for q in prio if prio.count(q) > 1})
+    assert not dups, f"_PRIORITY repeats: {dups}"
+    unregistered = sorted(set(prio) - _catalog_ids())
+    assert not unregistered, f"_PRIORITY names unregistered ids: {unregistered}"
+    order = list(entry.queries())
+    assert len(order) == 506
+    assert (
+        hashlib.sha256("\n".join(order).encode()).hexdigest()
+        == "c0a8d2980e3c8f4d103d10293e3c68b17c0fae758a499db9eb5de25e20a9eec1"
+    )

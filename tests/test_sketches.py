@@ -225,68 +225,49 @@ def test_unigram_lm_score_frozen_vocab_counts_oov(spark):
     assert (r.n_tokens, r.oov_tokens, r.score_bits) == (3, 1, 2 * 4)
 
 
-def test_cosine_topk_vectorized_matches_expression_path(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
-        similarity_topk,
-    )
-
-    q = df.filter(F.col("vec_id") < 5)
-    a = similarity_topk(q, df, k=4, quantized=True).select("q_id", "t_id", "cos", "rnk")
-    b = cosine_topk_vectorized(q, df, k=4).select("q_id", "t_id", "cos", "rnk")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_cosine_topk_routed_bit_identical_to_vectorized_and_expression(spark):
+def test_cosine_topk_routed_bit_identical_to_expression(spark):
     """The routed cogroup brute tier (no driver collect on either side)
-    must be bit-identical to BOTH the expression path and the
-    driver-collect vectorized twin — including cos doubles — across
-    block counts (1 block = one big matmul; 16 blocks > |targets|/k
-    exercises near-empty blocks)."""
+    must be bit-identical to the expression path — including cos doubles —
+    across block counts (1 block = one big matmul; 16 blocks > |targets|/k
+    exercises near-empty blocks).  Inputs: two random-normal corpora and
+    the ADVICE r4 dyadic counterexample, multiples of 1/16 whose every
+    component scales onto .5, where a half-even rounding would diverge."""
+    import random
+
     import numpy as np
 
-    rng = np.random.RandomState(11)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed,
-        cosine_topk_vectorized,
         similarity_topk,
     )
 
-    q = df.filter(F.col("vec_id") < 5)
-    a = sorted(
-        map(
-            tuple,
-            similarity_topk(q, df, k=4, quantized=True)
-            .select("q_id", "t_id", "cos", "rnk")
-            .collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            cosine_topk_vectorized(q, df, k=4)
-            .select("q_id", "t_id", "cos", "rnk")
-            .collect(),
-        )
-    )
-    assert a == b
-    for n_blocks in (1, 4, 16):
-        c = sorted(
+    def normal(seed):
+        rng = np.random.RandomState(seed)
+        return [(int(i), [float(x) for x in rng.randn(8)]) for i in range(40)]
+
+    rnd = random.Random(3)
+    dyadic = [(int(i), [rnd.randrange(-16, 17) / 16.0 for _ in range(8)]) for i in range(30)]
+    for rows, n_q, k in ((normal(11), 5, 4), (normal(7), 5, 4), (dyadic, 4, 3)):
+        df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+        q = df.filter(F.col("vec_id") < n_q)
+        a = sorted(
             map(
                 tuple,
-                cosine_topk_routed(q, df, k=4, n_blocks=n_blocks)
+                similarity_topk(q, df, k=k, quantized=True)
                 .select("q_id", "t_id", "cos", "rnk")
                 .collect(),
             )
         )
-        assert c == a, n_blocks
+        for n_blocks in (1, 4, 16):
+            c = sorted(
+                map(
+                    tuple,
+                    cosine_topk_routed(q, df, k=k, n_blocks=n_blocks)
+                    .select("q_id", "t_id", "cos", "rnk")
+                    .collect(),
+                )
+            )
+            assert c == a, (n_q, k, n_blocks)
 
 
 def test_cosine_topk_routed_double_bit_identical_to_expression(spark):
@@ -329,15 +310,27 @@ def test_cosine_topk_routed_double_bit_identical_to_expression(spark):
         assert c == a, n_blocks
 
 
-@pytest.mark.parametrize("zero_id, side", [(2, "q_id"), (17, "t_id")])
-def test_cosine_topk_routed_double_rejects_zero_norm(spark, zero_id, side):
-    """A zero vector has NaN cosine, which the scorer's numpy top-k and
-    Spark's window order differently, so the routed double rung must fail
-    loudly, naming the vector, instead of silently diverging from
-    similarity_topk(quantized=False).  A zero query (id < 5) is a zero
-    corpus vector too; a zero corpus-only vector (id 17) must still fail."""
+@pytest.mark.parametrize(
+    "rung, n_blocks, zero_id, side",
+    [
+        pytest.param("double", 2, 2, "q_id", id="2-q_id"),
+        pytest.param("double", 2, 17, "t_id", id="17-t_id"),
+        pytest.param("quantized", 16, 2, "q_id", id="quantized-2-q_id"),
+        pytest.param("quantized", 16, 17, "t_id", id="quantized-17-t_id"),
+    ],
+)
+def test_cosine_topk_routed_double_rejects_zero_norm(spark, rung, n_blocks, zero_id, side):
+    """A zero vector has no cosine: the expression path yields NULL, which
+    Spark's DESC window ranks last, while the cosine kernel's NaN crosses
+    Arrow as NaN and would rank FIRST.  So both routed cosine rungs
+    (double and quantized) must fail loudly, naming the vector, instead of
+    silently diverging from similarity_topk.  A zero query (id < 5) is a
+    zero corpus vector too; a zero corpus-only vector (id 17) must still
+    fail.  (Under ANSI the expression path raises DIVIDE_BY_ZERO instead.)"""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        cosine_topk_routed,
         cosine_topk_routed_double,
+        similarity_topk,
     )
 
     rows = [
@@ -346,36 +339,19 @@ def test_cosine_topk_routed_double_rejects_zero_norm(spark, zero_id, side):
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     q = df.filter(F.col("vec_id") < 5)
+    if side == "t_id":
+        # the expression reference: NULL cosine, ranked last, so the zero
+        # corpus vector is excluded from every top-3
+        prev = spark.conf.get("spark.sql.ansi.enabled", "false")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            ref = similarity_topk(q, df, k=3, quantized=rung == "quantized").collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+        assert len(ref) == 15 and all(r.t_id != zero_id for r in ref)
+    routed = cosine_topk_routed_double if rung == "double" else cosine_topk_routed
     with pytest.raises(Exception, match=rf"zero-norm.*{side}=\[[^]]*\b{zero_id}\b"):
-        cosine_topk_routed_double(q, df, k=3, n_blocks=2).collect()
-
-
-def test_ivf_vectorized_serving_matches_expression_path(spark):
-    import numpy as np
-
-    from cell_kn_mvp_etl_ontologies_spark.operators.clustering import kmeans_fit
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_prebuilt,
-        ivf_topk_prebuilt_vectorized,
-    )
-
-    rng = np.random.RandomState(11)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(120)]
-    em = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    cents = kmeans_fit(em, "vec_id", "embedding", k=4, n_iter=1)
-    centroids = em.sparkSession.createDataFrame(
-        [
-            (int(r.cell), [v / 1000.0 for v in r.cv])
-            for r in cents.collect()
-        ],
-        "vec_id LONG, embedding ARRAY<FLOAT>",
-    )
-    index = build_ivf_index(em, centroids)
-    q = em.filter(F.col("vec_id") < 6)
-    a = ivf_topk_prebuilt(q, index, centroids, k=3, nprobe=2)
-    b = ivf_topk_prebuilt_vectorized(q, index, centroids, k=3, nprobe=2)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        routed(q, df, k=3, n_blocks=n_blocks).collect()
 
 
 # ----------------------------------------------------- NULL-input pins ----
@@ -429,56 +405,101 @@ def test_quantize_np_half_up_matches_spark_round_at_dyadic_values(spark):
     assert got[:4] == [63, 188, -63, -188]  # .5-landing cases, half AWAY from zero
 
 
-def test_cosine_topk_vectorized_bit_identical_at_dyadic_embeddings(spark):
-    """The r4 advice counterexample: embeddings made of multiples of 1/16 so
-    every component scales onto .5 — np.rint would silently diverge here."""
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
-        similarity_topk,
-    )
-
-    import random
-
-    rnd = random.Random(3)
-    rows = [
-        (int(i), [rnd.randrange(-16, 17) / 16.0 for _ in range(8)]) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    q = df.filter(F.col("vec_id") < 4)
-    a = similarity_topk(q, df, k=3, quantized=True).select("q_id", "t_id", "cos", "rnk")
-    b = cosine_topk_vectorized(q, df, k=3).select("q_id", "t_id", "cos", "rnk")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_ivf_routed_serving_matches_expression_path_dyadic(spark):
     """ivf_topk_prebuilt_routed (no driver collect of queries) must be
-    bit-identical to ivf_topk_prebuilt, including at .5-landing values."""
+    bit-identical to ivf_topk_prebuilt, at .5-landing dyadic values and on
+    a random-normal corpus."""
     import random
+
+    import numpy as np
 
     from cell_kn_mvp_etl_ontologies_spark.operators.clustering import kmeans_fit
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_prebuilt,
         ivf_topk_prebuilt_routed,
-        ivf_topk_prebuilt_vectorized,
     )
 
     rnd = random.Random(13)
-    rows = [
+    dyadic = [
         (int(i), [rnd.randrange(-16, 17) / 16.0 for _ in range(8)]) for i in range(90)
     ]
-    em = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    cents = kmeans_fit(em, "vec_id", "embedding", k=4, n_iter=1)
-    centroids = em.sparkSession.createDataFrame(
-        [(int(r.cell), [v / 1000.0 for v in r.cv]) for r in cents.collect()],
-        "vec_id LONG, embedding ARRAY<FLOAT>",
+    rng = np.random.RandomState(11)
+    normal = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(120)]
+    for rows, n_q in ((dyadic, 5), (normal, 6)):
+        em = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+        cents = kmeans_fit(em, "vec_id", "embedding", k=4, n_iter=1)
+        centroids = em.sparkSession.createDataFrame(
+            [(int(r.cell), [v / 1000.0 for v in r.cv]) for r in cents.collect()],
+            "vec_id LONG, embedding ARRAY<FLOAT>",
+        )
+        index = build_ivf_index(em, centroids)
+        q = em.filter(F.col("vec_id") < n_q)
+        a = sorted(map(tuple, ivf_topk_prebuilt(q, index, centroids, k=3, nprobe=2).collect()))
+        b = sorted(
+            map(tuple, ivf_topk_prebuilt_routed(q, index, centroids, k=3, nprobe=2).collect())
+        )
+        assert a == b, n_q
+
+
+def test_routed_ivf_rungs_never_broadcast_the_query_batch(spark):
+    """The routed IVF rungs take each query's quantized vector from the
+    probe map, so no query-side join, hence no broadcast, appears in their
+    plans at any batch size — here 20,001 queries, past the 20,000-row
+    bound the removed driver-collect twins enforced — and both still return
+    their expression references' rows."""
+    from cell_kn_mvp_etl_ontologies_spark.operators.pq import (
+        ivf_pq_topk,
+        ivf_pq_topk_routed,
+        pq_encode,
+        pq_train_codebooks,
     )
-    index = build_ivf_index(em, centroids)
-    q = em.filter(F.col("vec_id") < 5)
-    a = sorted(map(tuple, ivf_topk_prebuilt(q, index, centroids, k=3, nprobe=2).collect()))
-    b = sorted(map(tuple, ivf_topk_prebuilt_routed(q, index, centroids, k=3, nprobe=2).collect()))
-    c = sorted(map(tuple, ivf_topk_prebuilt_vectorized(q, index, centroids, k=3, nprobe=2).collect()))
-    assert a == b == c
+    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_assign,
+        ivf_topk_prebuilt,
+        ivf_topk_prebuilt_routed,
+    )
+
+    def vecs(ids):
+        # deterministic, never-zero 4-dim vectors from the id
+        return ids.select(
+            F.col("id").alias("vec_id"),
+            F.array(*[
+                ((F.col("id") * p + i) % 17 + 1).cast("float") / F.lit(16.0)
+                - F.lit(0.5 if i % 2 else 0.0).cast("float")
+                for i, p in enumerate((7, 11, 13, 5))
+            ]).alias("embedding"),
+        )
+
+    corpus = vecs(spark.range(40))
+    queries = vecs(spark.range(1000, 21001))
+    centroids = corpus.filter(F.col("vec_id") < 3)
+    # the index artifacts are checkpointed leaves, so any broadcast left in
+    # a routed plan would be on the query side
+    index = build_ivf_index(corpus, centroids).localCheckpoint()
+    books = pq_train_codebooks(corpus, m=2, ksub=4, n_iter=1)
+    codes = pq_encode(corpus, books, m=2)
+    cells = ivf_assign(corpus, centroids, nprobe=1).select(
+        F.col("vec_id").alias("t_id"), "cell"
+    )
+    index_codes = cells.join(codes, "t_id").localCheckpoint()
+    for routed, ref in (
+        (
+            ivf_topk_prebuilt_routed(queries, index, centroids, k=2, nprobe=1),
+            ivf_topk_prebuilt(queries, index, centroids, k=2, nprobe=1),
+        ),
+        (
+            ivf_pq_topk_routed(queries, index_codes, centroids, books, k=2, nprobe=1, m=2),
+            ivf_pq_topk(queries, corpus, centroids, books, k=2, nprobe=1, m=2,
+                        codes=codes, corpus_cells=cells),
+        ),
+    ):
+        plan = routed._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan, plan
+        got = sorted(map(tuple, routed.collect()))
+        assert len(got) == 2 * 20_001
+        assert got == sorted(map(tuple, ref.collect()))
 
 
 def test_km_position_overflow_guard(spark):
@@ -552,43 +573,6 @@ def test_ivf_assign_vectorized_bit_identical(spark):
         assert a == b
 
 
-def test_numpy_twins_replicate_spark_nan_desc_ordering(spark):
-    """Zero-norm contract pin: Spark's non-ANSI 0/0 double division is
-    NULL (not IEEE NaN) and desc windows order nulls LAST; the numpy twin's
-    NaN sorts last in its local shortlist and returns to Spark as NULL via
-    the pandas->Arrow hop — so BOTH paths exclude the zero-norm row from a
-    top-k with enough valid candidates, identically.  (ANSI mode instead
-    raises DIVIDE_BY_ZERO in the expression path: zero-norm input is
-    invalid there by construction.)"""
-    import random
-
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
-        similarity_topk,
-    )
-
-    rnd = random.Random(7)
-    rows = [(int(i), [rnd.randrange(1, 17) / 16.0 for _ in range(8)]) for i in range(12)]
-    rows.append((99, [0.0] * 8))  # zero-norm corpus vector -> NaN cosine
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    q = df.filter(F.col("vec_id") < 2)
-    prev = spark.conf.get("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    a = sorted(
-        (r.q_id, r.rnk, r.t_id)
-        for r in similarity_topk(q, df, k=3, quantized=True).collect()
-    )
-    b = sorted(
-        (r.q_id, r.rnk, r.t_id)
-        for r in cosine_topk_vectorized(q, df, k=3).collect()
-    )
-    spark.conf.set("spark.sql.ansi.enabled", prev)
-    assert a == b
-    # the zero-norm row is excluded from BOTH results (NULL cosine,
-    # nulls-last) — twelve valid candidates fill every top-3
-    assert all(t != 99 for (_, _, t) in a)
-
-
 # --------------------------------------------------------------------------
 # bounded-driver guards — every contract-bounded collect fails loudly
 # --------------------------------------------------------------------------
@@ -616,17 +600,7 @@ def test_driver_bound_guards_fail_loudly(spark):
     with pytest.raises(DriverBoundExceeded, match="site.*alt"):
         check_driver_bound(11, 10, "site", "alt")
 
-    # cosine_topk_vectorized |Q| cap (lowered so the test is cheap)
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
-    )
-
     df = _vecs(spark, 30)
-    with pytest.raises(DriverBoundExceeded, match="cosine_topk_routed"):
-        cosine_topk_vectorized(df.filter(F.col("vec_id") < 20), df, k=3, max_queries=10)
-    # within bound still works
-    assert cosine_topk_vectorized(df.filter(F.col("vec_id") < 5), df, k=3,
-                                  max_queries=10).count() > 0
 
     # bloom literal m_bits cap — pure parameter check, no job
     from cell_kn_mvp_etl_ontologies_spark.operators.sketches import (

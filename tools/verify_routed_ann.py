@@ -1,17 +1,25 @@
-"""Bit-identity audit for the routed (non-collect) IVF serving path at a
-LARGE query batch (VERDICT r4 #2 "Done" condition).
+"""Bit-identity audit of the routed top-k kernel (``routed_topk``) against
+each cogrouped rung's expression reference, at the bench's 80k corpus.
 
-Builds the same 80k-corpus / 64-cell index as bench.py's ann_ivf_80k, then
-runs |Q| = 10,000 queries through BOTH serving paths:
+Builds the same 80k-corpus / 64-cell index, m=8 ksub=64 codebooks and
+(cell, t_id, codes) artifact as bench.py's ANN rows, then runs three
+routed-vs-reference pairs:
 
-  - ivf_topk_prebuilt         (expression path, per-candidate HOF dots)
-  - ivf_topk_prebuilt_routed  (cogrouped applyInPandas matmul, no driver
-                               collect of the query side)
+  - ivf_topk_prebuilt_routed  vs ivf_topk_prebuilt          (|Q| = 10,000)
+  - cosine_topk_routed        vs similarity_topk(quantized)  (|Q| = 200)
+  - ivf_pq_topk_routed        vs ivf_pq_topk                 (|Q| = 500)
 
-and asserts the two result sets are IDENTICAL — every (q_id, t_id, cos, rnk)
-tuple, cosines compared bit-for-bit as doubles.  Prints one JSON line.
+The routed rungs are cogrouped ``applyInArrow`` matmuls / LUT gathers
+with no driver collect of the query side.  Each pair's result sets must
+be IDENTICAL — every (q_id, rnk) -> (t_id, score) entry, scores compared
+bit-for-bit.  The brute and IVF-PQ references score every candidate
+pair with interpreted higher-order functions, so their query batches are
+smaller; every size is printed.  Prints one JSON line and exits 1 if any
+pair differs.
 
 Run from the repo root:  python tools/verify_routed_ann.py
+(env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ANN_Q,
+SPARK_GRAFT_BRUTE_Q, SPARK_GRAFT_PQ_Q)
 """
 
 from __future__ import annotations
@@ -28,16 +36,26 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_ontologies_spark.operators.clustering import kmeans_fit
+from cell_kn_mvp_etl_ontologies_spark.operators.pq import (
+    ivf_pq_topk,
+    ivf_pq_topk_routed,
+    pq_encode_vectorized,
+    pq_train_codebooks,
+)
 from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
     build_ivf_index,
+    cosine_topk_routed,
     ivf_topk_prebuilt,
     ivf_topk_prebuilt_routed,
+    similarity_topk,
 )
 from cell_kn_mvp_etl_ontologies_spark.session import ENGINE_SQL_CONF
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 N_QUERIES = int(os.environ.get("SPARK_GRAFT_ANN_Q", "10000"))
+N_BRUTE_QUERIES = int(os.environ.get("SPARK_GRAFT_BRUTE_Q", "200"))
+N_PQ_QUERIES = int(os.environ.get("SPARK_GRAFT_PQ_Q", "500"))
 
 
 def expanded_embeddings(spark, times: int = 40):
@@ -58,6 +76,23 @@ def expanded_embeddings(spark, times: int = 40):
         )
         .repartition(CPUS * 2)
     )
+
+
+def compare(n_queries: int, reference, routed, score_col: str) -> dict:
+    """Run both sides and compare (q_id, rnk) -> (t_id, score) maps."""
+    out = {"n_queries": n_queries}
+    results = []
+    for side, df in (("reference", reference), ("routed", routed)):
+        t0 = time.time()
+        results.append(
+            {(r.q_id, r.rnk): (r.t_id, r[score_col]) for r in df.collect()}
+        )
+        out[f"sec_{side}"] = round(time.time() - t0, 2)
+    a, b = results
+    out["rows_reference"], out["rows_routed"] = len(a), len(b)
+    out["n_diff"] = sum(1 for k_ in set(a) | set(b) if a.get(k_) != b.get(k_))
+    out["bit_identical"] = a == b
+    return out
 
 
 def main() -> None:
@@ -82,38 +117,51 @@ def main() -> None:
     centroids.count()
     index = build_ivf_index(corpus, centroids, n_partitions=CPUS * 2).persist()
     n_corpus = index.count()
-
-    q = corpus.filter(F.col("vec_id") < N_QUERIES)
-
-    t0 = time.time()
-    a = {
-        (r.q_id, r.rnk): (r.t_id, r.cos)
-        for r in ivf_topk_prebuilt(q, index, centroids, k=10, nprobe=8).collect()
-    }
-    t_expr = time.time() - t0
-    t0 = time.time()
-    b = {
-        (r.q_id, r.rnk): (r.t_id, r.cos)
-        for r in ivf_topk_prebuilt_routed(q, index, centroids, k=10, nprobe=8).collect()
-    }
-    t_routed = time.time() - t0
-
-    identical = a == b
-    n_diff = sum(1 for k_ in set(a) | set(b) if a.get(k_) != b.get(k_))
-    print(
-        json.dumps(
-            {
-                "n_corpus": n_corpus,
-                "n_queries": N_QUERIES,
-                "rows_expr": len(a),
-                "rows_routed": len(b),
-                "bit_identical": identical,
-                "n_diff": n_diff,
-                "sec_expr_path": round(t_expr, 2),
-                "sec_routed_path": round(t_routed, 2),
-            }
-        )
+    books = pq_train_codebooks(corpus, m=8, ksub=64, n_iter=2).persist()
+    books.count()
+    codes = pq_encode_vectorized(corpus, books, m=8).persist()
+    codes.count()
+    corpus_cells = index.select("t_id", "cell")
+    index_codes = (
+        corpus_cells.join(codes, on="t_id")
+        .select("cell", "t_id", "codes")
+        .repartition(CPUS, "cell")
+        .persist()
     )
+    index_codes.count()
+
+    def queries(n: int):
+        return corpus.filter(F.col("vec_id") < n)
+
+    q = queries(N_QUERIES)
+    pairs = {
+        "ivf_topk_prebuilt_routed": compare(
+            N_QUERIES,
+            ivf_topk_prebuilt(q, index, centroids, k=10, nprobe=8),
+            ivf_topk_prebuilt_routed(q, index, centroids, k=10, nprobe=8),
+            "cos",
+        )
+    }
+    q = queries(N_BRUTE_QUERIES)
+    pairs["cosine_topk_routed"] = compare(
+        N_BRUTE_QUERIES,
+        similarity_topk(q, corpus, k=10, quantized=True),
+        cosine_topk_routed(q, corpus, k=10, n_blocks=CPUS * 2),
+        "cos",
+    )
+    q = queries(N_PQ_QUERIES)
+    pairs["ivf_pq_topk_routed"] = compare(
+        N_PQ_QUERIES,
+        ivf_pq_topk(
+            q, corpus, centroids, books, k=10, nprobe=8, m=8,
+            codes=codes, corpus_cells=corpus_cells,
+        ),
+        ivf_pq_topk_routed(q, index_codes, centroids, books, k=10, nprobe=8, m=8),
+        "adc_dist",
+    )
+
+    identical = all(p["bit_identical"] for p in pairs.values())
+    print(json.dumps({"n_corpus": n_corpus, "all_identical": identical, "pairs": pairs}))
     spark.stop()
     if not identical:
         sys.exit(1)
