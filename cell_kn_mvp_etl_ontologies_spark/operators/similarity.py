@@ -229,17 +229,12 @@ def ivf_assign(
 
 
 def _ivf_probe(
-    df: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    scale: int,
-    id_col: str,
-    vec_col: str,
+    df: DataFrame, centroids: DataFrame, nprobe: int, scale: int
 ) -> DataFrame:
-    """The numpy probe map shared by ``ivf_assign_vectorized`` and the
-    routed IVF rungs: (id_col, cell, probe_rank, qv) — each vector's
-    ``nprobe`` nearest centroids plus its quantized vector ``qv``, repeated
-    once per probe so a routed rung needs no join back to the queries.
+    """The numpy probe map of the routed IVF rungs: (vec_id, cell,
+    probe_rank, qv) — each vector's ``nprobe`` nearest centroids, the same
+    rows as ``ivf_assign``, plus its quantized vector ``qv``, repeated once
+    per probe so a routed rung needs no join back to the queries.
 
     The k-row centroid table is collected driver-side (k-scale — the one
     collect that is always legal here) and each Arrow batch scores against
@@ -255,12 +250,12 @@ def _ivf_probe(
     from .guards import check_driver_bound
 
     crows = centroids.select(
-        F.col(id_col).alias("cell"), quantize_vec(F.col(vec_col), scale).alias("cv")
+        F.col("vec_id").alias("cell"), quantize_vec(F.col("embedding"), scale).alias("cv")
     ).collect()
     check_driver_bound(
         len(crows),
         65_536,
-        "ivf_assign_vectorized (centroid driver collect)",
+        "_ivf_probe (centroid driver collect)",
         "a coarser cell count at index build time (centroids are "
         "structurally k_cells rows — this bound failing means the index "
         "was built with a corpus-scale cell count)",
@@ -287,7 +282,7 @@ def _ivf_probe(
             d = V.shape[1]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(tbl.column(id_col).to_numpy()[rows], pa.int64()),
+                    pa.array(tbl.column("vec_id").to_numpy()[rows], pa.int64()),
                     pa.array(cells[order].reshape(-1), pa.int64()),
                     pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), batch.num_rows)),
                     pa.ListArray.from_arrays(
@@ -295,27 +290,12 @@ def _ivf_probe(
                         pa.array(V[rows].reshape(-1), pa.int64()),
                     ),
                 ],
-                names=[id_col, "cell", "probe_rank", "qv"],
+                names=["vec_id", "cell", "probe_rank", "qv"],
             )
 
     return df.select(
-        id_col, quantize_vec(F.col(vec_col), scale).alias("qv")
-    ).mapInArrow(probe, f"{id_col} long, cell long, probe_rank int, qv array<bigint>")
-
-
-def ivf_assign_vectorized(
-    df: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 1,
-    scale: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Bit-identical numpy twin of ``ivf_assign`` for LARGE assignment
-    batches (the ``_ivf_probe`` map).  probe_rank is INT, matching
-    ``ivf_assign``'s row_number type exactly so the two twins
-    union/compare without schema widening."""
-    return _ivf_probe(df, centroids, nprobe, scale, id_col, vec_col).drop("qv")
+        "vec_id", quantize_vec(F.col("embedding"), scale).alias("qv")
+    ).mapInArrow(probe, "vec_id long, cell long, probe_rank int, qv array<bigint>")
 
 
 def _ivf_route(
@@ -324,7 +304,7 @@ def _ivf_route(
     """(cell, q_id, q_vec): the routed-query side of the IVF rungs, one row
     per probed cell, straight from the probe map — the query batch is never
     joined back or broadcast, so its size has no broadcast bound."""
-    return _ivf_probe(queries, centroids, nprobe, scale, "vec_id", "embedding").select(
+    return _ivf_probe(queries, centroids, nprobe, scale).select(
         "cell", F.col("vec_id").alias("q_id"), F.col("qv").alias("q_vec")
     )
 
@@ -531,7 +511,11 @@ def ivf_topk_prebuilt_routed(
     ``ivf_topk_prebuilt``).  Per-cell state is bounded by cell size x
     probing-query count; a hot cell is the IVF analogue of a hot key,
     mitigated by raising k_cells at build time (documented trade, same as
-    the expression path)."""
+    the expression path).
+
+    A zero-norm query, or a zero-norm member of a probed cell, raises
+    ``ValueError`` (see ``_cosine_scores``) where the expression path
+    ranks its NULL cosine last."""
     members = index.select("cell", "t_id", "t_vec")
     return routed_topk(
         members, _ivf_route(queries, centroids, nprobe, scale), COSINE, k
@@ -741,7 +725,8 @@ def _cosine_topk_blocked(
     target lives in one block, each query is replicated to every block via
     explode(sequence(..)) — a pure codegen projection, no join node, so the
     plan auditor's cartesian check stays meaningful.  ``vec`` maps the
-    embedding column to the vector the kernel scores."""
+    embedding column to the vector the kernel scores; it runs before the
+    explode, once per query rather than once per (query, block)."""
     if n_blocks is None:
         n_blocks = int(queries.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     members = targets.select(
@@ -750,9 +735,9 @@ def _cosine_topk_blocked(
         vec(F.col("embedding")).alias("t_vec"),
     )
     routed = queries.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
-        F.col("vec_id").alias("q_id"),
-        vec(F.col("embedding")).alias("q_vec"),
+        F.col("vec_id").alias("q_id"), vec(F.col("embedding")).alias("q_vec")
+    ).select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"), "q_id", "q_vec"
     )
     return routed_topk(members, routed, COSINE, k)
 

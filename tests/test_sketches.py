@@ -317,21 +317,35 @@ def test_cosine_topk_routed_double_bit_identical_to_expression(spark):
         pytest.param("double", 2, 17, "t_id", id="17-t_id"),
         pytest.param("quantized", 16, 2, "q_id", id="quantized-2-q_id"),
         pytest.param("quantized", 16, 17, "t_id", id="quantized-17-t_id"),
+        pytest.param("ivf", None, 2, "q_id", id="ivf-2-q_id"),
+        pytest.param("ivf", None, 17, "t_id", id="ivf-17-t_id"),
     ],
 )
 def test_cosine_topk_routed_double_rejects_zero_norm(spark, rung, n_blocks, zero_id, side):
     """A zero vector has no cosine: the expression path yields NULL, which
     Spark's DESC window ranks last, while the cosine kernel's NaN crosses
-    Arrow as NaN and would rank FIRST.  So both routed cosine rungs
-    (double and quantized) must fail loudly, naming the vector, instead of
-    silently diverging from similarity_topk.  A zero query (id < 5) is a
-    zero corpus vector too; a zero corpus-only vector (id 17) must still
-    fail.  (Under ANSI the expression path raises DIVIDE_BY_ZERO instead.)"""
+    Arrow as NaN and would rank FIRST.  So every rung on the cosine kernel
+    (double, quantized, and IVF with every cell probed) must fail loudly,
+    naming the vector, instead of silently diverging from its expression
+    reference.  A zero query (id < 5) is a zero corpus vector too; a zero
+    corpus-only vector (id 17) must still fail.  (Under ANSI the expression
+    path raises DIVIDE_BY_ZERO instead, so it runs non-ANSI here.)"""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        build_ivf_index,
         cosine_topk_routed,
         cosine_topk_routed_double,
+        ivf_topk_prebuilt,
+        ivf_topk_prebuilt_routed,
         similarity_topk,
     )
+
+    def non_ansi(run):
+        prev = spark.conf.get("spark.sql.ansi.enabled", "false")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            return run()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
 
     rows = [
         (i, [0.0, 0.0, 0.0] if i == zero_id else [1.0 + i, -0.5, 0.25 * i])
@@ -339,19 +353,27 @@ def test_cosine_topk_routed_double_rejects_zero_norm(spark, rung, n_blocks, zero
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     q = df.filter(F.col("vec_id") < 5)
+    if rung == "ivf":
+        # three cells, all probed, so the zero vector's cell is always scored
+        cents = df.filter(F.col("vec_id").between(5, 7))
+        index = non_ansi(lambda: build_ivf_index(df, cents).localCheckpoint())
+        reference, routed = (
+            lambda: ivf_topk_prebuilt(q, index, cents, k=3, nprobe=3),
+            lambda: ivf_topk_prebuilt_routed(q, index, cents, k=3, nprobe=3),
+        )
+    else:
+        rung_fn = cosine_topk_routed_double if rung == "double" else cosine_topk_routed
+        reference, routed = (
+            lambda: similarity_topk(q, df, k=3, quantized=rung == "quantized"),
+            lambda: rung_fn(q, df, k=3, n_blocks=n_blocks),
+        )
     if side == "t_id":
         # the expression reference: NULL cosine, ranked last, so the zero
         # corpus vector is excluded from every top-3
-        prev = spark.conf.get("spark.sql.ansi.enabled", "false")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
-            ref = similarity_topk(q, df, k=3, quantized=rung == "quantized").collect()
-        finally:
-            spark.conf.set("spark.sql.ansi.enabled", prev)
+        ref = non_ansi(lambda: reference().collect())
         assert len(ref) == 15 and all(r.t_id != zero_id for r in ref)
-    routed = cosine_topk_routed_double if rung == "double" else cosine_topk_routed
     with pytest.raises(Exception, match=rf"zero-norm.*{side}=\[[^]]*\b{zero_id}\b"):
-        routed(q, df, k=3, n_blocks=n_blocks).collect()
+        routed().collect()
 
 
 # ----------------------------------------------------- NULL-input pins ----
@@ -544,13 +566,14 @@ def test_unigram_lm_vocab_validation_and_nonpositive_freq(spark):
 
 
 def test_ivf_assign_vectorized_bit_identical(spark):
-    """The numpy probe-assignment twin must match ivf_assign exactly —
-    including (c_cos, cell) tie-breaks — on dyadic .5-landing embeddings."""
+    """The numpy probe map of the routed IVF rungs (``_ivf_probe``) must
+    assign exactly as ivf_assign — including (c_cos, cell) tie-breaks — on
+    dyadic .5-landing embeddings."""
     import random
 
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        _ivf_probe,
         ivf_assign,
-        ivf_assign_vectorized,
     )
 
     rnd = random.Random(23)
@@ -568,7 +591,7 @@ def test_ivf_assign_vectorized_bit_identical(spark):
         )
         b = sorted(
             (r.vec_id, r.cell, r.probe_rank)
-            for r in ivf_assign_vectorized(em, cents, nprobe=nprobe).collect()
+            for r in _ivf_probe(em, cents, nprobe, 1000).collect()
         )
         assert a == b
 

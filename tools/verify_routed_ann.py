@@ -14,12 +14,11 @@ with no driver collect of the query side.  Each pair's result sets must
 be IDENTICAL — every (q_id, rnk) -> (t_id, score) entry, scores compared
 bit-for-bit.  The brute and IVF-PQ references score every candidate
 pair with interpreted higher-order functions, so their query batches are
-smaller; every size is printed.  Prints one JSON line and exits 1 if any
-pair differs.
+fixed smaller (N_BRUTE_QUERIES, N_PQ_QUERIES); every size is printed.
+Prints one JSON line and exits 1 if any pair differs.
 
 Run from the repo root:  python tools/verify_routed_ann.py
-(env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ANN_Q,
-SPARK_GRAFT_BRUTE_Q, SPARK_GRAFT_PQ_Q)
+(env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ANN_Q)
 """
 
 from __future__ import annotations
@@ -54,8 +53,9 @@ from cell_kn_mvp_etl_ontologies_spark.session import ENGINE_SQL_CONF
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 N_QUERIES = int(os.environ.get("SPARK_GRAFT_ANN_Q", "10000"))
-N_BRUTE_QUERIES = int(os.environ.get("SPARK_GRAFT_BRUTE_Q", "200"))
-N_PQ_QUERIES = int(os.environ.get("SPARK_GRAFT_PQ_Q", "500"))
+# the brute reference takes 50-100 s at 200 queries on 4 cores
+N_BRUTE_QUERIES = 200
+N_PQ_QUERIES = 500
 
 
 def expanded_embeddings(spark, times: int = 40):
