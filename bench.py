@@ -8,8 +8,9 @@ Queries are the engine's heavy paths: scan+agg, broadcast join + top-k,
 triples-shaped dedup+pivot, MinHash LSH (uncapped continuity row + the
 stop-template capped twin), the full ANN ladder on the shared 80k corpus
 (brute-force double and quantized cosine through the routed top-k kernel,
-IVF serving, cogroup-routed serving at |Q|=10k, routed IVF-PQ, PQ
-shortlist+rerank, binary Hamming scan), windowed running sums,
+IVF serving, cogroup-routed serving at |Q|=10k, routed IVF-PQ, routed
+MaxSim through the same kernel, PQ shortlist+rerank, binary Hamming
+scan), windowed running sums,
 as-of join, inverted/positional indexes, BM25, training curation, CDC,
 graph analytics, and the flagship ontology build.  Results are
 materialized with the noop sink so timings measure full compute without
@@ -409,9 +410,7 @@ def maxsim_routed_10k(spark):
     probe fractions (nprobe=1: 0.442→0.500; nprobe=4: 0.542→0.610) and
     is a WASH at this row's nprobe=8 (hash 0.680 vs trained 0.674) while
     adding the k-means pass (~2.3× wall).  So the benched serving path
-    stays md5-seeded at nprobe=8 — evidence over expectation — and
-    routing="trained" is the documented serving choice for the
-    low-nprobe regime."""
+    stays md5-seeded at nprobe=8 — evidence over expectation."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         maxsim_topk_routed_vectorized,
     )

@@ -1877,8 +1877,9 @@ def similarity_pq_trained_q(spark, sf_dir):
 @register("similarity_ann_ivf_routed", oracle=_IVF_ORACLE_SQL)
 def similarity_ann_ivf_routed_q(spark, sf_dir):
     """Fully-distributed vectorized IVF serving (VERDICT r4 #2): queries
-    never touch the driver — probe routing is a cell-keyed join and scoring
-    is a cogrouped applyInPandas matmul per cell.  Must be bit-identical to
+    never touch the driver — the probe map emits each query once per
+    probed cell and scoring is routed_topk's cogrouped applyInArrow
+    cosine matmul per cell.  Must be bit-identical to
     similarity_ann_ivf (same oracle replay), which is what makes the
     routing/cogroup machinery itself hash-gated cross-engine."""
     from ..operators.similarity import build_ivf_index, ivf_topk_prebuilt_routed

@@ -336,10 +336,11 @@ def similarity_maxsim_routed_q(spark, sf_dir):
 def similarity_maxsim_routed_vec_q(spark, sf_dir):
     """Cogrouped-vectorized MaxSim serving at nprobe = n_cells
     (operators/similarity.py maxsim_topk_routed_vectorized): the
-    production hot path — per-cell int64 numpy matmuls replace the
-    expression twin's interpreted per-token-pair HOF dots, routing shared
-    verbatim (maxsim_route_cells), quantization still expression-side so
-    ONE rounding mode is in play.  Third share of the same oracle
+    production hot path — routed_topk with the MaxSim kernel, whose
+    stacked int64 matmuls per cell replace the expression twin's
+    interpreted per-token-pair HOF dots, routing shared verbatim
+    (maxsim_route_cells), quantization still expression-side so ONE
+    rounding mode is in play.  Third share of the same oracle
     constant: brute, routed-expression, and routed-vectorized are pinned
     mutually bit-identical."""
     from ..operators.similarity import maxsim_topk_routed_vectorized

@@ -31,10 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .similarity import quantize_vec, sq_dist_long as _sq_dist
-from .windows import window_rank_topk
+from .similarity import md5_seed_cells, nearest_cells, quantize_vec
 
 
 def kmeans_fit(
@@ -54,29 +52,14 @@ def kmeans_fit(
     quant = df.select(
         F.col(id_col), quantize_vec(F.col(vec_col), scale).alias("qv")
     )
-    # orderBy+limit plans as TakeOrderedAndProject (per-partition k-heaps,
-    # driver merge) — the global row_number window then runs over k rows only
-    seed_rows = quant.select(
-        id_col, "qv", F.md5(F.col(id_col).cast("string")).alias("h")
-    ).orderBy("h", id_col).limit(k)
-    seeds = seed_rows.select(
-        (
-            F.row_number().over(Window.orderBy("h", F.col(id_col))) - 1
-        ).cast("int").alias("cell"),
-        F.col("qv").alias("cv"),
+    centroids = (
+        md5_seed_cells(quant, id_col, "qv", k)
+        .select(F.col("cell").cast("int").alias("cell"), "cv")
+        .localCheckpoint(eager=True)
     )
-    centroids = seeds.localCheckpoint(eager=True)
-
-    def assign(cents: DataFrame) -> DataFrame:
-        scored = quant.join(F.broadcast(cents), on=F.lit(True)).select(
-            id_col, "cell", _sq_dist(F.col("qv"), F.col("cv")).alias("d")
-        )
-        return window_rank_topk(
-            scored, [id_col], [F.col("d").asc(), F.col("cell").asc()], 1
-        ).select(id_col, "cell")
 
     for _ in range(n_iter):
-        assigned = assign(centroids)
+        assigned = nearest_cells(quant, id_col, "qv", centroids, 1)
         dims = (
             assigned.join(quant, on=id_col)
             .select("cell", F.posexplode("qv").alias("i", "v"))
@@ -113,12 +96,7 @@ def kmeans_assign(
     quant = df.select(
         F.col(id_col), quantize_vec(F.col(vec_col), scale).alias("qv")
     )
-    scored = quant.join(F.broadcast(centroids), on=F.lit(True)).select(
-        id_col, "cell", _sq_dist(F.col("qv"), F.col("cv")).alias("d")
-    )
-    return window_rank_topk(
-        scored, [id_col], [F.col("d").asc(), F.col("cell").asc()], 1
-    ).select(id_col, "cell")
+    return nearest_cells(quant, id_col, "qv", centroids, 1)
 
 
 def kmeans_integer(

@@ -81,6 +81,39 @@ def sq_dist_long(a: Column, b: Column) -> Column:
     )
 
 
+def md5_seed_cells(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """THE seed draw of every md5-seeded cell set (k-means and the
+    cell-routed rungs): the first ``n`` rows of ``df`` by
+    (md5(cast(id as string)), id), numbered ``cell`` 0..n-1 in that order,
+    with their vectors as ``cv`` — a uniform but deterministic draw, a pure
+    function of the ids.  orderBy+limit plans as TakeOrderedAndProject
+    (per-partition n-heaps, driver merge), so the numbering window runs
+    over n rows only.  ``cell`` is the window's INT; callers cast."""
+    top = df.select(
+        id_col, vec_col, F.md5(F.col(id_col).cast("string")).alias("h")
+    ).orderBy("h", id_col).limit(n)
+    return top.select(
+        (F.row_number().over(Window.orderBy("h", F.col(id_col))) - 1).alias("cell"),
+        F.col(vec_col).alias("cv"),
+    )
+
+
+def nearest_cells(
+    side: DataFrame, id_col: str, vec_col: str, centers: DataFrame, keep: int
+) -> DataFrame:
+    """THE nearest-cell assignment: each ``side`` row's ``keep`` nearest
+    ``centers`` (cell, cv) by exact int64 squared L2 (``sq_dist_long``),
+    ties to the smaller cell — (id_col, cell).  The centers are n_cells
+    rows by construction and broadcast, so the side never shuffles for the
+    distances, only for the per-id top-``keep`` window."""
+    scored = side.join(F.broadcast(centers), on=F.lit(True)).select(
+        id_col, "cell", sq_dist_long(F.col(vec_col), F.col("cv")).alias("d")
+    )
+    return window_rank_topk(
+        scored, [id_col], [F.col("d").asc(), F.col("cell").asc()], keep
+    ).select(id_col, "cell")
+
+
 def with_norm_sq(df: DataFrame, vec_col: str, out_col: str = "norm_sq") -> Column:
     return df.withColumn(out_col, _dot_long(F.col(vec_col), F.col(vec_col)))
 
@@ -396,6 +429,13 @@ def ivf_topk_prebuilt(
     )
 
 
+def _plane_hash16(seed: int, p: Column, d: Column) -> Column:
+    """The hyperplane LSH plane component's hash for (plane p, dim d): the
+    first 4 hex chars of md5(seed|p|d) as a decimal string in [0, 65535]."""
+    h = F.md5(F.concat_ws("|", F.lit(str(seed)), p.cast("string"), d.cast("string")))
+    return F.conv(F.substring(h, 1, 4), 16, 10)
+
+
 def hyperplane_lsh_bucket_quantized(
     df: DataFrame, vec_col: str = "embedding", n_planes: int = 8, seed: int = 42, scale: int = 1000
 ) -> DataFrame:
@@ -415,20 +455,7 @@ def hyperplane_lsh_bucket_quantized(
             F.zip_with(
                 qv,
                 F.sequence(F.lit(0), F.size(qv) - 1),
-                lambda x, d: x
-                * (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws("|", F.lit(str(seed)), p.cast("string"), d.cast("string"))),
-                            1,
-                            4,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    * 2
-                    - 65535
-                ),
+                lambda x, d: x * (_plane_hash16(seed, p, d).cast("long") * 2 - 65535),
             ),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
@@ -454,11 +481,8 @@ def hyperplane_lsh_bucket(df: DataFrame, vec_col: str, n_planes: int = 16, seed:
     planes = F.sequence(F.lit(0), F.lit(n_planes - 1))
 
     def plane_component(p: Column, d: Column) -> Column:
-        h = F.md5(F.concat_ws("|", F.lit(seed), p.cast("string"), d.cast("string")))
-        # first 4 hex chars -> [0, 65535] -> centered
-        return (
-            F.conv(F.substring(h, 1, 4), 16, 10).cast("double") - F.lit(32767.5)
-        )
+        # [0, 65535] -> centered
+        return _plane_hash16(seed, p, d).cast("double") - F.lit(32767.5)
 
     sign_bits = F.transform(
         planes,
@@ -533,8 +557,9 @@ def exact_int_matmul(A, B):
     batches to vectorized native libraries).  Quantized embeddings are
     |v| ≲ 1e3·scale_margin, so the guard passes by ~6 orders of magnitude;
     it exists so adversarial inputs degrade to slow-but-exact, never to
-    silently-wrong.  Returns float64 (integer-valued when the guard held).
-    """
+    silently-wrong.  Returns integer-valued float64 when the guard held,
+    else the exact int64 product (dividing callers see the same float64
+    either way; the MaxSim kernel keeps every dot exact)."""
     import numpy as np
 
     ka = A.shape[1]
@@ -542,7 +567,7 @@ def exact_int_matmul(A, B):
     mb = int(np.abs(B).max(initial=0))
     if ma * mb * ka < 2**53:
         return A.astype(np.float64) @ B.astype(np.float64)
-    return (A @ B).astype(np.float64)
+    return A @ B
 
 
 def grouped_topk_indices(key, t_ids_sorted, q_ids, k: int):
@@ -715,6 +740,51 @@ def _cosine_scores(mem, qs):
 
 
 COSINE = TopkKernel(_cosine_scores, "cos", "double", descending=True)
+
+# queries per stacked MaxSim matmul: one block's dot matrix is (Σ doc
+# tokens of the cell) × (Σ tokens of at most this many queries), however
+# many queries probe the cell
+_MAXSIM_Q_BLOCK = 128
+
+
+def _packed_tokens(tbl, np):
+    """A ``maxsim_topk_routed_vectorized`` packed side — per row, its
+    tokens' quantized vectors concatenated in one flat ``toks`` list plus
+    their count ``n_toks`` — as the (Σ tokens, d) int64 token matrix and
+    each row's first token index."""
+    arr = tbl.column("toks").combine_chunks()
+    if arr.null_count:
+        raise ValueError("NULL token matrix in MaxSim kernel input")
+    counts = tbl.column("n_toks").to_numpy()
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    return flat.reshape(int(counts.sum()), -1), starts
+
+
+def _maxsim_scores(mem, qs):
+    """The MaxSim kernel: (n_t, n_q) int64 Σ_{query token} max_{doc token}
+    ⟨q_tok, t_tok⟩.  Per block of ``_MAXSIM_Q_BLOCK`` queries, ONE stacked
+    matmul (Σ doc tokens, d) × (Σ query tokens, d)ᵀ (``exact_int_matmul``),
+    a segmented max over each doc's token rows, and an int64 segmented
+    sum over each query's token columns.  Max and int64 sum are exact and
+    order-free, so the scores equal the expression path's per-token-pair
+    fold bit for bit."""
+    import numpy as np
+
+    T, t_starts = _packed_tokens(mem, np)
+    Q, q_starts = _packed_tokens(qs, np)
+    q_ends = np.append(q_starts[1:], Q.shape[0])
+    S = np.empty((t_starts.size, q_starts.size), dtype=np.int64)
+    for b in range(0, q_starts.size, _MAXSIM_Q_BLOCK):
+        e = min(b + _MAXSIM_Q_BLOCK, q_starts.size)
+        lo = q_starts[b]
+        dots = exact_int_matmul(T, Q[lo:q_ends[e - 1]].T)
+        best = np.maximum.reduceat(dots, t_starts, axis=0).astype(np.int64)
+        S[:, b:e] = np.add.reduceat(best, q_starts[b:e] - lo, axis=1)
+    return S
+
+
+MAXSIM = TopkKernel(_maxsim_scores, "maxsim_units", "long", descending=True)
 
 
 def _cosine_topk_blocked(
@@ -898,119 +968,32 @@ def maxsim_route_cells(
     scale: int = 1000,
     q_sum: DataFrame | None = None,
     t_sum: DataFrame | None = None,
-    vectorized_assign: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """THE routing chain for cell-routed MaxSim, shared verbatim by the
     expression path (``maxsim_topk_routed``) and the cogrouped vectorized
     path (``maxsim_topk_routed_vectorized``) so their candidate sets are
     identical by construction: int64 token-sum summaries
     (``maxsim_doc_summaries``), seeds = first ``n_cells`` docs by
-    (md5(t_id), t_id), assignment = exact int64 squared L2 to the nearest
-    seed (ties → smaller cell); queries keep their ``nprobe`` nearest
-    cells.  Returns (q_cells, t_cells) as (id, cell) frames.
+    (md5(t_id), t_id) (``md5_seed_cells``), assignment = exact int64
+    squared L2 to the nearest seed, ties → smaller cell (``nearest_cells``);
+    queries keep their ``nprobe`` nearest cells.  Returns (q_cells,
+    t_cells) as (id, cell BIGINT) frames.
 
     ``q_sum``/``t_sum`` (id, svec) override the internally-computed
     summaries — the streaming maintainer's hook: token-SUM summaries are
     ADDITIVE, so a stream can keep them fresh by merging per-batch sums
     (`stream_maxsim_maintain`) and route through the maintained table
-    without ever rescanning the corpus tokens.
-
-    ``vectorized_assign`` swaps the assignment stage's implementation —
-    NOT its result: the expression shape evaluates |docs|·n_cells
-    interpreted zip_with/aggregate HOF distances through a window top-k,
-    while the vectorized shape collects the BOUNDED seed table (n_cells
-    rows — the k-means driver-loop doctrine) and computes per-batch exact
-    int64 ‖v‖²+‖s‖²−2·v·s matrices in numpy with a stable argsort whose
-    tie order is cell-ascending by construction.  int64 matmul/argsort
-    are exact, so the two shapes are BIT-IDENTICAL — pinned by an
-    identity test on random inputs.  MEASURED NEGATIVE RESULT at the
-    benched 10k×64 shape (round-10 A/B, min-of-5): the vectorized twin
-    costs 4.87 s full-row vs the expression path's 3.76 s — the eager
-    summary-materialization job plus the Arrow hop exceed the interpreted
-    HOF it replaces — so the default stays False; the twin is the
-    documented choice for n_cells in the hundreds+, where the
-    |docs|·n_cells HOF explode dominates instead."""
+    without ever rescanning the corpus tokens."""
     if t_sum is None:
         t_sum = maxsim_doc_summaries(t_tokens, "t_id", scale)
     if q_sum is None:
         q_sum = maxsim_doc_summaries(q_tokens, "q_id", scale)
-    if vectorized_assign:
-        # the seed collect is an EXTRA eager job consuming the summaries
-        # subtree — materialize the summaries once so the collect and the
-        # two downstream assigns share them instead of re-deriving the
-        # corpus scan + fold per consumer (measured: without this the
-        # vectorized path LOST 1.7 s to recomputation at the bench shape)
-        t_sum = t_sum.localCheckpoint(eager=True)
-        q_sum = q_sum.localCheckpoint(eager=True)
-    seeds = (
-        t_sum.select(
-            "t_id",
-            "svec",
-            F.row_number()
-            .over(
-                Window.orderBy(
-                    F.md5(F.col("t_id").cast("string")), F.col("t_id")
-                )
-            )
-            .alias("_r"),
-        )
-        .filter(F.col("_r") <= n_cells)
-        .select((F.col("_r") - 1).cast("long").alias("cell"), F.col("svec").alias("_sv"))
+    seeds = md5_seed_cells(t_sum, "t_id", "svec", n_cells)
+    seeds = seeds.withColumn("cell", F.col("cell").cast("long"))
+    return (
+        nearest_cells(q_sum, "q_id", "svec", seeds, nprobe),
+        nearest_cells(t_sum, "t_id", "svec", seeds, 1),
     )
-
-    if vectorized_assign:
-        import numpy as np
-
-        rows = seeds.orderBy("cell").collect()  # bounded: ≤ n_cells rows
-        S = np.asarray([r["_sv"] for r in rows], dtype=np.int64)
-        cells_arr = np.asarray([r["cell"] for r in rows], dtype=np.int64)
-        ss = (S * S).sum(axis=1)
-
-        def _assign(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-            k = min(keep, len(cells_arr))
-
-            def run(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    V = np.array(
-                        [np.asarray(v, dtype=np.int64) for v in pdf["svec"]]
-                    )
-                    vv = (V * V).sum(axis=1)
-                    # exact int64 squared L2; ties break to the SMALLER cell
-                    # because columns are cell-ascending and the stable sort
-                    # preserves column order among equal distances
-                    d = vv[:, None] + ss[None, :] - 2 * (V @ S.T)
-                    idx = np.argsort(d, axis=1, kind="stable")[:, :k]
-                    yield pd.DataFrame(
-                        {
-                            id_col: np.repeat(pdf[id_col].to_numpy(), k),
-                            "cell": cells_arr[idx].reshape(-1),
-                        }
-                    )
-
-            return side.mapInPandas(run, f"{id_col} long, cell long")
-
-    else:
-
-        def _assign(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-            d = side.join(F.broadcast(seeds), on=F.lit(True), how="inner").select(
-                id_col,
-                "cell",
-                sq_dist_long(F.col("svec"), F.col("_sv")).alias("_d"),
-            )
-            w = Window.partitionBy(id_col).orderBy(
-                F.col("_d").asc(), F.col("cell").asc()
-            )
-            return (
-                d.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= keep)
-                .select(id_col, "cell")
-            )
-
-    return _assign(q_sum, "q_id", nprobe), _assign(t_sum, "t_id", 1)
 
 
 def maxsim_topk_routed(
@@ -1084,13 +1067,12 @@ def maxsim_topk_routed_vectorized(
     n_cells: int = 4,
     nprobe: int | None = None,
     scale: int = 1000,
-    routing: str = "hash",
 ) -> DataFrame:
-    """Fully-distributed vectorized MaxSim serving — the
-    ``ivf_topk_prebuilt_routed`` shape applied to the multi-vector rung,
-    and the production hot path: the expression twin's per-token-pair HOF
-    dots evaluate interpreted (the documented HOF landmine), while here
-    each cell does ONE int64 numpy matmul per (query, doc) token block.
+    """Fully-distributed vectorized MaxSim serving — ``routed_topk`` with
+    the MaxSim kernel, and the production hot path: the expression twin's
+    per-token-pair HOF dots evaluate interpreted (the documented HOF
+    landmine), while here each cell does stacked int64 matmuls over all
+    its (query, doc) token pairs and keeps each query's local top-k.
 
     Routing is ``maxsim_route_cells`` — the SAME chain as
     ``maxsim_topk_routed``, shared by construction, so the candidate sets
@@ -1108,37 +1090,12 @@ def maxsim_topk_routed_vectorized(
     candidates (each doc lives in exactly one cell → candidates are
     duplicate-free; union-of-local-top-k applies per query).  Hot cells
     are one straggler task — k_cells at route-build time is the documented
-    mitigation, as for IVF.
-
-    ``routing`` picks the cell builder: ``"hash"`` = md5-seeded
-    ``maxsim_route_cells`` (no training pass; exact with nprobe=all, the
-    gate shape, and the benched nprobe=8 default); ``"trained"`` =
-    ``maxsim_route_cells_trained`` (k-means over the summaries) — the
-    measured A/B (SCALE.md §maxsim-trained-serving, VERDICT r7 #5) shows
-    trained cells buy recall only at LOW probe fractions (nprobe ≤ 4 of
-    64: 0.442→0.500 @1, 0.542→0.610 @4) and wash out by nprobe=8, so
-    trained is the low-probe-budget serving choice, not the default.
-    Scoring downstream of the cells is byte-identical either way.
+    mitigation, as for IVF.  Output: (q_id, t_id, maxsim_units,
+    n_q_tokens, rnk).
     """
-    import numpy as np
-    import pyarrow as pa
-
     if nprobe is None:
         nprobe = n_cells
-    if routing == "trained":
-        q_cells, t_cells = maxsim_route_cells_trained(
-            q_tokens, t_tokens, n_cells, nprobe, scale=scale
-        )
-    else:
-        # expression assign, deliberately: the numpy vectorized_assign twin
-        # MEASURED SLOWER at this exact shape (round-10 A/B, min-of-5 —
-        # 4.87 s vs 3.76 s full-row; naive version without summary
-        # materialization 5.49 s): the eager summary job + Arrow hop cost
-        # more than the interpreted HOF distances they replace at
-        # 10k docs × 64 cells.  The twin stays implemented + identity-
-        # gated for the regime where it should win (n_cells in the
-        # hundreds+, where the |docs|·n_cells HOF explode dominates).
-        q_cells, t_cells = maxsim_route_cells(q_tokens, t_tokens, n_cells, nprobe, scale)
+    q_cells, t_cells = maxsim_route_cells(q_tokens, t_tokens, n_cells, nprobe, scale)
 
     def _pack(tokens: DataFrame, id_col: str, tok_col: str) -> DataFrame:
         # FLAT array<long> of the concatenated token vectors + a token
@@ -1164,104 +1121,22 @@ def maxsim_topk_routed_vectorized(
             F.flatten("_toks").alias("toks"),
         )
 
+    q_packed = _pack(q_tokens, "q_id", "q_tok")
     # the q and t sides often share lineage (queries ARE corpus docs in the
     # audits), which trips Spark's ambiguous-self-join analysis inside the
     # cogroup — re-alias the grouping column through a fresh exprId on one
     # side so the two children are distinguishable
-    q_packed = _pack(q_tokens, "q_id", "q_tok").join(q_cells, "q_id").select(
+    routed = q_packed.join(q_cells, "q_id").select(
         (F.col("cell") + F.lit(0)).alias("cell"), "q_id", "n_toks", "toks"
     )
-    t_packed = _pack(t_tokens, "t_id", "t_tok").join(t_cells, "t_id").select(
+    members = _pack(t_tokens, "t_id", "t_tok").join(t_cells, "t_id").select(
         "cell", "t_id", "n_toks", "toks"
     )
-
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "maxsim_units": pa.array([], pa.int64()),
-            "n_q_tokens": pa.array([], pa.int64()),
-        }
-    )
-
-    # Arrow-native cogroup scorer (round 15 — the same §4.2 boundary fix as
-    # routed_topk): the flat token-matrix columns cross the Python boundary
-    # as ONE contiguous int64 buffer per side (list offsets give the per-doc
-    # slices) instead of being boxed into object-dtype pandas cells one
-    # numpy array per row.  The numpy core — one exactness-guarded matmul
-    # per (query, cell), segmented max, int64 sum — is exact, so results are
-    # bit-identical to maxsim_topk_routed, pinned by
-    # tests/test_frontier.py::test_maxsim_vectorized_matches_expression_at_pruning_probe.
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        t_ids = mem.column("t_id").to_numpy()
-        # ragged docs arrive FLAT: one concatenated int64 vector per doc
-        # plus its token count; infer dim from the first doc and reshape
-        counts = mem.column("n_toks").to_numpy()
-        toks_arr = mem.column("toks").combine_chunks()
-        if toks_arr.null_count:
-            raise ValueError("NULL token matrix in maxsim cogroup scorer input")
-        m_offs = np.asarray(toks_arr.offsets)
-        flat_all = toks_arr.flatten().to_numpy(zero_copy_only=False)
-        dim = int(m_offs[1] - m_offs[0]) // int(counts[0])
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        T_all = flat_all.reshape(-1, dim)
-        q_toks_arr = qs.column("toks").combine_chunks()
-        if q_toks_arr.null_count:
-            raise ValueError("NULL token matrix in maxsim cogroup scorer input")
-        # offsets of a sliced ListArray need not start at 0, while flatten()
-        # returns only the covered values — rebase so they index q_flat
-        q_offs = np.asarray(q_toks_arr.offsets)
-        q_offs = q_offs - q_offs[0]
-        q_flat = q_toks_arr.flatten().to_numpy(zero_copy_only=False)
-        out_q, out_t, out_units, out_ntok = [], [], [], []
-        for qi, (qid, qn) in enumerate(
-            zip(qs.column("q_id").to_numpy(), qs.column("n_toks").to_numpy())
-        ):
-            Q = q_flat[q_offs[qi]:q_offs[qi + 1]].reshape(int(qn), -1)
-            # ONE matmul per (query, cell), then a segmented max per doc:
-            # max and sum over int64 are exact, so this is bit-identical to
-            # the expression path's per-token-pair fold.  Round 14: route
-            # the matmul through float64 BLAS when provably exact (every
-            # dot AND the nq-term sum are integers < 2^53 — see
-            # exact_int_matmul); numpy int64 matmul is a naive C loop.
-            mq = int(np.abs(Q).max(initial=0))
-            mt = int(np.abs(T_all).max(initial=0))
-            if mq * mt * Q.shape[1] * max(int(qn), 1) < 2**53:
-                dots = Q.astype(np.float64) @ T_all.T.astype(np.float64)
-                seg_max = np.maximum.reduceat(dots, starts, axis=1)
-                sums = seg_max.sum(axis=0).astype(np.int64)
-            else:
-                dots = Q @ T_all.T                                   # (nq, Σ|doc|)
-                seg_max = np.maximum.reduceat(dots, starts, axis=1)  # (nq, |docs|)
-                sums = seg_max.sum(axis=0)                           # (|docs|,)
-            keep = t_ids != qid
-            if not keep.any():
-                continue
-            n_keep = int(keep.sum())
-            out_q.append(np.full(n_keep, qid, dtype=np.int64))
-            out_t.append(t_ids[keep])
-            out_units.append(sums[keep])
-            out_ntok.append(np.full(n_keep, int(qn), dtype=np.int64))
-        if not out_q:
-            return empty
-        return pa.table(
-            {
-                "q_id": np.concatenate(out_q),
-                "t_id": np.concatenate(out_t),
-                "maxsim_units": np.concatenate(out_units),
-                "n_q_tokens": np.concatenate(out_ntok),
-            }
-        )
-
-    cand = (
-        t_packed.groupBy("cell")
-        .cogroup(q_packed.groupBy("cell"))
-        .applyInArrow(score, "q_id long, t_id long, maxsim_units long, n_q_tokens long")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("maxsim_units").desc(), F.col("t_id").asc()], k, rank_col="rnk"
+    n_q_tokens = q_packed.select("q_id", F.col("n_toks").alias("n_q_tokens"))
+    return (
+        routed_topk(members, routed, MAXSIM, k)
+        .join(n_q_tokens, "q_id")
+        .select("q_id", "t_id", "maxsim_units", "n_q_tokens", "rnk")
     )
 
 
@@ -1290,20 +1165,11 @@ def maxsim_route_cells_trained(
         k=n_cells,
         n_iter=n_iter,
         scale=1,
+    ).withColumn("cell", F.col("cell").cast("long"))
+    return (
+        nearest_cells(q_sum, "q_id", "svec", cents, nprobe),
+        nearest_cells(t_sum, "t_id", "svec", cents, 1),
     )
-
-    def _assign(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-        scored = side.join(F.broadcast(cents), on=F.lit(True), how="inner").select(
-            id_col, "cell", sq_dist_long(F.col("svec"), F.col("cv")).alias("_d")
-        )
-        w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(), F.col("cell").asc())
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .select(id_col, F.col("cell").cast("long").alias("cell"))
-        )
-
-    return _assign(q_sum, "q_id", nprobe), _assign(t_sum, "t_id", 1)
 
 
 def range_search_routed(
@@ -1337,36 +1203,16 @@ def range_search_routed(
     nprobe = 1.  Every piece of routing state is integer-exact, so the
     candidate SET (not just the refined output) is engine-independent.
     """
-    seeds = (
-        em.select(
-            "vec_id",
-            "qv",
-            F.row_number()
-            .over(Window.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id")))
-            .alias("_r"),
-        )
-        .filter(F.col("_r") <= n_cells)
-        .select((F.col("_r") - 1).cast("long").alias("cell"), F.col("qv").alias("cv"))
+    seeds = md5_seed_cells(em, "vec_id", "qv", n_cells)
+    seeds = seeds.withColumn("cell", F.col("cell").cast("long"))
+    t_cells = nearest_cells(em, "vec_id", "qv", seeds, 1)
+    q_cells = nearest_cells(queries, "vec_id", "qv", seeds, nprobe)
+    cand = (
+        q_cells.withColumnRenamed("vec_id", "q_id")
+        .join(t_cells.withColumnRenamed("vec_id", "t_id"), on="cell")
+        .filter(F.col("t_id") != F.col("q_id"))
+        .select("q_id", "t_id")
     )
-
-    def _assign(side: DataFrame, keep: int, out_id: str) -> DataFrame:
-        scored = side.join(F.broadcast(seeds), on=F.lit(True), how="inner").select(
-            F.col("vec_id").alias(out_id),
-            "cell",
-            sq_dist_long(F.col("qv"), F.col("cv")).alias("_d"),
-        )
-        w = Window.partitionBy(out_id).orderBy(F.col("_d").asc(), F.col("cell").asc())
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .select(out_id, "cell")
-        )
-
-    t_cells = _assign(em, 1, "t_id")
-    q_cells = _assign(queries, nprobe, "q_id")
-    cand = q_cells.join(t_cells, on="cell").filter(
-        F.col("t_id") != F.col("q_id")
-    ).select("q_id", "t_id")
     qv = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("qv").alias("q_qv"),

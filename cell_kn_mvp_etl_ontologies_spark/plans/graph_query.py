@@ -981,9 +981,9 @@ def betweenness_bounded(
     v (order-independent ⇒ partition-proof), combined on the Brandes
     identity d_sv + d_vt = d_st.  Nodes on no shortest path report 0.
     """
-    sigma = bounded_shortest_counts(edges, src, dst, max_hops).localCheckpoint(
-        eager=True
-    )
+    # stats_cut, not localCheckpoint: sigma feeds three join branches
+    # (sv ⋈ vt ⋈ st_), the >2-branch shape of SCALE.md §stats-compounding
+    sigma = stats_cut(bounded_shortest_counts(edges, src, dst, max_hops))
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))

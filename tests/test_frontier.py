@@ -206,48 +206,14 @@ def test_maxsim_routed_identity_at_full_probe(spark):
     )
 
 
-def test_maxsim_trained_routing_identity_at_full_probe(spark):
-    """routing='trained' changes WHICH cells exist, never the scoring:
-    at nprobe = n_cells the trained-cell cogrouped path must still be
-    bit-identical to brute (the routed-identity doctrine), and at a
-    pruning probe its results must be a subset of the exact ranking."""
-    import numpy as np
-
-    rng = np.random.default_rng(29)
-    tv = rng.normal(size=(10, 4, 6)).astype(np.float32)
-    t_rows = [
-        (int(d), int(t), [float(x) for x in tv[d, t]])
-        for d in range(10) for t in range(4)
-    ]
-    t = spark.createDataFrame(t_rows, "t_id long, t_tok long, vec array<float>")
-    q = (
-        t.filter(F.col("t_id") < 3)
-        .select(F.col("t_id").alias("q_id"), F.col("t_tok").alias("q_tok"), "vec")
-    )
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        maxsim_topk,
-        maxsim_topk_routed_vectorized,
-    )
-
-    brute = rows_set(maxsim_topk(q, t, k=4), "q_id", "t_id", "maxsim_units")
-    routed = rows_set(
-        maxsim_topk_routed_vectorized(q, t, k=4, n_cells=3, nprobe=3, routing="trained"),
-        "q_id", "t_id", "maxsim_units",
-    )
-    assert brute == routed
-    pruned = rows_set(
-        maxsim_topk_routed_vectorized(q, t, k=4, n_cells=3, nprobe=1, routing="trained"),
-        "q_id", "t_id", "maxsim_units",
-    )
-    assert pruned <= rows_set(
-        maxsim_topk(q, t, k=10 * 4), "q_id", "t_id", "maxsim_units"
-    )
-
-
 def test_maxsim_vectorized_matches_expression_at_pruning_probe(spark):
     # the two routed paths share maxsim_route_cells; at a PRUNING probe
     # (nprobe=1) any routing or scoring divergence would surface as a
-    # different candidate set or score — assert full-row equality
+    # different candidate set or score — assert full-row equality.  Two
+    # shapes stress the kernel's per-cell top-k cut: five docs with one
+    # identical token set (one tie group, one cell) probed at k=3, so the
+    # cut must keep the smaller t_ids, and two far docs alone in a cell
+    # holding fewer than k docs.
     import numpy as np
 
     rng = np.random.default_rng(29)
@@ -256,26 +222,70 @@ def test_maxsim_vectorized_matches_expression_at_pruning_probe(spark):
         (int(d), int(t), [float(x) for x in tv[d, t]])
         for d in range(12) for t in range(3)
     ]
+    near = [[4.0 if j == t else 0.0 for j in range(5)] for t in range(3)]
+    far = [[-6.0 if j == t else 0.0 for j in range(5)] for t in range(3)]
+    t_rows += [(d, t, near[t]) for d in range(20, 25) for t in range(3)]
+    t_rows += [(168, t, far[t]) for t in range(3)]
+    t_rows += [(169, t, [x * 5 / 6 for x in far[t]]) for t in range(3)]
     t = spark.createDataFrame(t_rows, "t_id long, t_tok long, vec array<float>")
     q = (
-        t.filter(F.col("t_id") < 4)
+        t.filter((F.col("t_id") < 4) | F.col("t_id").isin(21, 168))
         .select(F.col("t_id").alias("q_id"), F.col("t_tok").alias("q_tok"), "vec")
+        .unionByName(
+            spark.createDataFrame(
+                [(100, t_, near[t_]) for t_ in range(3)],
+                "q_id long, q_tok long, vec array<float>",
+            )
+        )
     )
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
+        maxsim_route_cells,
         maxsim_topk_routed,
         maxsim_topk_routed_vectorized,
     )
 
+    cell_of = dict(map(tuple, maxsim_route_cells(q, t, 3, 1)[1].collect()))
+    assert len({cell_of[d] for d in range(20, 25)}) == 1
+    assert sum(c == cell_of[168] for c in cell_of.values()) < 3
     for nprobe in (1, 2):
-        expr = rows_set(
-            maxsim_topk_routed(q, t, k=3, n_cells=3, nprobe=nprobe),
-            "q_id", "t_id", "maxsim_units", "n_q_tokens",
-        )
-        vec = rows_set(
-            maxsim_topk_routed_vectorized(q, t, k=3, n_cells=3, nprobe=nprobe),
-            "q_id", "t_id", "maxsim_units", "n_q_tokens",
-        )
+        expr = rows_set(maxsim_topk_routed(q, t, k=3, n_cells=3, nprobe=nprobe))
+        vec = rows_set(maxsim_topk_routed_vectorized(q, t, k=3, n_cells=3, nprobe=nprobe))
         assert expr == vec
+        top = {(r[0], r[1]) for r in vec if r[0] in (21, 100)}
+        assert top == {(21, 20), (21, 22), (21, 23), (100, 20), (100, 21), (100, 22)}
+
+
+def test_maxsim_kernel_matches_pairwise_reference_across_query_blocks():
+    """The MaxSim kernel on ragged packed sides, with more queries than
+    one stacked-matmul block and with values both inside the float64-BLAS
+    exactness guard and past it (the exact int64 fallback), equals the
+    per-(query, doc) Σ max reference in int64."""
+    import numpy as np
+    import pyarrow as pa
+
+    from cell_kn_mvp_etl_ontologies_spark.operators import similarity
+
+    rng = np.random.default_rng(11)
+
+    def packed(n, d, hi):
+        toks = [rng.integers(-hi, hi, size=(int(rng.integers(1, 5)), d)) for _ in range(n)]
+        tbl = pa.table({
+            "n_toks": pa.array([len(t) for t in toks], pa.int64()),
+            "toks": pa.array([t.reshape(-1).tolist() for t in toks], pa.list_(pa.int64())),
+        })
+        return tbl, toks
+
+    n_q = 2 * similarity._MAXSIM_Q_BLOCK + 3
+    for hi in (1000, 2**26):
+        mem, docs = packed(7, 5, hi)
+        qs, queries = packed(n_q, 5, hi)
+        want = np.array(
+            [[sum(max(int(np.dot(q, t)) for t in doc) for q in qry) for qry in queries] for doc in docs],
+            dtype=np.int64,
+        )
+        got = similarity._maxsim_scores(mem, qs)
+        assert got.dtype == np.int64
+        assert (got == want).all()
 
 
 def test_bitmap_sliding_distinct_matches_recount(spark):

@@ -312,43 +312,6 @@ def test_cindex_full_equals_bounded_tier_on_shared_slice(spark, tmp_path):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_maxsim_route_vectorized_assign_identity(spark):
-    """maxsim_route_cells(vectorized_assign=True) must be bit-identical to
-    the expression assign on random token sets — both cell assignments AND
-    the nprobe query routing (stable-argsort tie order == dist ASC, cell
-    ASC).  The vectorized twin is a measured NEGATIVE result at the bench
-    shape (kept for the many-cells regime); identity is what keeps it
-    swappable."""
-    import random
-
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        maxsim_route_cells,
-    )
-
-    rng = random.Random(13)
-    rows = []
-    for t_id in range(40):
-        for tok in range(4):
-            vec = [rng.uniform(-1, 1) for _ in range(8)]
-            rows.append((t_id, tok, vec))
-    toks = spark.createDataFrame(rows, "t_id long, t_tok long, vec array<double>")
-    # force equal-distance ties: duplicate the first doc's tokens onto ids
-    # 100/101 so their summaries (and distances to every seed) collide
-    dup = toks.filter(F.col("t_id") == 0)
-    toks = toks.unionByName(
-        dup.select(F.lit(100).cast("long").alias("t_id"), "t_tok", "vec")
-    ).unionByName(
-        dup.select(F.lit(101).cast("long").alias("t_id"), "t_tok", "vec")
-    )
-    q = toks.filter(F.col("t_id") < 5).select(
-        F.col("t_id").alias("q_id"), F.col("t_tok").alias("q_tok"), "vec"
-    )
-    qe, te = maxsim_route_cells(q, toks, 8, 3, 1000)
-    qv, tv = maxsim_route_cells(q, toks, 8, 3, 1000, vectorized_assign=True)
-    assert {tuple(r) for r in te.collect()} == {tuple(r) for r in tv.collect()}
-    assert {tuple(r) for r in qe.collect()} == {tuple(r) for r in qv.collect()}
-
-
 def test_k_anonymity_hand_case(spark):
     """Classes of sizes 1, 3, 12: at k=2 only the singleton violates; at
     k=5 the 3-class joins it; at k=10 all but the 12-class.  The

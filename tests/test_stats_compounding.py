@@ -104,6 +104,17 @@ def test_iterative_catalog_operators_sit_under_the_gate(spark):
         assert bits <= AUDIT_BITS_MAX, f"{name}: {bits} bits"
 
 
+def test_betweenness_bounded_sits_under_the_gate_at_sf001(spark):
+    """graph_betweenness_bounded joins its shortest-count table in three
+    branches (sv ⋈ vt ⋈ st_); with a bare localCheckpoint the carried
+    estimate reached 311 bits at sf0.01 — the stats cut keeps it flat."""
+    from cell_kn_mvp_etl_ontologies_spark import catalog
+
+    catalog.load_all()
+    df = catalog.QUERIES["graph_betweenness_bounded"](spark, "/root/testdata/sf0.01")
+    assert _bits(df) <= AUDIT_BITS_MAX
+
+
 def test_stats_cut_shared_root_mode(spark, tmp_path, monkeypatch):
     """With SPARK_GRAFT_STATS_CUT_DIR set, cuts write unique subdirs under
     the shared root, return plain parquet scans (flat stats, recompute

@@ -243,9 +243,9 @@ WAIVERS: dict[str, set[str]] = {
     # boilerplate report (the sanctioned 1-row stats-frame pattern).
     "text_boilerplate_census": {"CARTESIAN"},
     # the routed radius rung: its cross joins are the n_cells=4-row seed
-    # frame broadcast onto the corpus/query sides for exact-L2 assignment
-    # (the maxsim_route_cells assignment shape) — candidates themselves
-    # come from the (cell) equi-join, never all-pairs.
+    # frame (md5_seed_cells) broadcast onto the corpus/query sides for
+    # exact-L2 assignment (nearest_cells) — candidates themselves come
+    # from the (cell) equi-join, never all-pairs.
     "similarity_range_search_routed": {"CARTESIAN"},
     # the df-capped weighted-Jaccard refine unions the pair face with the
     # corpus-level audit row, so the census subtree appears twice (audit's
@@ -254,8 +254,8 @@ WAIVERS: dict[str, set[str]] = {
     # agg) — none corpus-single-partition, per-key fanout capped at 16.
     "dedup_minhash_weighted_capped": {"MANY_EXCH"},
     # the cogrouped-vectorized twin routes through the same seed broadcast
-    # (maxsim_route_cells is shared verbatim); scoring is the cell-keyed
-    # cogroup — no data-scale cross product.
+    # (md5_seed_cells + nearest_cells, via maxsim_route_cells); scoring is
+    # routed_topk's cell-keyed cogroup — no data-scale cross product.
     "similarity_maxsim_routed_vec": {"CARTESIAN"},
     # the recall audit runs BOTH the brute baseline (broadcast query
     # tokens, the similarity_maxsim waiver) and the routed chain (seed

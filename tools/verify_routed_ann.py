@@ -2,20 +2,25 @@
 each cogrouped rung's expression reference, at the bench's 80k corpus.
 
 Builds the same 80k-corpus / 64-cell index, m=8 ksub=64 codebooks and
-(cell, t_id, codes) artifact as bench.py's ANN rows, then runs three
+(cell, t_id, codes) artifact as bench.py's ANN rows, then runs four
 routed-vs-reference pairs:
 
-  - ivf_topk_prebuilt_routed  vs ivf_topk_prebuilt          (|Q| = 10,000)
-  - cosine_topk_routed        vs similarity_topk(quantized)  (|Q| = 200)
-  - ivf_pq_topk_routed        vs ivf_pq_topk                 (|Q| = 500)
+  - ivf_topk_prebuilt_routed       vs ivf_topk_prebuilt          (|Q| = 10,000)
+  - cosine_topk_routed             vs similarity_topk(quantized)  (|Q| = 200)
+  - ivf_pq_topk_routed             vs ivf_pq_topk                 (|Q| = 500)
+  - maxsim_topk_routed_vectorized  vs maxsim_topk_routed          (|Q| = 50)
+
+The MaxSim pair runs bench.py's maxsim_routed_10k shape: the corpus
+regrouped into 10k 8-token documents, 64 cells, nprobe=8, k=10.
 
 The routed rungs are cogrouped ``applyInArrow`` matmuls / LUT gathers
 with no driver collect of the query side.  Each pair's result sets must
-be IDENTICAL — every (q_id, rnk) -> (t_id, score) entry, scores compared
-bit-for-bit.  The brute and IVF-PQ references score every candidate
-pair with interpreted higher-order functions, so their query batches are
-fixed smaller (N_BRUTE_QUERIES, N_PQ_QUERIES); every size is printed.
-Prints one JSON line and exits 1 if any pair differs.
+be IDENTICAL — every (q_id, rnk) -> (t_id, score columns) entry, scores
+compared bit-for-bit.  The brute, IVF-PQ and MaxSim references score
+every candidate pair with interpreted higher-order functions, so their
+query batches are fixed smaller (N_BRUTE_QUERIES, N_PQ_QUERIES,
+N_MAXSIM_QUERIES); every size is printed.  Prints one JSON line and
+exits 1 if any pair differs.
 
 Run from the repo root:  python tools/verify_routed_ann.py
 (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ANN_Q)
@@ -46,6 +51,8 @@ from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
     cosine_topk_routed,
     ivf_topk_prebuilt,
     ivf_topk_prebuilt_routed,
+    maxsim_topk_routed,
+    maxsim_topk_routed_vectorized,
     similarity_topk,
 )
 from cell_kn_mvp_etl_ontologies_spark.session import ENGINE_SQL_CONF
@@ -56,6 +63,8 @@ N_QUERIES = int(os.environ.get("SPARK_GRAFT_ANN_Q", "10000"))
 # the brute reference takes 50-100 s at 200 queries on 4 cores
 N_BRUTE_QUERIES = 200
 N_PQ_QUERIES = 500
+# query docs of the MaxSim pair: bench.py maxsim_routed_10k's batch
+N_MAXSIM_QUERIES = 50
 
 
 def expanded_embeddings(spark, times: int = 40):
@@ -78,14 +87,17 @@ def expanded_embeddings(spark, times: int = 40):
     )
 
 
-def compare(n_queries: int, reference, routed, score_col: str) -> dict:
-    """Run both sides and compare (q_id, rnk) -> (t_id, score) maps."""
+def compare(n_queries: int, reference, routed, *score_cols: str) -> dict:
+    """Run both sides and compare (q_id, rnk) -> (t_id, *scores) maps."""
     out = {"n_queries": n_queries}
     results = []
     for side, df in (("reference", reference), ("routed", routed)):
         t0 = time.time()
         results.append(
-            {(r.q_id, r.rnk): (r.t_id, r[score_col]) for r in df.collect()}
+            {
+                (r.q_id, r.rnk): (r.t_id, *(r[c] for c in score_cols))
+                for r in df.collect()
+            }
         )
         out[f"sec_{side}"] = round(time.time() - t0, 2)
     a, b = results
@@ -158,6 +170,21 @@ def main() -> None:
         ),
         ivf_pq_topk_routed(q, index_codes, centroids, books, k=10, nprobe=8, m=8),
         "adc_dist",
+    )
+    toks = corpus.select(
+        F.expr("vec_id div 8").cast("long").alias("t_id"),
+        (F.col("vec_id") % 8).cast("long").alias("t_tok"),
+        F.col("embedding").alias("vec"),
+    )
+    q_toks = toks.filter(F.col("t_id") < N_MAXSIM_QUERIES).select(
+        F.col("t_id").alias("q_id"), F.col("t_tok").alias("q_tok"), "vec"
+    )
+    pairs["maxsim_topk_routed_vectorized"] = compare(
+        N_MAXSIM_QUERIES,
+        maxsim_topk_routed(q_toks, toks, k=10, n_cells=64, nprobe=8),
+        maxsim_topk_routed_vectorized(q_toks, toks, k=10, n_cells=64, nprobe=8),
+        "maxsim_units",
+        "n_q_tokens",
     )
 
     identical = all(p["bit_identical"] for p in pairs.values())
