@@ -16,8 +16,8 @@ graph analytics, and the flagship ontology build.  Results are
 materialized with the noop sink so timings measure full compute without
 driver collection.  Methodology (warm session, min-of-3 with
 inter-iteration GC, one-time ANN/PQ index builds amortized via _ANN_STATE
-with post-clearCache re-persist, sentinel-normalized cross-round
-comparison) is pinned in BASELINE.md.
+local checkpoints, which the inter-query clearCache leaves in place,
+sentinel-normalized cross-round comparison) is pinned in BASELINE.md.
 """
 
 from __future__ import annotations
@@ -237,11 +237,14 @@ def ann_ivf_80k(spark):
     corpus at nprobe=8 (8× candidate pruning vs brute force).
 
     The index (train quantizer -> assign corpus -> partition by cell) builds
-    ONCE on first call and persists: it is the per-corpus-version offline
-    cost that amortizes over every query batch, exactly as at 100 TB, so
-    min-of-3 records the steady-state serving cost.  The build wall-time is
-    recorded separately in BASELINE.md; the recall of this same path is
-    hash-gated by the catalog's similarity_ann_recall query."""
+    ONCE on first call into eager local checkpoints: it is the
+    per-corpus-version offline cost that amortizes over every query batch,
+    exactly as at 100 TB, so min-of-3 records the steady-state serving cost.
+    Checkpoint blocks survive the inter-query clearCache(), so later ANN
+    rows serve from them instead of recomputing them from lineage.  The
+    build wall-time is recorded separately in BASELINE.md; the recall of
+    this same path is hash-gated by the catalog's similarity_ann_recall
+    query."""
     from cell_kn_mvp_etl_ontologies_spark.operators.clustering import kmeans_fit
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         build_ivf_index,
@@ -249,24 +252,18 @@ def ann_ivf_80k(spark):
     )
 
     if "index" not in _ANN_STATE:
-        corpus = _expanded_embeddings(spark).persist()
+        corpus = _expanded_embeddings(spark).localCheckpoint(eager=True)
         cents = kmeans_fit(corpus, "vec_id", "embedding", k=64, n_iter=2)
         centroids = cents.select(
             F.col("cell").cast("long").alias("vec_id"),
             F.transform("cv", lambda x: (x / 1000.0).cast("float")).alias("embedding"),
-        ).persist()
-        centroids.count()
-        index = build_ivf_index(corpus, centroids, n_partitions=CPUS * 2).persist()
-        index.count()
+        ).localCheckpoint(eager=True)
+        index = build_ivf_index(corpus, centroids, n_partitions=CPUS * 2).localCheckpoint(
+            eager=True
+        )
         _ANN_STATE["corpus"] = corpus
         _ANN_STATE["centroids"] = centroids
         _ANN_STATE["index"] = index
-    else:
-        # the bench's inter-query clearCache() drops these from the cache
-        # manager; re-persist so iterations 2-3 (and later ANN entries)
-        # time steady-state serving, not index recompute
-        for key in ("corpus", "centroids", "index"):
-            _ANN_STATE[key].persist()
     q = _ANN_STATE["corpus"].filter(F.col("vec_id") < 50)
     return ivf_topk_prebuilt(q, _ANN_STATE["index"], _ANN_STATE["centroids"], k=10, nprobe=8)
 
@@ -274,35 +271,28 @@ def ann_ivf_80k(spark):
 def _ensure_ivf_pq_artifacts(spark):
     """Build-once offline artifacts shared by the PQ rungs: trained
     codebooks + codes (m=8, ksub=64) and the cell-keyed (cell, t_id,
-    codes) index joined from the IVF assignment — persisted in _ANN_STATE
-    (re-persisted on later calls; the bench's inter-query clearCache()
-    drops cache-manager state)."""
+    codes) index joined from the IVF assignment — local checkpoints in
+    _ANN_STATE, which the bench's inter-query clearCache() leaves in place."""
     from cell_kn_mvp_etl_ontologies_spark.operators.pq import (
         pq_encode_vectorized,
         pq_train_codebooks,
     )
 
     if "pq_codes" not in _ANN_STATE:
-        ann_ivf_80k(spark)  # shares the persisted corpus + centroids + index
+        ann_ivf_80k(spark)  # shares the checkpointed corpus + centroids + index
         corpus = _ANN_STATE["corpus"]
-        books = pq_train_codebooks(corpus, m=8, ksub=64, n_iter=2).persist()
-        books.count()
-        codes = pq_encode_vectorized(corpus, books, m=8).persist()
-        codes.count()
+        books = pq_train_codebooks(corpus, m=8, ksub=64, n_iter=2).localCheckpoint(eager=True)
+        codes = pq_encode_vectorized(corpus, books, m=8).localCheckpoint(eager=True)
         index_codes = (
             _ANN_STATE["index"].select("cell", "t_id")
             .join(codes, on="t_id")
             .select("cell", "t_id", "codes")
             .repartition(CPUS, "cell")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        index_codes.count()
         _ANN_STATE["pq_books"] = books
         _ANN_STATE["pq_codes"] = codes
         _ANN_STATE["ivf_pq_index"] = index_codes
-    else:
-        for key in ("corpus", "centroids", "pq_books", "pq_codes", "ivf_pq_index"):
-            _ANN_STATE[key].persist()
 
 
 def ann_pq_rerank_80k(spark):
@@ -317,7 +307,7 @@ def ann_pq_rerank_80k(spark):
     nprobe = all 64 cells == exact full-ADC shortlist, bit-identical by
     test) instead of the expression code-fetch + LUT-sum exchanges — the
     same shape change that took IVF-PQ serving from 7.4 s to 1.5 s.  New
-    path, own BASELINE.md band.  Artifacts build once (~45 s) and persist;
+    path, own BASELINE.md band.  Artifacts build once (~45 s) and are kept;
     min-of-3 times the steady-state two-stage serve."""
     from cell_kn_mvp_etl_ontologies_spark.operators.pq import pq_adc_rerank_topk_routed
 
@@ -337,7 +327,7 @@ def ann_ivf_pq_80k(spark):
     cogrouped per-cell LUT gather (operators/pq.py ivf_pq_topk_routed,
     bit-identical to the expression path — shared catalog oracle +
     tests/test_pq.py).  The offline artifact (cell, t_id, codes) builds
-    once and persists; min-of-3 times pure serving.  The expression-path
+    once and is kept; min-of-3 times pure serving.  The expression-path
     twin measured 7.4-8.3 s on this exact workload (its keyed code-fetch +
     LUT-sum exchanges; recorded in SCALE.md §pq) — the routed cogroup is
     the scale shape for both speed and the no-driver-term cost model."""
@@ -364,7 +354,7 @@ def ann_hamming_80k(spark):
     raw scan rate of the compressed representation."""
     from cell_kn_mvp_etl_ontologies_spark.operators.pq import hamming_topk
 
-    ann_ivf_80k(spark)  # shared persisted corpus
+    ann_ivf_80k(spark)  # shared checkpointed corpus
     corpus = _ANN_STATE["corpus"]
     q = corpus.filter(F.col("vec_id") < 50)
     return hamming_topk(q, corpus, k=10)

@@ -13,6 +13,9 @@ posture:
   the JVM's 64 KB codegen method limit (whole stages then silently fall back
   to interpreted execution).  The rule only ever adds redundant predicates
   for this workload — every semantic filter is already explicit in the plans.
+- Parquet is written with zstd, not Spark's default snappy: smaller files
+  for a few percent more peak memory (SCALE.md, "Graph landing is
+  compact").
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ ENGINE_SQL_CONF: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"
     ),
+    "spark.sql.parquet.compression.codec": "zstd",
 }
 
 

@@ -1,5 +1,35 @@
-from .graph import read_graph_vertices, upsert_parquet, write_graph
-from .jsonl import export_jsonl
-from .sharded import verify_range_sharded, write_range_sharded
-from .side_outputs import write_deprecated_terms, write_edge_labels
-from .zorder import write_zorder_clustered, z_value, z_value_sql, zorder_cell_stats
+"""Sinks: the parquet graph store, the graph-service wire load and the
+file exports.
+
+The package exports lazily (PEP 562): an executor worker that unpickles a
+transport (``sinks.http_transport``) imports this package first, and an
+eager ``from .graph import ...`` would pull in ``operators`` and pandas
+with it, about half a second per fresh Python worker.
+"""
+
+from importlib import import_module
+
+_EXPORTS = {
+    "read_graph_vertices": "graph",
+    "upsert_parquet": "graph",
+    "write_graph": "graph",
+    "export_jsonl": "jsonl",
+    "verify_range_sharded": "sharded",
+    "write_range_sharded": "sharded",
+    "write_deprecated_terms": "side_outputs",
+    "write_edge_labels": "side_outputs",
+    "write_zorder_clustered": "zorder",
+    "z_value": "zorder",
+    "z_value_sql": "zorder",
+    "zorder_cell_stats": "zorder",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(import_module(f".{_EXPORTS[name]}", __name__), name)
+    globals()[name] = value
+    return value

@@ -12,6 +12,15 @@ single distributed MERGE join.  The reference drops and recreates its
 databases at the start of every run (OntologyGraphBuilder.java:511-517), so
 mode='overwrite' reproduces its semantics; ``upsert_parquet`` covers the
 incremental path.
+
+Every landing goes through ``_land``, so each partition directory holds one
+parquet file (zstd, the engine's codec: ``session.ENGINE_SQL_CONF``) whose
+rows are ordered by the table's keys.  The rows are rebalanced on the
+partition columns, so each directory's rows reach one write task, and AQE
+splits a directory whose rows exceed its advisory partition size into
+several tasks, hence several files.  The graph's collections are small
+(a few KB to a few hundred KB each), so per-file parquet overhead, not row
+data, would dominate a store landed as one file per (task, directory).
 """
 
 from __future__ import annotations
@@ -33,6 +42,24 @@ def _edges_path(root: str, database: str, graph: str) -> str:
     return f"{root}/{database}/{graph}/edges"
 
 
+def _land(
+    df: DataFrame, path: str, partition_by: list[str], keys: list[str], mode: str
+) -> None:
+    """Write ``df`` under ``path`` partitioned by ``partition_by``: one file
+    per partition directory (more only where AQE splits a skewed one), rows
+    sorted by ``keys``.  The sort leads with the partition columns, so it is
+    also the ordering the partitioned write requires and the write plans no
+    second sort."""
+    order = partition_by + [k for k in keys if k not in partition_by]
+    (
+        df.hint("rebalance", *partition_by)
+        .sortWithinPartitions(*order)
+        .write.mode(mode)
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
 def write_graph(
     vertices: DataFrame,
     edges: DataFrame,
@@ -41,7 +68,9 @@ def write_graph(
     graph: str,
     mode: str = "overwrite",
 ) -> None:
-    """Land a graph's vertices and edges under ``{root}/{database}/{graph}``.
+    """Land a graph's vertices and edges under ``{root}/{database}/{graph}``:
+    one zstd parquet file per collection directory, vertices sorted by
+    ``key`` and edges by (``from_key``, ``to_key``) (module docstring).
 
     The two writes are independent jobs whose final stages run only a few
     tasks each, so they run concurrently: the edge write on a second thread,
@@ -55,16 +84,13 @@ def write_graph(
     """
 
     def write_edges() -> None:
-        edges.write.mode(mode).partitionBy("from_collection", "to_collection").parquet(
-            _edges_path(root, database, graph)
-        )
+        _land(edges, _edges_path(root, database, graph),
+              ["from_collection", "to_collection"], ["from_key", "to_key"], mode)
 
     # leaving the pool joins the edge thread, also when the vertex write raises
     with ThreadPoolExecutor(max_workers=1, thread_name_prefix="write_graph") as pool:
         edges_written = pool.submit(inheritable_thread_target(edges.sparkSession)(write_edges))
-        vertices.write.mode(mode).partitionBy("collection").parquet(
-            _vertices_path(root, database, graph)
-        )
+        _land(vertices, _vertices_path(root, database, graph), ["collection"], ["key"], mode)
         edges_written.result()
 
 
@@ -80,9 +106,11 @@ def upsert_parquet(
     partition_by: list[str] | None = None,
 ) -> None:
     """MERGE-style upsert into a parquet path: full-outer join of incoming vs
-    existing with incoming-wins semantics, rewritten atomically via a staging
-    path.  (With a transactional table format this is a single MERGE INTO;
-    plain parquet needs the rewrite.)"""
+    existing with incoming-wins semantics (no deletes), rewritten atomically
+    via a staging path.  (With a transactional table format this is a single
+    MERGE INTO; plain parquet needs the rewrite.)  The merged table lands
+    like ``write_graph``: one zstd file per partition directory, rows sorted
+    by ``keys``."""
     existing = read_state_parquet(spark, path)
     if existing is not None:
         merged = join_upsert(incoming, existing.select(*incoming.columns), keys)
@@ -91,9 +119,5 @@ def upsert_parquet(
     # two-phase: a source path cannot be overwritten while being read, so
     # materialize the merge to a staging dir, then rename it into place
     staging = path.rstrip("/") + "__staging"
-
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    _land(merged, staging, partition_by or [], keys, "overwrite")
     replace_parquet_dir(spark, staging, path.rstrip("/"))

@@ -27,6 +27,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType
 
 Transport = Callable[[str, list[dict]], None]
 
@@ -103,17 +104,21 @@ def upsert_graph_via_transport(
 
     The vertices load in one pass: each partition routes its rows into a
     buffer per collection value, so the load is one Spark job however many
-    collections there are.  The distinct collection values (a tiny driver
-    list by construction: ontology prefixes) are checked first, so a bad
-    value fails on the driver before any request is sent."""
-    colls = [r[0] for r in vertices.select(vertex_collection_col).distinct().collect()]
-    bad = [c for c in colls if c is None or not isinstance(c, str)]
+    collections there are.  The collection column is checked first, so a
+    bad value fails on the driver before any request is sent: its type from
+    the schema (no job), then a probe for one null (no shuffle)."""
+    col = vertices[vertex_collection_col]
+    dtype = vertices.schema[vertex_collection_col].dataType
+    bad = None
+    if not isinstance(dtype, StringType):
+        bad = f"type {dtype.simpleString()}"
+    elif vertices.filter(col.isNull()).limit(1).collect():
+        bad = "a null value"
     if bad:
         raise ValueError(
             f"vertex column {vertex_collection_col!r} must be non-null strings; "
-            f"found invalid collection values {bad!r} — filter or map them "
-            "before loading (str(None) would silently create a 'None' "
-            "collection in the graph service)"
+            f"found {bad} — filter or map it before loading (str(None) would "
+            "silently create a 'None' collection in the graph service)"
         )
     args = (transport, batch_size, max_retries, backoff)
     _load_partitions(vertices, lambda doc: doc[vertex_collection_col], *args)

@@ -114,6 +114,21 @@ def test_graph_upsert_rejects_null_collection(spark, tmp_path):
     assert os.listdir(root) == []
 
 
+def test_graph_upsert_rejects_non_string_collection(spark, tmp_path):
+    """A non-string collection column fails from its schema on the driver,
+    before any request is sent, even when every value is non-null."""
+    root = str(tmp_path)
+    vertices = spark.createDataFrame(
+        [(7, "0000235", "macrophage")], "collection int, key string, label string"
+    )
+    edges = spark.createDataFrame(
+        [], "from_collection string, to_collection string, from_key string, to_key string"
+    )
+    with pytest.raises(ValueError, match="non-null strings; found type int"):
+        upsert_graph_via_transport(vertices, edges, _dir_transport(root), batch_size=10)
+    assert os.listdir(root) == []
+
+
 def _load_jobs(spark, vertices, edges, transport, batch_size):
     """Run the graph load under a fresh job group; return its Spark job count."""
     sc = spark.sparkContext

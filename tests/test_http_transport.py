@@ -7,6 +7,8 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
+import sys
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -150,3 +152,20 @@ def test_graph_wire_sink_bench_row_batches(spark, monkeypatch):
             if key in bench_mod._WIRE_STATE:
                 bench_mod._WIRE_STATE[key].unpersist()
         bench_mod._WIRE_STATE.clear()
+
+
+def test_http_transport_import_skips_operators_and_pandas():
+    """A Python worker that unpickles the transport imports the ``sinks``
+    package first; its lazy exports keep that import free of the operator
+    library and pandas, so a fresh worker does not pay for them."""
+    probe = (
+        "import sys\n"
+        "import cell_kn_mvp_etl_ontologies_spark.sinks.http_transport\n"
+        "print(sorted(m for m in ('pandas', 'cell_kn_mvp_etl_ontologies_spark.operators')"
+        " if m in sys.modules))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=repo, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"

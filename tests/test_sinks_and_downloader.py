@@ -80,6 +80,70 @@ def test_write_graph_concurrent_writes_keep_job_group(spark, graph, tmp_path):
         jsc.clearJobGroup()
 
 
+def _landed_files(path):
+    """{partition directory: [data file, ...]} under a landed table."""
+    out = {}
+    for dirpath, _, names in os.walk(path):
+        data = [n for n in names if not n.startswith((".", "_"))]
+        if data:
+            out[dirpath] = data
+    return out
+
+
+def test_graph_landing_layout(spark, graph, tmp_path):
+    """write_graph and upsert_parquet land each partition directory as one
+    zstd parquet file with its rows ordered by key, and the upserted store
+    is the old store overridden by the incoming rows (incoming wins, no
+    deletes)."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "store")
+    write_graph(graph.vertices, graph.edges, root, "db", "g")
+    g = f"{root}/db/g"
+    v_old = {(r["collection"], r["key"]): r["attrs"] for r in graph.vertices.collect()}
+    e_keys = ["from_collection", "to_collection", "from_key", "to_key"]
+    e_old = {tuple(r[k] for k in e_keys): (r["labels"], r["sources"]) for r in graph.edges.collect()}
+
+    v_new = spark.createDataFrame(
+        [("CL", "0000576", {"label": ["classical monocyte"]}),
+         ("CL", "0000001", {"label": ["primary cultured cell"]}),
+         ("UBERON", "0002390", {"label": ["hematopoietic system"]})],
+        graph.vertices.schema,
+    )
+    e_new = spark.createDataFrame(
+        [("CL", "CL", "0000235", "0000576", ["SUB_CLASS_OF"], ["CL"]),
+         ("CL", "UBERON", "0000235", "0002390", ["PART_OF"], ["CL"])],
+        graph.edges.schema,
+    )
+    upsert_parquet(spark, v_new, f"{g}/vertices", ["collection", "key"], ["collection"])
+    upsert_parquet(spark, e_new, f"{g}/edges", e_keys, ["from_collection", "to_collection"])
+
+    for table, sort_keys in (("vertices", ["key"]), ("edges", ["from_key", "to_key"])):
+        files = _landed_files(f"{g}/{table}")
+        assert files and all(len(names) == 1 for names in files.values()), files
+        for dirpath, (name,) in files.items():
+            f = pq.ParquetFile(os.path.join(dirpath, name))
+            meta = f.metadata
+            assert {
+                meta.row_group(i).column(j).compression
+                for i in range(meta.num_row_groups)
+                for j in range(meta.num_columns)
+            } == {"ZSTD"}
+            rows = f.read(columns=sort_keys).to_pylist()
+            order = [tuple(r[k] for k in sort_keys) for r in rows]
+            assert order == sorted(order), dirpath
+
+    v_got = {(r["collection"], r["key"]): r["attrs"]
+             for r in spark.read.parquet(f"{g}/vertices").collect()}
+    e_got = {tuple(r[k] for k in e_keys): (r["labels"], r["sources"])
+             for r in spark.read.parquet(f"{g}/edges").collect()}
+    v_old.update({(r["collection"], r["key"]): r["attrs"] for r in v_new.collect()})
+    e_old.update({tuple(r[k] for k in e_keys): (r["labels"], r["sources"])
+                  for r in e_new.collect()})
+    assert v_got == v_old
+    assert e_got == e_old
+
+
 def test_upsert_parquet(spark, tmp_path):
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([(1, "a"), (2, "b")], "k: long, v: string")

