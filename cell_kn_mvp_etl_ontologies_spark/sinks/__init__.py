@@ -1,35 +1,11 @@
 """Sinks: the parquet graph store, the graph-service wire load and the
 file exports.
 
-The package exports lazily (PEP 562): an executor worker that unpickles a
-transport (``sinks.http_transport``) imports this package first, and an
-eager ``from .graph import ...`` would pull in ``operators`` and pandas
-with it, about half a second per fresh Python worker.
+The package re-exports nothing; import from the submodules
+(``sinks.graph``, ``sinks.graph_service``, ``sinks.http_transport``,
+``sinks.jsonl``, ``sinks.sharded``, ``sinks.side_outputs``,
+``sinks.zorder``).  An executor worker that unpickles a transport imports
+this package first, so it stays empty: importing ``sinks.http_transport``
+does not pull in ``operators`` and pandas, which cost about half a second
+per fresh Python worker.
 """
-
-from importlib import import_module
-
-_EXPORTS = {
-    "read_graph_vertices": "graph",
-    "upsert_parquet": "graph",
-    "write_graph": "graph",
-    "export_jsonl": "jsonl",
-    "verify_range_sharded": "sharded",
-    "write_range_sharded": "sharded",
-    "write_deprecated_terms": "side_outputs",
-    "write_edge_labels": "side_outputs",
-    "write_zorder_clustered": "zorder",
-    "z_value": "zorder",
-    "z_value_sql": "zorder",
-    "zorder_cell_stats": "zorder",
-}
-
-__all__ = list(_EXPORTS)
-
-
-def __getattr__(name: str):
-    if name not in _EXPORTS:
-        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-    value = getattr(import_module(f".{_EXPORTS[name]}", __name__), name)
-    globals()[name] = value
-    return value

@@ -13,14 +13,17 @@ databases at the start of every run (OntologyGraphBuilder.java:511-517), so
 mode='overwrite' reproduces its semantics; ``upsert_parquet`` covers the
 incremental path.
 
-Every landing goes through ``_land``, so each partition directory holds one
-parquet file (zstd, the engine's codec: ``session.ENGINE_SQL_CONF``) whose
-rows are ordered by the table's keys.  The rows are rebalanced on the
-partition columns, so each directory's rows reach one write task, and AQE
-splits a directory whose rows exceed its advisory partition size into
-several tasks, hence several files.  The graph's collections are small
-(a few KB to a few hundred KB each), so per-file parquet overhead, not row
-data, would dominate a store landed as one file per (task, directory).
+Every graph landing goes through ``_land``, so each partition directory
+holds one parquet file (zstd, the engine's codec:
+``session.ENGINE_SQL_CONF``) whose rows are ordered by the table's keys.
+The rows are rebalanced on the partition columns, so each directory's rows
+reach one write task, and AQE splits a directory whose rows exceed its
+advisory partition size into several tasks, hence several files.  The
+graph's collections are small (a few KB to a few hundred KB each), so
+per-file parquet overhead, not row data, would dominate a store landed as
+one file per (task, directory).  An unpartitioned ``upsert_parquet`` (the
+streaming state tables) keeps the plain write: there the rebalance and
+sort only add an exchange to each micro-batch's rewrite.
 """
 
 from __future__ import annotations
@@ -108,9 +111,9 @@ def upsert_parquet(
     """MERGE-style upsert into a parquet path: full-outer join of incoming vs
     existing with incoming-wins semantics (no deletes), rewritten atomically
     via a staging path.  (With a transactional table format this is a single
-    MERGE INTO; plain parquet needs the rewrite.)  The merged table lands
+    MERGE INTO; plain parquet needs the rewrite.)  A partitioned table lands
     like ``write_graph``: one zstd file per partition directory, rows sorted
-    by ``keys``."""
+    by ``keys``; an unpartitioned one is written as the merge leaves it."""
     existing = read_state_parquet(spark, path)
     if existing is not None:
         merged = join_upsert(incoming, existing.select(*incoming.columns), keys)
@@ -119,5 +122,8 @@ def upsert_parquet(
     # two-phase: a source path cannot be overwritten while being read, so
     # materialize the merge to a staging dir, then rename it into place
     staging = path.rstrip("/") + "__staging"
-    _land(merged, staging, partition_by or [], keys, "overwrite")
+    if partition_by:
+        _land(merged, staging, partition_by, keys, "overwrite")
+    else:
+        merged.write.mode("overwrite").parquet(staging)
     replace_parquet_dir(spark, staging, path.rstrip("/"))

@@ -156,8 +156,9 @@ def test_graph_wire_sink_bench_row_batches(spark, monkeypatch):
 
 def test_http_transport_import_skips_operators_and_pandas():
     """A Python worker that unpickles the transport imports the ``sinks``
-    package first; its lazy exports keep that import free of the operator
-    library and pandas, so a fresh worker does not pay for them."""
+    package first; the package re-exports nothing, so that import stays
+    free of the operator library and pandas and a fresh worker does not pay
+    for them."""
     probe = (
         "import sys\n"
         "import cell_kn_mvp_etl_ontologies_spark.sinks.http_transport\n"

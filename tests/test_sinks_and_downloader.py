@@ -10,13 +10,15 @@ from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms, fixture_triples
 from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
-from cell_kn_mvp_etl_ontologies_spark.sinks import (
-    export_jsonl,
+from cell_kn_mvp_etl_ontologies_spark.sinks.graph import (
     read_graph_vertices,
     upsert_parquet,
+    write_graph,
+)
+from cell_kn_mvp_etl_ontologies_spark.sinks.jsonl import export_jsonl
+from cell_kn_mvp_etl_ontologies_spark.sinks.side_outputs import (
     write_deprecated_terms,
     write_edge_labels,
-    write_graph,
 )
 from cell_kn_mvp_etl_ontologies_spark.sources.files import (
     list_files_matching_pattern,
