@@ -601,10 +601,20 @@ def graph_build_full(spark):
     lazy persist of the same frame the checkpoint measured min-of-3 8.5 vs
     9.7 s at sf0.1 (medians of 6 alternating process pairs, 5 won, local[4]
     on a 4-vCPU host)."""
-    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS, fixture_ro_terms
+    from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
     from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 
     spark.catalog.clearCache()
+    g = build_graph(synthetic_clean_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    return g.edges
+
+
+def synthetic_clean_triples(spark):
+    """The graph rows' build input: ~600k synthetic triples, one per sf
+    lineitem row (two in three a CL → GO subClassOf edge, the rest a
+    label), cleaned the way a raw triple store is before ``build_graph``."""
+    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS
+    from cell_kn_mvp_etl_ontologies_spark.plans import clean_triples
 
     li = parallelize(load_table(spark, SF_DIR, "lineitem"))
     subj = F.concat(
@@ -626,8 +636,7 @@ def graph_build_full(spark):
         F.lit(None).cast("string").alias("object_lang"),
         F.lit(None).cast("string").alias("object_datatype"),
     )
-    g = build_graph(triples, fixture_ro_terms(spark), persist_clean=True)
-    return g.edges
+    return clean_triples(triples, keep_src_file=False)
 
 
 _WIRE_STATE: dict = {}
@@ -643,34 +652,12 @@ def _ensure_wire_state(spark):
         import threading
         from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-        from cell_kn_mvp_etl_ontologies_spark.fixtures import (
-            OBO,
-            RDFS,
-            fixture_ro_terms,
-        )
+        from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
         from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 
-        li = parallelize(load_table(spark, SF_DIR, "lineitem"))
-        subj = F.concat(
-            F.lit(OBO + "CL_"), F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0")
+        g = build_graph(
+            synthetic_clean_triples(spark), fixture_ro_terms(spark), persist_clean=True
         )
-        obj = F.concat(
-            F.lit(OBO + "GO_"), F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0")
-        )
-        is_edge = (F.col("l_linenumber") % 3) != 0
-        triples = li.select(
-            F.lit("synthetic.owl").alias("src_file"),
-            subj.alias("subject"),
-            F.when(is_edge, F.lit(RDFS + "subClassOf"))
-            .otherwise(F.lit(RDFS + "label"))
-            .alias("predicate"),
-            F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
-            F.when(is_edge, obj).alias("object_iri"),
-            F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
-            F.lit(None).cast("string").alias("object_lang"),
-            F.lit(None).cast("string").alias("object_datatype"),
-        )
-        g = build_graph(triples, fixture_ro_terms(spark), persist_clean=True)
         v = g.vertices.persist()
         e = g.edges.persist()
         _WIRE_STATE["n_vertices"] = v.count()

@@ -13,7 +13,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ..fixtures import fixture_ro_terms, fixture_triples
 from ..functions import (
     fn_doc_collection_name,
     fn_doc_key,
@@ -27,10 +26,10 @@ from ..functions import (
     fn_version_newer,
 )
 from ..io import load_table
-from ..plans import build_graph
 from ..search import build_inverted_index, text_en_no_stem_tokens
 from ..sinks.graph import read_graph_vertices, write_graph
 from . import QUERIES, ORACLES, finish_and_clean, register
+from .ontology import fixture_graph
 
 
 def _t(spark, sf_dir, name):
@@ -264,7 +263,7 @@ def ddl_database_graph_q(spark, sf_dir):
     {root}/{database}/{graph}/{collection} parquet layout: write the graph
     twice (drop-recreate = mode overwrite), read back through the catalog
     path helpers."""
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     root = tempfile.mkdtemp(prefix="graph_ddl_")
     # run the DDL twice to prove idempotence (second overwrite == recreate)
     write_graph(g.vertices, g.edges, root, "Cell-KN-Ontologies", "KN-Ontologies-v2.0")

@@ -29,7 +29,7 @@ from ..functions import (
 )
 from ..io import load_table
 from ..operators import join_flatten_restriction, with_vtuple
-from ..plans import build_graph
+from ..plans import GraphBuildResult, build_graph, clean_triples
 from ..plans.two_pass import pipeline_two_pass
 from . import finish_and_clean, register
 
@@ -55,6 +55,13 @@ def _fixture_owl_dir() -> str:
         _OWL_DIR = write_fixture_dir(root)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return _OWL_DIR
+
+
+def fixture_graph(spark) -> GraphBuildResult:
+    """The golden macrophage fixture's graph: the fixture triple store
+    cleaned once, then built with the clean triples checkpointed."""
+    clean = clean_triples(fixture_triples(spark), keep_src_file=False)
+    return build_graph(clean, fixture_ro_terms(spark), persist_clean=True)
 
 
 # --------------------------------------------------------------------------
@@ -104,7 +111,7 @@ _VERTEX_ROWS = """
     oracle=f"SELECT * FROM (VALUES {_VERTEX_ROWS}) AS t(collection, key, attr, value)",
 )
 def graph_build_vertices(spark, sf_dir):
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     return (
         g.vertices.select("collection", "key", F.explode_outer("attrs").alias("attr", "values"))
         .select("collection", "key", "attr", F.explode_outer("values").alias("value"))
@@ -129,7 +136,7 @@ _EDGE_ROWS = """
     """,
 )
 def graph_build_edges(spark, sf_dir):
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     # labels × sources per edge via chained explodes — edge keys are unique
     # after agg_dedup_edges, so this equals the (keys-join of the two
     # exploded views) without recomputing the edges subtree twice
@@ -175,7 +182,7 @@ def sink_graph_upsert_q(spark, sf_dir):
     """Partitioned parquet graph store (replaces per-document ArangoDB HTTP
     upserts, OntologyGraphBuilder.java:254-273): write partitionBy(collection),
     read back, count per partition."""
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     out = tempfile.mkdtemp(prefix="graph_sink_")
     g.vertices.write.mode("overwrite").partitionBy("collection").parquet(out)
     back = spark.read.parquet(out)
@@ -211,7 +218,7 @@ def sink_jsonl_export_q(spark, sf_dir):
 def sink_side_output_deprecated_q(spark, sf_dir):
     """Deprecated-terms side output (OntologyGraphBuilder.java:41,246-261,276):
     text-file write + read-back."""
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     out = tempfile.mkdtemp(prefix="dep_terms_")
     g.deprecated.write.mode("overwrite").text(out)
     back = spark.read.text(out).select(F.col("value").alias("term"))
@@ -232,7 +239,7 @@ def sink_side_output_deprecated_q(spark, sf_dir):
 def sink_side_output_edge_labels_q(spark, sf_dir):
     """Edge-labels side output (OntologyGraphBuilder.java:42,556-562): raw +
     normalized, csv write + read-back."""
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark), persist_clean=True)
+    g = fixture_graph(spark)
     labels = g.edge_labels.withColumn("normalized_label", fn_normalize_edge_label(F.col("raw_label")))
     out = tempfile.mkdtemp(prefix="edge_labels_")
     labels.write.mode("overwrite").option("header", "true").csv(out)

@@ -80,11 +80,11 @@ def pipeline_incremental_graph_q(spark, sf_dir):
         )
         .unionByName(new_class)
     )
-    from ..plans import build_graph
+    from ..plans import build_graph, clean_triples
 
     ro = fixture_ro_terms(spark)
-    v0 = build_graph(t0, ro, persist_clean=True).vertices
-    v1 = build_graph(t1, ro, persist_clean=True).vertices
+    v0 = build_graph(clean_triples(t0, keep_src_file=False), ro, persist_clean=True).vertices
+    v1 = build_graph(clean_triples(t1, keep_src_file=False), ro, persist_clean=True).vertices
     # attrs is MAP<STRING,ARRAY<STRING>> assembled with sorted entries, so
     # the to_json fingerprint inside snapshot_diff is deterministic
     return snapshot_diff(v1, v0, keys=["collection", "key"])

@@ -95,7 +95,7 @@ def extract_triples(
 
     # clean first (whitelist + flatten + dedup), then validity — flattened
     # triples must pass the same validity check (OntologyTripleParser.java:109-115)
-    cleaned = clean_triples(kept.drop("root_ns"), skip_dictionary_file=False)
+    cleaned = clean_triples(kept.drop("root_ns"))
     return (
         cleaned.join(root_ns, "src_file")
         .filter(valid_triple_predicate(F.col("root_ns"), test_object))
@@ -103,11 +103,13 @@ def extract_triples(
     )
 
 
-def ontology_graph_from_owl(spark: SparkSession, path: str, test_object: bool = False) -> GraphBuildResult:
-    """Full EP1 pipeline: OWL directory → property graph.  The ro.owl term
-    dictionary is parsed with the element scan (broadcast downstream)."""
+def ontology_graph_from_owl(spark: SparkSession, path: str) -> GraphBuildResult:
+    """Full EP1 pipeline: OWL directory → property graph.  The triples are
+    cleaned once, by ``extract_triples``; ``build_graph`` consumes them as
+    they are.  The ro.owl term dictionary is parsed with the element scan
+    (broadcast downstream)."""
     persisted: list[DataFrame] = []
-    triples = extract_triples(spark, path, test_object, persisted_out=persisted)
+    triples = extract_triples(spark, path, persisted_out=persisted)
     ro_terms = scan_xml_elements(spark, path, glob="ro.owl")
     # ontology corpora fit executor storage by construction (the reference
     # holds every triple in one JVM heap) — materialize the clean triples too

@@ -1,11 +1,13 @@
 """Triples → property-graph pipeline (reference EP1, SURVEY.md §3).
 
-One lazily-composed DataFrame DAG per pass:
+``clean_triples`` is the one cleaning pass (``extract_triples`` runs it on
+the OWL path).  ``build_graph`` takes clean triples as they are and
+composes the graph DAG:
 
-  triples ──(flatten restrictions: self-join)──┐
-          ──(named-object filter chain)────────┤→ clean triples (dedup)
-                                               │
-        ┌──────────────────────────────────────┘
+  triples ──(flatten restrictions: one aggregate)──┐
+          ──(named-object filter chain)────────────┤→ clean triples (dedup)
+                                                   │
+        ┌── build_graph ───────────────────────────┘
         ├─ nodes → vtuple → valid → distinct ─────────→ vertex keys
         ├─ literal triples → label lookup → pivot ────→ vertex attrs (MAP)
         │    vertex keys ⟕ attrs → deprecated split ──→ vertices + side output
@@ -28,6 +30,7 @@ from pyspark.storagelevel import StorageLevel
 from ..constants import KIND_IRI
 from ..functions import fn_normalize_edge_label, fn_normalize_edge_source, fn_predicate_label
 from ..operators.aggregates import (
+    TRIPLE_KEY,
     agg_dedup_edges,
     agg_distinct_triples,
     agg_distinct_vertices,
@@ -48,7 +51,6 @@ from ..operators.joins import (
 
 @dataclass
 class GraphBuildResult:
-    clean_triples: DataFrame   # deduped triples, src_file dropped (provenance unused downstream)
     vertices: DataFrame        # (collection, key, attrs) — deprecated/obsolete removed
     deprecated: DataFrame      # (term,) side-output rows "id_number"
     edges: DataFrame           # (from_collection, to_collection, from_key, to_key, labels, sources)
@@ -75,13 +77,14 @@ def release(df: DataFrame) -> None:
         leaf.rdd().unpersist(False)
 
 
-def clean_triples(
-    triples: DataFrame, skip_dictionary_file: bool = True, keep_src_file: bool = True
-) -> DataFrame:
-    """Named-object triples + flattened restrictions, predicate-whitelisted,
-    globally deduplicated.  The upstream per-file root-namespace and class
-    filters (OntologyTripleParser.java:74-77) are applied at extraction time
-    by the sources; this operates on the long triples store.
+def clean_triples(triples: DataFrame, keep_src_file: bool = True) -> DataFrame:
+    """Predicate-whitelisted named-object triples + flattened restrictions
+    (whatever their ``owl:onProperty``: OntologyTripleParser.java:80-115
+    flattens in the isAnon() branch, beside the namespace check), globally
+    deduplicated, with the dictionary-only ro.owl skipped.  The upstream
+    per-file root-namespace and class filters (OntologyTripleParser.java:74-77)
+    are applied at extraction time by the sources; this operates on the long
+    triples store.
 
     ``keep_src_file=False`` drops the provenance column before the dedup.
     The dedup key excludes src_file either way; carrying it as a passthrough
@@ -89,10 +92,9 @@ def clean_triples(
     the whole aggregate to SortAggregate (sorting 5 long-URI keys per
     partition).  Without it the dedup is a pure distinct — HashAggregate
     with an empty buffer — measured ~25% faster on the dedup stage at sf0.1.
-    The graph build never reads src_file downstream, so it opts out; callers
+    The graph build never reads src_file, so its callers opt out; callers
     that re-join per-file state (plans/extract.py) keep the default."""
-    if skip_dictionary_file:
-        triples = filter_skip_file(triples)
+    triples = filter_skip_file(triples)
     named = triples.filter(F.col("object_kind") != "bnode").filter(
         # bnode-subject statements (owl:onProperty / owl:someValuesFrom rows)
         # describe restrictions, not classes; they are consumed by the
@@ -265,7 +267,14 @@ def build_edges(
 def build_graph(
     triples: DataFrame, ro_terms: DataFrame, persist_clean: bool = False
 ) -> GraphBuildResult:
-    """Compose the full triples → graph DAG.
+    """Compose the full clean triples → graph DAG.
+
+    ``triples`` must be clean: the output of ``extract_triples`` or of
+    ``clean_triples`` (restrictions flattened, predicates whitelisted,
+    globally deduplicated).  The build cleans nothing itself; it only
+    projects the triple key, so ``src_file`` never reaches the checkpoint.
+    A raw triple store goes through ``clean_triples(t, keep_src_file=False)``
+    first, which keeps the global dedup a pure distinct (see its docstring).
 
     Two dimension-sized intermediates are persisted (MEMORY_AND_DISK), each
     consumed by 2-3 downstream joins that would otherwise recompute their
@@ -286,7 +295,7 @@ def build_graph(
     opts in for ontology-scale corpora (the reference holds ALL triples in a
     single JVM heap — cluster executor storage is strictly larger): the clean
     triples are materialized once, by an eager ``localCheckpoint`` run here,
-    which saves the flatten-join + dedup recompute in each of the ~4
+    which saves the cleaning pass's recompute in each of the ~4
     consumers AND cuts their lineage, so the URI-dim, vertex, edge and sink
     plans all start from one materialized leaf.  A lazy persist does not cut
     it: every reference to a cached frame carries that frame's whole plan,
@@ -302,9 +311,7 @@ def build_graph(
     checkpoint too (see ``release``).
     """
     persisted: list[DataFrame] = []
-    # src_file is provenance the graph build never consumes — dropping it
-    # keeps the global dedup a pure HashAggregate distinct (see clean_triples)
-    clean = clean_triples(triples, keep_src_file=False)
+    clean = triples.select(*TRIPLE_KEY)
     if persist_clean:
         clean = clean.localCheckpoint(eager=True)
         persisted.append(clean)
@@ -313,4 +320,4 @@ def build_graph(
     valid_keys = valid_keys.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(valid_keys)
     edges, edge_labels = build_edges(clean, ro_terms, valid_keys, uri_dim)
-    return GraphBuildResult(clean, vertices, deprecated, edges, edge_labels, persisted)
+    return GraphBuildResult(vertices, deprecated, edges, edge_labels, persisted)

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.filters import filter_valid_triple
-from .graph_build import GraphBuildResult, build_graph
+from .graph_build import GraphBuildResult, build_graph, clean_triples
 
 
 def pipeline_two_pass(
@@ -24,9 +24,9 @@ def pipeline_two_pass(
     # ontology-scale inputs: checkpoint each pass's clean triples, so each
     # pass's graph plans start from a materialized leaf (see the build_graph
     # docstring for when this is and isn't appropriate)
-    pass1 = build_graph(triples, ro_terms, persist_clean=True)
+    pass1 = build_graph(clean_triples(triples, keep_src_file=False), ro_terms, persist_clean=True)
     strict = filter_valid_triple(
         triples.filter(F.col("src_file") == pass2_file), pass2_root_ns, test_object=True
     )
-    pass2 = build_graph(strict, ro_terms, persist_clean=True)
+    pass2 = build_graph(clean_triples(strict, keep_src_file=False), ro_terms, persist_clean=True)
     return pass1, pass2

@@ -16,7 +16,8 @@ from cell_kn_mvp_etl_ontologies_spark.plans import build_graph, clean_triples
 
 @pytest.fixture(scope="module")
 def graph(spark):
-    return build_graph(fixture_triples(spark), fixture_ro_terms(spark))
+    clean = clean_triples(fixture_triples(spark), keep_src_file=False)
+    return build_graph(clean, fixture_ro_terms(spark))
 
 
 def test_flatten_restriction(spark):

@@ -101,9 +101,10 @@ def test_uri_parse_not_inlined_into_filters(spark):
     both branches (>100 regexp_extract in one stage), overflowing the 64 KB
     codegen limit and forcing every task through a failing janino compile."""
     from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms, fixture_triples
-    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
+    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph, clean_triples
 
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark))
+    clean = clean_triples(fixture_triples(spark), keep_src_file=False)
+    g = build_graph(clean, fixture_ro_terms(spark))
     for df in (g.vertices, g.edges):
         plan = optimized_text(df)
         # the dimension is consumed from the cache, not recomputed per join
@@ -119,9 +120,10 @@ def test_no_codegen_overflow_in_graph_build(spark):
     """The vtuple/URI expression chains must stay under the JVM codegen
     limit: WholeStageCodegen spans present, no fallback marker."""
     from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms, fixture_triples
-    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
+    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph, clean_triples
 
-    g = build_graph(fixture_triples(spark), fixture_ro_terms(spark))
+    clean = clean_triples(fixture_triples(spark), keep_src_file=False)
+    g = build_graph(clean, fixture_ro_terms(spark))
     g.vertices.count()  # finalize the AQE plan so codegen markers appear
     txt = plan_text(g.vertices)
     # '*(n)' prefixes mark whole-stage-codegen'd operators in the final plan

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms, fixture_triples
-from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
+from cell_kn_mvp_etl_ontologies_spark.plans import build_graph, clean_triples
 from cell_kn_mvp_etl_ontologies_spark.sinks.graph import (
     read_graph_vertices,
     upsert_parquet,
@@ -34,7 +34,8 @@ from cell_kn_mvp_etl_ontologies_spark.sources.owl_fixtures import (
 
 @pytest.fixture(scope="module")
 def graph(spark):
-    return build_graph(fixture_triples(spark), fixture_ro_terms(spark))
+    clean = clean_triples(fixture_triples(spark), keep_src_file=False)
+    return build_graph(clean, fixture_ro_terms(spark))
 
 
 def test_graph_sink_roundtrip(spark, graph, tmp_path):

@@ -3,6 +3,8 @@ OntologyTripleParserTest, and the end-to-end OntologyGraphBuilderTest."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -159,6 +161,106 @@ def test_owl_graph_unpersist_releases_storage(spark, owl_dir):
     assert cached_rdds() - before
     g.unpersist()
     assert cached_rdds() - before == set()
+
+
+# A restriction whose onProperty lies outside PREDICATE_NAMESPACES: the
+# flattened (CL_0000235, rel#p, CL_0000576) triple is kept on the OWL path
+# as on the store path (OntologyTripleParser.java:80-115 flattens in the
+# isAnon() branch beside the namespace check, not behind it).
+FOREIGN_PROPERTY_OWL = """<?xml version="1.0"?>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#"
+         xmlns:owl="http://www.w3.org/2002/07/owl#"
+         xmlns:obo="http://purl.obolibrary.org/obo/">
+  <owl:Ontology rdf:about="http://purl.obolibrary.org/obo/cl.owl">
+    <obo:IAO_0000700 rdf:resource="http://purl.obolibrary.org/obo/CL_0000000"/>
+  </owl:Ontology>
+  <owl:Class rdf:about="http://purl.obolibrary.org/obo/CL_0000235">
+    <rdfs:label>macrophage</rdfs:label>
+    <rdfs:subClassOf rdf:resource="http://purl.obolibrary.org/obo/CL_0000113"/>
+    <rdfs:subClassOf>
+      <owl:Restriction>
+        <owl:onProperty rdf:resource="http://example.org/rel#p"/>
+        <owl:someValuesFrom rdf:resource="http://purl.obolibrary.org/obo/CL_0000576"/>
+      </owl:Restriction>
+    </rdfs:subClassOf>
+  </owl:Class>
+  <owl:Class rdf:about="http://purl.obolibrary.org/obo/CL_0000576">
+    <rdfs:label>monocyte</rdfs:label>
+  </owl:Class>
+</rdf:RDF>
+"""
+
+
+def test_foreign_restriction_property_same_edges_on_both_paths(spark, tmp_path):
+    """The OWL path and the store path (raw scan → clean_triples →
+    build_graph) return the same edges, the foreign-property restriction's
+    edge included."""
+    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph, clean_triples
+    from cell_kn_mvp_etl_ontologies_spark.sources.owl_fixtures import RO_OWL
+
+    (tmp_path / "cl.owl").write_text(FOREIGN_PROPERTY_OWL)
+    (tmp_path / "ro.owl").write_text(RO_OWL)
+    owl_dir = str(tmp_path)
+
+    def edge_set(g):
+        cols = ["from_collection", "from_key", "to_collection", "to_key", "labels", "sources"]
+        out = {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+               for r in g.edges.select(*cols).collect()}
+        g.unpersist()
+        return out
+
+    owl_edges = edge_set(ontology_graph_from_owl(spark, owl_dir))
+    raw = scan_rdf_triples(spark, owl_dir, glob="cl.owl")
+    ro = scan_xml_elements(spark, owl_dir, glob="ro.owl")
+    store_edges = edge_set(build_graph(clean_triples(raw, keep_src_file=False), ro))
+    assert owl_edges == store_edges
+    assert ("CL", "0000235", "CL", "0000576", ("P",), ("CL",)) in owl_edges
+
+
+def _initial_plan_nodes(plan: str) -> list[str]:
+    """Detail blocks of the nodes in a formatted adaptive plan's
+    ``Initial Plan`` section: the plan the job was compiled to, before
+    runtime re-optimization drops branches whose stages came back empty."""
+    tree, _, details = plan.partition("\n\n")
+    initial = tree.split("== Initial Plan ==", 1)[1]
+    ids = set(re.findall(r" \((\d+)\)", initial))
+    blocks = re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", details, re.M | re.S)
+    return [text for i, text in blocks if i in ids]
+
+
+def test_owl_graph_cleans_triples_once(spark, owl_dir):
+    """The clean-triples checkpoint job of ontology_graph_from_owl runs one
+    restriction-flatten aggregate and one global triple-key dedup: the
+    build consumes extract_triples' clean triples without cleaning again."""
+    from cell_kn_mvp_etl_ontologies_spark.operators import TRIPLE_KEY
+
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        jsc.listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(executions())
+    g = ontology_graph_from_owl(spark, owl_dir)
+    after = executions()
+    g.unpersist()
+    # the build's eager checkpoint is the last job the call runs
+    job = after[max(set(after) - before)]
+    assert "localCheckpoint" in job.description()
+    nodes = _initial_plan_nodes(job.physicalPlanDescription())
+
+    flattens = [b for b in nodes if "[collect_list(parent#" in b]
+    dedup_shuffles = [
+        b for b in nodes
+        if b.startswith("Exchange\n")
+        and (m := re.search(r"hashpartitioning\((.*), \d+\)", b))
+        and sorted(re.sub(r"#\d+", "", c) for c in m.group(1).split(", ")) == sorted(TRIPLE_KEY)
+    ]
+    assert len(flattens) == 1
+    assert len(dedup_shuffles) == 1
 
 
 def test_strict_pass_object_filter(spark, owl_dir):

@@ -24,7 +24,6 @@ from pyspark.sql import SparkSession
 
 from cell_kn_mvp_etl_ontologies_spark.session import ENGINE_SQL_CONF
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
@@ -34,34 +33,8 @@ def build(spark, persist_clean: bool):
     from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
     from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 
-    # reuse the bench's synthetic triple generator for apples-to-apples
-    g_fn = bench.graph_build_full
-    # re-derive triples exactly as bench does, but parameterize persist_clean
-    from pyspark.sql import functions as F
-
-    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS
-    from cell_kn_mvp_etl_ontologies_spark.io import load_table, parallelize
-
-    li = parallelize(load_table(spark, SF_DIR, "lineitem"))
-    subj = F.concat(
-        F.lit(OBO + "CL_"), F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0")
-    )
-    obj = F.concat(
-        F.lit(OBO + "GO_"), F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0")
-    )
-    is_edge = (F.col("l_linenumber") % 3) != 0
-    triples = li.select(
-        F.lit("synthetic.owl").alias("src_file"),
-        subj.alias("subject"),
-        F.when(is_edge, F.lit(RDFS + "subClassOf"))
-        .otherwise(F.lit(RDFS + "label"))
-        .alias("predicate"),
-        F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
-        F.when(is_edge, obj).alias("object_iri"),
-        F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
-        F.lit(None).cast("string").alias("object_lang"),
-        F.lit(None).cast("string").alias("object_datatype"),
-    )
+    # the bench row's own triples, so both modes time the bench's build
+    triples = bench.synthetic_clean_triples(spark)
     return build_graph(triples, fixture_ro_terms(spark), persist_clean=persist_clean)
 
 
